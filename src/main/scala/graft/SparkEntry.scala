@@ -404,7 +404,7 @@ object SparkEntry {
       // iterative tiny-graph rounds: size the per-round shuffle to the
       // component count, not the batch default (same sizing note as the
       // streaming state partitions)
-      withStatePartitions(s, 8) { ConnectedComponents.run(s, edges).localCheckpoint() }
+      withStatePartitions(s, 8) { ConnectedComponents.run(s, edges) }
     }),
 
     // full-row distinct plans as a group-only hash aggregate: map-side
@@ -432,9 +432,7 @@ object SparkEntry {
           col("turn_idx").cast("string")))
       val m = EntityLink.mentions(tr, dict, "subj_key", "text")
       val edges = EntityLink.starEdges(m, "subj_key")
-      val comp = withStatePartitions(s, 8) {
-        ConnectedComponents.run(s, edges).localCheckpoint()
-      }
+      val comp = withStatePartitions(s, 8) { ConnectedComponents.run(s, edges) }
       EntityLink.canonicalizeSubjects(transcriptTriples(s, d, minimal = true), comp)
     }),
 

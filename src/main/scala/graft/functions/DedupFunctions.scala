@@ -35,18 +35,6 @@ object DedupFunctions {
     graft.expr.CsvwFunctions.minhashSig(
       array_distinct(TextFunctions.shingles(text, shingleSize)), numHashes)
 
-  /** LSH banding: split the signature into `bands` bands of `rowsPerBand`,
-    * hash each band → (doc, band_idx, band_hash). Docs sharing any band
-    * bucket are candidates.
-    */
-  def lshBands(df: DataFrame, idCol: String, textCol: String,
-               bands: Int, rowsPerBand: Int, shingleSize: Int = 3): DataFrame = {
-    val sig = minhashSignature(col(textCol), bands * rowsPerBand, shingleSize)
-    df.select(col(idCol), posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(concat_ws("_", slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))), b)))
-      .as(Seq("band_idx", "band_hash")))
-  }
-
   /** MinHash-LSH near-duplicate candidate pairs with estimated Jaccard from
     * full signatures. Join is per-bucket (band_idx, band_hash) — skew-safe
     * under AQE; pairs deduped across bands.

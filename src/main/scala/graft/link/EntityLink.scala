@@ -1,6 +1,6 @@
 package graft.link
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Entity linking over emitted text (north_star: "batched mention-detection +
@@ -97,17 +97,32 @@ object EntityLink {
   *
   * Algorithm: min-label propagation *plus pointer jumping* — each round a
   * node takes the minimum of (its label, its neighbors' labels, its label's
-  * label). The pointer-jump term halves label-chain depth every round, so a
-  * path component of length L converges in O(log L) rounds instead of the
-  * O(L) of plain propagation (round 1 was plain propagation with a silent
-  * 20-round cap — a 21-hop chain got wrong labels with no error). Mega
-  * near-dup chains at 100 TB make the log bound the difference between 30
-  * rounds and millions.
+  * label). The pointer-jump term halves label-chain depth every round when
+  * ids increase along a chain, so such a path of length L converges in
+  * O(log L) rounds instead of the O(L) of plain propagation (round 1 was
+  * plain propagation with a silent 20-round cap — a 21-hop chain got wrong
+  * labels with no error). Ids in random order along a long path leave local
+  * minima that the jump cannot skip: a 300-node path with shuffled ids
+  * takes 50–180 rounds. Non-convergence within `maxIterations` throws
+  * rather than returning silently wrong labels.
   *
-  * Scale notes: each iteration is two hash joins + one aggregation, all on
-  * the node-id key; `localCheckpoint` truncates lineage; hot components are
-  * skewed keys covered by AQE skew handling. Non-convergence within
-  * `maxIterations` throws rather than returning silently wrong labels.
+  * Scale notes: each round is ONE join and ONE aggregate on the node-id
+  * key. The neighbor leg and the pointer-jump leg both feed the same
+  * decomposable `min`, so they share one join, one exchange and one
+  * aggregate. The round's only action is its own eager `localCheckpoint`,
+  * which truncates lineage and, through `Dataset.observe`, counts the nodes
+  * whose label changed — no separate convergence probe. Sharing one join
+  * matters because of checkpoint size estimates: a checkpoint inherits its
+  * source plan's estimate and a join's estimate is the product of its
+  * inputs', so the estimate squares every round (GiBs for ~15 k labels
+  * after five rounds). The planner then shuffles both sides of every join
+  * over checkpoints, and only AQE, from the shuffles' real sizes, demotes
+  * the join to a broadcast — each join costs its own shuffles. Past ~20
+  * rounds the estimate runs to numbers of thousands of digits whose
+  * arithmetic alone stalls planning, so every checkpoint here drops its
+  * estimate: the planner sees an unknown size (a shuffle join, as before)
+  * and AQE still picks the strategy from real sizes. Hot components are
+  * skewed keys covered by AQE skew handling.
   */
 object ConnectedComponents {
 
@@ -115,10 +130,13 @@ object ConnectedComponents {
     * @return (id, component) where component = min node id in the component
     */
   def run(spark: SparkSession, edges: DataFrame, maxIterations: Int = 50): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
+    val sym = checkpoint(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .dropDuplicates()
-      .localCheckpoint()
+      .dropDuplicates())
+    // neighbor requests: v asks for label(src) of each neighbor src. The
+    // typed-null `old` keeps the union two-legged; max() ignores nulls.
+    val neighbors = sym.select(col("src").as("key"), col("dst").as("id"),
+      lit(null).cast("string").as("old"))
 
     // Initial labels fold the FIRST propagation round into the node-set
     // aggregate: label₀(v) = min(v, min neighbor) — one hash aggregate over
@@ -130,42 +148,34 @@ object ConnectedComponents {
     // The invariant label(v) ≤ v (labels only ever decrease toward the
     // component minimum, and every label is a member id) holds from the
     // start, exactly as with identity init.
-    var labels = sym.groupBy("src").agg(min("dst").as("mn"))
-      .select(col("src").as("id"), least(col("src"), col("mn")).as("component"))
-      .localCheckpoint()
+    var labels = checkpoint(sym.groupBy("src").agg(min("dst").as("mn"))
+      .select(col("src").as("id"), least(col("src"), col("mn")).as("component")))
 
     var iter = 0
     var converged = false
     while (iter < maxIterations && !converged) {
-      // neighbor minimum: one shuffle on dst. The typed-null `old` keeps
-      // the union two-legged (the jump leg below carries the previous
-      // label); max() ignores nulls, and every node gets exactly one
-      // non-null `old` from its jump row.
-      val msgs = sym.join(labels, sym("src") === labels("id"))
-        .select(col("dst").as("id"), col("component"),
-          when(lit(false), col("component")).as("old"))
-      // pointer jump: label-of-label (component ids are node ids, so every
-      // component value has a labels row — the join is exactly one match
-      // per node). comp2 = label(label(v)) ≤ label(v), so the old label
-      // never needs to enter the min itself; carrying it as `old` lets the
-      // convergence probe filter the checkpointed result instead of paying
-      // a join + shuffle of its own every round (and drops the third
-      // union leg the round-8 form shuffled).
-      val jumpSelf = labels.toDF("id", "comp")
-        .join(labels.toDF("cid", "comp2"), col("comp") === col("cid"))
-        .select(col("id"), col("comp2").as("component"), col("comp").as("old"))
-      val next = msgs
-        .union(jumpSelf)
-        .groupBy("id").agg(min("component").as("component"),
-          max(col("old")).as("old"))
-        .localCheckpoint()
-      val changed = next.filter(col("component") =!= col("old")).limit(1).count()
+      // pointer-jump request: v asks for label(label(v)), carrying label(v)
+      // as `old`. Component ids are node ids, so every key has exactly one
+      // labels row, and every node gets exactly one non-null `old`.
+      // label(label(v)) ≤ label(v), so the old label never needs to enter
+      // the min itself.
+      val jumps = labels.select(col("component").as("key"), col("id"),
+        col("component").as("old"))
+      val changed = new Observation()
+      val next = checkpoint(neighbors.union(jumps)
+        .join(labels.toDF("key", "component"), "key")
+        .groupBy("id").agg(min("component").as("component"), max(col("old")).as("old"))
+        .observe(changed, count(when(col("component") =!= col("old"), lit(1))).as("n")))
       labels = next.select(col("id"), col("component"))
-      converged = changed == 0
+      converged = changed.get("n") == 0L
       iter += 1
     }
     require(converged,
       s"connected components did not converge within $maxIterations iterations")
     labels
   }
+
+  /** Eager `localCheckpoint` with no size estimate (see the scale notes). */
+  private def checkpoint(df: DataFrame): DataFrame =
+    GraftBridge.withoutSizeEstimate(df.localCheckpoint())
 }

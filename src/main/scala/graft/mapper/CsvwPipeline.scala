@@ -49,13 +49,6 @@ object CsvwPipeline {
       fkViolations: Map[String, DataFrame],
       metadata: CsvwValidate.Report = CsvwValidate.Report.empty) {
 
-    /** Per-partition, per-column cell-error metrics rows (A5): lineage-style
-      * counters a monitoring sink can consume every stage.
-      */
-    def cellErrorStats: DataFrame =
-      cellErrors.groupBy(spark_partition_id().as("partition_id"), col("column"))
-        .agg(count(lit(1)).as("errors"))
-
     /** Per-severity counts — the reference's `log_statistics[:error]` gate
       * (`reader.rb:440-443`). Triggers a count job on the error side-output.
       */

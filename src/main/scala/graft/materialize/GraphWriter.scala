@@ -1,8 +1,14 @@
 package graft.materialize
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Graph materialization + checkpoint/resume (north_rule: "graph
   * materialization as sorted, deduplicated (subj, pred, obj) tables …
@@ -10,9 +16,11 @@ import java.nio.file.{Files, Paths}
   *
   * The container ships no Iceberg runtime, so the snapshot layer is
   * parquet-backed with an explicit stage manifest (documented divergence,
-  * SURVEY.md §7.5): each stage directory carries `_MANIFEST.json` recording
-  * row count + timestamp; `lineage/` holds per-partition row counts. On a
-  * real cluster the same API maps 1:1 onto Iceberg snapshot ids.
+  * SURVEY.md §7.5): each stage directory carries `_MANIFEST_<name>.json`
+  * recording the row count (and run metrics); `<path>.lineage` holds one row
+  * per written part file — its row count and `subj` range — read from that
+  * file's parquet footer, not from its data. On a real cluster the same API
+  * maps 1:1 onto Iceberg snapshot ids.
   */
 object GraphWriter {
 
@@ -39,15 +47,25 @@ object GraphWriter {
     writeLineage(spark, path, metrics)
   }
 
+  /** One lineage row per committed part file, read from that file's parquet
+    * footer alone: `rows` is the sum of its row-group row counts, `min_subj`
+    * / `max_subj` come from the `subj` column statistics, `partition_id` is
+    * the part number. The manifest's `rows` is the sum over the files, so
+    * the written data is never re-read. A footer without `subj` min/max (no
+    * such column, or a value past parquet's statistics size limit) gives
+    * null bounds, never a guessed one.
+    */
   private def writeLineage(spark: SparkSession, path: String,
                            metrics: Map[String, Long] = Map.empty): Unit = {
-    val written = spark.read.parquet(path)
-    val lineage = written
-      .groupBy(spark_partition_id().as("partition_id"))
-      .agg(count(lit(1)).as("rows"),
-           min(col("subj")).as("min_subj"), max(col("subj")).as("max_subj"))
-    lineage.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path.lineage")
-    val total = written.count()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new HPath(path)
+    val parts = dir.getFileSystem(conf).listStatus(dir)
+      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+      .sortBy(_.getPath.getName).toSeq
+    val lineage = parts.map(footerLineage(_, conf))
+    spark.createDataFrame(lineage).coalesce(1)
+      .write.mode(SaveMode.Overwrite).parquet(s"$path.lineage")
+    val total = lineage.map(_.rows).sum
     // run metrics (e.g. ValidateGate severity counts) ride in the manifest so
     // a resume can see whether the producing run was clean
     val metricsJson =
@@ -56,6 +74,29 @@ object GraphWriter {
         .map { case (k, v) => s""""$k":$v""" }.mkString(""","metrics":{""", ",", "}")
     val manifest = s"""{"path":"$path","rows":$total,"stage_complete":true$metricsJson}"""
     Files.writeString(Paths.get(s"${dirOf(path)}/_MANIFEST_${nameOf(path)}.json"), manifest)
+  }
+
+  final case class PartLineage(partition_id: Int, rows: Long, min_subj: String, max_subj: String)
+
+  private val PartNumber = """part-(\d+).*""".r
+
+  private def footerLineage(file: FileStatus, conf: Configuration): PartLineage = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val blocks = try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
+    // a row group's bounds are known when its statistics carry min/max or
+    // it holds no non-null subj; the writer leaves both out past the size limit
+    val subj = blocks.map(b =>
+      b -> b.getColumns.asScala.find(_.getPath.toDotString == "subj").map(_.getStatistics))
+    val known = subj.forall { case (b, st) =>
+      st.exists(s => s.hasNonNullValue || (s.isNumNullsSet && s.getNumNulls == b.getRowCount))
+    }
+    val valued = subj.flatMap(_._2).filter(_.hasNonNullValue)
+    def utf8(v: Any) = v.asInstanceOf[Binary].toStringUsingUTF8
+    val (minSubj, maxSubj) =
+      if (!known || valued.isEmpty) (null, null)
+      else (valued.map(s => utf8(s.genericGetMin)).min, valued.map(s => utf8(s.genericGetMax)).max)
+    val PartNumber(part) = file.getPath.getName
+    PartLineage(part.toInt, blocks.map(_.getRowCount).sum, minSubj, maxSubj)
   }
 
   private def dirOf(p: String) = Option(Paths.get(p).getParent).map(_.toString).getOrElse(".")

@@ -90,30 +90,6 @@ object TranscriptStream {
       .agg(count(lit(1)).as("mentions"))
   }
 
-  /** Incremental exact dedup across micro-batches: keyed
-    * `flatMapGroupsWithState` emits each distinct (subj, pred, obj) exactly
-    * once over the stream's lifetime — the streaming counterpart of the
-    * batch sink dedup, for continuous graph materialization.
-    *
-    * Scale note: state is one boolean per distinct triple FOREVER — at
-    * unbounded-stream scale the state store becomes the dataset. Use
-    * [[dedupedTriplesTtl]] unless lifetime-exact dedup is a hard
-    * requirement.
-    */
-  def dedupedTriples(triples: DataFrame): Dataset[(String, String, String)] = {
-    import triples.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    triples.select("subj", "pred", "obj").as[(String, String, String)]
-      .groupByKey(identity)
-      .flatMapGroupsWithState[Boolean, (String, String, String)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: (String, String, String), _: Iterator[(String, String, String)],
-         state: GroupState[Boolean]) =>
-          if (state.exists) Iterator.empty
-          else { state.update(true); Iterator.single(key) }
-      }
-  }
-
   /** Native bounded-state streaming dedup via Spark's
     * `dropDuplicatesWithinWatermark` — the built-in counterpart of
     * [[dedupedTriplesTtl]], preferred when the horizon you need IS the
@@ -134,10 +110,10 @@ object TranscriptStream {
       .dropDuplicatesWithinWatermark("subj", "pred", "obj")
       .select(col("subj"), col("pred"), col("obj"))
 
-  /** Bounded-state streaming dedup: like [[dedupedTriples]] but each
-    * triple's state carries an event-time TTL (`EventTimeTimeout`), so the
-    * state store holds only triples seen within `ttl` of the watermark —
-    * the 100 TB-safe variant.
+  /** Bounded-state streaming dedup: each distinct (subj, pred, obj) is
+    * emitted once, and each triple's state carries an event-time TTL
+    * (`EventTimeTimeout`), so the state store holds only triples seen within
+    * `ttl` of the watermark — the 100 TB-safe variant.
     *
     * Input must carry an event-time column `eventTimeCol` (use
     * `triples(..., carryEventTime = true)`); `watermarkDelay` is the

@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.functions.{AnnFunctions, DedupFunctions}
 import graft.link.ConnectedComponents
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -199,6 +200,102 @@ class DedupScaleSpec extends AnyFunSuite {
       ConnectedComponents.run(spark, edges, maxIterations = 2)
     }
     assert(ex.getMessage.contains("did not converge"))
+  }
+
+  /** Component minimum of every node, by a plain-Scala union-find. */
+  private def unionFindMin(edges: Seq[(String, String)]): Map[String, String] = {
+    val parent = scala.collection.mutable.Map.empty[String, String]
+    def find(v: String): String = {
+      val p = parent.getOrElseUpdate(v, v)
+      if (p == v) v else { val r = find(p); parent(v) = r; r }
+    }
+    // the root of every set is its minimum member
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toSeq.map(v => v -> find(v)).toMap
+  }
+
+  /** Disjoint components of the shapes CC meets: long paths, stars,
+    * cliques, isolated pairs and kg_full-like chains of entity stars joined
+    * by bridge nodes. Node names are random, so a component's minimum sits
+    * anywhere in it; edge direction is random and some edges repeat.
+    */
+  private def randomGraph(seed: Long): Seq[(String, String)] = {
+    val rng = new scala.util.Random(seed)
+    val used = scala.collection.mutable.Set.empty[String]
+    def node(): String = {
+      var n = f"v${rng.nextInt(10000000)}%07d"
+      while (used(n)) n = f"v${rng.nextInt(10000000)}%07d"
+      used += n
+      n
+    }
+    def nodes(k: Int) = Seq.fill(k)(node())
+    def star(hub: String, leaves: Seq[String]) = leaves.map(hub -> _)
+    val paths = Seq.fill(3)(nodes(2 + rng.nextInt(299))).flatMap(p => p.zip(p.tail))
+    val stars = Seq.fill(4)(star(node(), nodes(1 + rng.nextInt(40)))).flatten
+    val cliques = Seq.fill(3)(nodes(2 + rng.nextInt(7))).flatMap(c => c.combinations(2).map(p => p(0) -> p(1)))
+    val pairs = Seq.fill(20)(node() -> node())
+    val bridged = Seq.fill(5) {
+      val hubs = nodes(2 + rng.nextInt(4))
+      val leaves = hubs.map(h => star(h, nodes(1 + rng.nextInt(12))))
+      val bridges = hubs.zip(hubs.tail).flatMap { case (a, b) => val x = node(); Seq(a -> x, b -> x) }
+      leaves.flatten ++ bridges
+    }.flatten
+    val all = paths ++ stars ++ cliques ++ pairs ++ bridged
+    rng.shuffle(all.map { case (a, b) => if (rng.nextBoolean()) (a, b) else (b, a) } ++ all.take(25))
+  }
+
+  test("connected components: labels equal each component's minimum on seeded random graphs") {
+    Seq(11L, 12L, 13L).foreach { seed =>
+      val edges = randomGraph(seed)
+      // shuffled ids along a path defeat pointer jumping (see the
+      // ConnectedComponents scaladoc), so the budget is the plain
+      // propagation bound: one round per hop of the longest path, plus one
+      val got = ConnectedComponents.run(spark, edges.toDF("src", "dst"), maxIterations = 300)
+        .as[(String, String)].collect()
+      val want = unionFindMin(edges)
+      assert(got.length == want.size, s"seed $seed: one label per node")
+      assert(got.toMap == want, s"seed $seed")
+    }
+  }
+
+  test("connected components of an empty edge set is empty") {
+    // convergence is read from the checkpoint's observed metrics, which must
+    // arrive even when no task sees a row
+    assert(ConnectedComponents.run(spark, Seq.empty[(String, String)].toDF("src", "dst")).isEmpty)
+  }
+
+  test("connected components: job count on the 120-node path is pinned") {
+    // 44 = 2 checkpoints before the loop (a shuffle stage + the checkpoint
+    // each) + 8 rounds × 5 (the join's two shuffle stages, the broadcast AQE
+    // turns the small side into, the aggregate's shuffle stage, the
+    // checkpoint). A per-round probe action or a second join would move it.
+    val edges = (0 until 119).map(i => (f"n$i%04d", f"n${i + 1}%04d")).toDF("src", "dst")
+    val sc = spark.sparkContext
+    val (group, fence) = ("cc-job-pin", "cc-job-pin-fence")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    // listener events arrive in order: once the fence job's start is seen,
+    // every job the run started has been counted
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`fence`) => fenced.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "connected components")
+      try ConnectedComponents.run(spark, edges) finally sc.clearJobGroup()
+      sc.setJobGroup(fence, "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 44, s"${jobs.get} jobs")
   }
 
   test("fused SimHash64Expr is bit-identical to the HOF formulation") {

@@ -113,6 +113,62 @@ class GraphWriterSpec extends AnyFunSuite {
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/_MANIFEST_graph.json")))
   }
 
+  /** 600 triples over 200 subjects, 7 copies of one duplicate. */
+  private def manyTriples = ((0 until 600).map(i =>
+      graft.mapper.Triple(f"urn:s:${(i * 37) % 200}%04d", s"p${i % 3}", s"o$i", obj_iri = false, null, null)) ++
+    Seq.fill(7)(graft.mapper.Triple("urn:s:dup", "p", "o", obj_iri = true, null, null))).toDF()
+
+  private def manifestRows(dir: String, name: String): Long = {
+    val m = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/_MANIFEST_$name.json"))
+    """"rows":(\d+)""".r.findFirstMatchIn(m).get.group(1).toLong
+  }
+
+  /** Per part file of `path`: (part number, rows, min subj, max subj), by
+    * reading the data itself. */
+  private def fileAggregates(path: String) =
+    spark.read.parquet(path)
+      .groupBy(regexp_extract(input_file_name(), "part-(\\d+)", 1).cast("int").as("partition_id"))
+      .agg(count(lit(1)).as("rows"), min("subj").as("min_subj"), max("subj").as("max_subj"))
+      .as[(Int, Long, String, String)].collect().sortBy(_._1).toSeq
+
+  private def lineage(path: String) =
+    spark.read.parquet(s"$path.lineage").select("partition_id", "rows", "min_subj", "max_subj")
+      .as[(Int, Long, String, String)].collect().sortBy(_._1).toSeq
+
+  test("lineage rows and subj bounds match each part file; manifest rows == their sum") {
+    val dir = java.nio.file.Files.createTempDirectory("gw3").toString
+    val path = s"$dir/graph"
+    GraphWriter.writeTriples(manyTriples, path, partitions = 3)
+    val files = fileAggregates(path)
+    assert(files.length == 3)
+    assert(lineage(path) == files)
+    val back = spark.read.parquet(path).count()
+    assert(back == 601)
+    assert(manifestRows(dir, "graph") == back)
+    assert(lineage(path).map(_._2).sum == back)
+  }
+
+  test("a subject past parquet's statistics size limit gets exact rows and null bounds") {
+    val dir = java.nio.file.Files.createTempDirectory("gw5").toString
+    val path = s"$dir/graph"
+    val long = "urn:s:" + "x" * 5000 // over MAX_STATS_SIZE (4096 bytes): no min/max in the footer
+    val df = manyTriples.union(Seq(
+      graft.mapper.Triple(long, "p", "o", obj_iri = true, null, null)).toDF())
+    GraphWriter.writeTriples(df, path, partitions = 2)
+    val withLong = spark.read.parquet(path).filter(length(col("subj")) > 4096)
+      .select(regexp_extract(input_file_name(), "part-(\\d+)", 1).cast("int")).as[Int].collect().toSet
+    assert(withLong.size == 1)
+    val files = fileAggregates(path).map(f => f._1 -> f).toMap
+    val lin = lineage(path)
+    assert(lin.map(_._1).toSet == files.keySet)
+    lin.foreach { case l @ (part, rows, lo, hi) =>
+      assert(rows == files(part)._2, l.toString.take(200))
+      if (withLong(part)) assert(lo == null && hi == null)
+      else assert((lo, hi) == (files(part)._3, files(part)._4))
+    }
+    assert(manifestRows(dir, "graph") == 602)
+  }
+
   test("stage() resumes from manifest without recompute") {
     val dir = java.nio.file.Files.createTempDirectory("gw2").toString
     var computes = 0
