@@ -31,42 +31,7 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
   */
 object Bench {
 
-  /** Every SparkEntry query, slowest/most-important families first and the
-    * (window-sensitive, slowest) streaming queries last so a tight budget
-    * trims from the cheap tail, not the flagship.
-    */
-  private val headline = Seq(
-    "t1_triples_minimal", "t2_rdf_list", "t3_triples_standard",
-    "g1_graph_materialize", "g2_graph_canonicalize",
-    "q1_agg", "q2_join_broadcast", "q3_window", "q4_sort_limit", "k1_salted_agg",
-    "j3_entity_link", "j4_connected_components",
-    "d1_dedup_exact", "d2_minhash_lsh", "d3_simhash", "d4_ngram_jaccard",
-    "d4_jaccard_capped", "d5_embedding_dup", "d6_dup_clusters",
-    "d7_semantic_dedup",
-    "s1_ann_topk", "s2_ann_lsh", "s3_ann_ivf", "s4_ann_pq", "s5_ann_pq_rerank",
-    "s7_json_minimal", "x5_token_bpe",
-    "m2_frame_sample", "m3_image_resize", "m4_resize_reencode",
-    "m5_audio_decode", "m6_audio_resample", "m7_audio_lowpass",
-    "x1_lang_id", "x2_text_stats", "x3_quality_score", "x4_fingerprint",
-    "x6_stratified_sample", "x7_decontaminate", "x8_pii_redact",
-    "x9_repetition", "x10_word_rarity", "x11_url_filter",
-    "x12_line_dedup", "x13_seq_pack", "x14_pack_chunks",
-    "x15_domain_weights", "x16_loss_mask",
-    "w1_turn_order", "m1_multimodal_decode",
-    // CSVW mapping/validation/source family (cheap, config-scale fixtures)
-    "a1_pk_duplicates", "a2_fk_dup_targets", "a3_comment_rows",
-    "j1_fk_violations", "j2_fk_routing",
-    "f2_datatype_facets", "f3_uax35_number", "f4_uax35_date",
-    "f5_boolean_format", "f6_regex_format", "f7_length_facets",
-    "f9_uri_template", "f10_column_name_encode", "f11_json_literal",
-    "p1_skip_columns", "p3_suppress_table", "w2_column_numbering",
-    "s2_html_table", "s3_csv_dialect", "s4_discovery",
-    "s5_metadata_resolve", "s5_compat_report",
-    "t4_common_properties", "t5_provenance", "r1_reader_open",
-    "v1_turn_invariant",
-    "str1_stream_counts", "str4_stream_mentions", "str2_stream_dedup", "str3_stream_dedup_native")
-
-  private def session(cores: Int): SparkSession = {
+  private[graft] def session(cores: Int): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     // tmpfs shuffle dir when available: local-mode shuffles are disk-bound
@@ -421,33 +386,29 @@ object Bench {
       // pre-materialize the streaming fixture so str1 times the stream,
       // not the one-off input rewrite
       SparkEntry.streamFixture(spark, sfDir)
-      val names = headline.filter(n => only.forall(_.contains(n)))
-      names.foreach { name =>
-        SparkEntry.queries.get(name) match {
-          case None => ()
-          case Some(fn) =>
-            // budget gates: don't start a query with <30s left (the
-            // watchdog still guarantees emission if one hangs); rep 2+
-            // only while comfortably inside budget
-            if (remaining < 30) {
-              skippedForBudget ::= name
-            } else {
-              val effReps = if (remaining < 90) 1 else reps
-              if (effReps < reps) singleRepQs ::= name
-              // per-query MIN over reps: the VM host's noise is one-sided
-              // (steal/IO-wait spikes only ever slow a query down), so the
-              // min is the engine's time; the COLD first rep is reported
-              // alongside for cross-round comparability
-              val times = (1 to effReps).map { _ =>
-                val s0 = System.nanoTime()
-                val ok = try { fn(spark, sfDir).count(); true }
-                         catch { case _: Throwable => false }
-                if (ok) (System.nanoTime() - s0) / 1e9 else -1.0
-              }
-              val best = if (times.contains(-1.0)) -1.0 else times.min
-              results :+= ((name, best, times.head))
-              snapshot(buildJson(results, prevScalingJson))
-            }
+      // registry order puts the cheap tail last for the budget to trim
+      SparkEntry.registry.filter(q => only.forall(_.contains(q.name))).foreach { q =>
+        // budget gates: don't start a query with <30s left (the
+        // watchdog still guarantees emission if one hangs); rep 2+
+        // only while comfortably inside budget
+        if (remaining < 30) {
+          skippedForBudget ::= q.name
+        } else {
+          val effReps = if (remaining < 90) 1 else reps
+          if (effReps < reps) singleRepQs ::= q.name
+          // per-query MIN over reps: the VM host's noise is one-sided
+          // (steal/IO-wait spikes only ever slow a query down), so the
+          // min is the engine's time; the COLD first rep is reported
+          // alongside for cross-round comparability
+          val times = (1 to effReps).map { _ =>
+            val s0 = System.nanoTime()
+            val ok = try { q.build(spark, sfDir).count(); true }
+                     catch { case _: Throwable => false }
+            if (ok) (System.nanoTime() - s0) / 1e9 else -1.0
+          }
+          val best = if (times.contains(-1.0)) -1.0 else times.min
+          results :+= ((q.name, best, times.head))
+          snapshot(buildJson(results, prevScalingJson))
         }
       }
       if (skippedForBudget.nonEmpty)

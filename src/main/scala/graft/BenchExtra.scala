@@ -1,75 +1,74 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-9 optimization harness (guide §1.4/§1.5): per-query noop-sink
   * isolation timings plus `.explain("formatted")` dumps, separate from the
   * FROZEN driver-contract [[Bench]] main. Usage:
   *
   *   sbt "runMain graft.BenchExtra time q1_agg g2_graph_canonicalize"
   *   sbt "runMain graft.BenchExtra explain plans/r09 before g2_graph_canonicalize"
+  *   sbt "runMain graft.BenchExtra explain - q1_agg"
   *
   * `time` runs each named query (all when none named) `GRAFT_EXTRA_REPS`
   * (default 2) times against the noop sink — every column of every row
   * computed, no sink cost — and prints one `name cold_s min_s` line per
-  * query. `explain` writes `<dir>/<name>_<tag>.txt` per query. The session
-  * mirrors the driver bench's config (local[$SPARK_GRAFT_CPUS], AQE on,
-  * shuffle partitions = 2×cores, tmpfs local dir) so timings are comparable.
+  * query. `explain` writes `<dir>/<name>_<tag>.txt` per query, or prints
+  * the plans to stdout when the dir is `-`. Building a streaming (str*)
+  * query runs its stream, so explaining one also executes it. The session
+  * is [[Bench]]'s (local[$SPARK_GRAFT_CPUS], AQE on, shuffle partitions =
+  * 2×cores, tmpfs local dir) so timings are comparable.
   */
 object BenchExtra {
+  private val usage =
+    "usage: graft.BenchExtra time [query...] | explain <dir> <tag> <query...> | explain - <query...>"
+
+  private def fail(msg: String): Nothing = {
+    System.err.println(msg)
+    System.err.println(usage)
+    sys.exit(2)
+  }
+
   def main(args: Array[String]): Unit = {
     val mode = if (args.nonEmpty) args(0) else "time"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val localDir = {
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      if (java.nio.file.Files.isWritable(shm)) {
-        val d = shm.resolve("graft_spark_local_extra")
-        java.nio.file.Files.createDirectories(d)
-        Some(d.toString)
-      } else None
+    val names: Seq[String] = mode match {
+      case "time" => args.drop(1).toSeq
+      case "explain" if args.length >= 3 && args(1) == "-" => args.drop(2).toSeq
+      case "explain" if args.length >= 4 => args.drop(3).toSeq
+      case "explain" => fail("explain needs a target and at least one query")
+      case other => fail(s"unknown mode $other")
     }
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", cpus * 2)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    localDir.foreach(d => b.config("spark.local.dir", d))
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) fail(s"unknown queries: ${unknown.mkString(", ")}")
+    val queries = if (names.isEmpty) SparkEntry.registry
+                  else names.flatMap(n => SparkEntry.registry.find(_.name == n))
 
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     mode match {
       case "time" =>
         val reps = math.max(1, sys.env.getOrElse("GRAFT_EXTRA_REPS", "2").toInt)
-        val names = if (args.length > 1) args.drop(1).toSeq
-                    else SparkEntry.queries.keys.toSeq.sorted
         SparkEntry.streamFixture(spark, sfDir)
-        names.foreach { n =>
-          val fn = SparkEntry.queries(n)
+        queries.foreach { q =>
           val times = (1 to reps).map { i =>
-            spark.sparkContext.setJobDescription(s"extra:$n rep$i")
+            spark.sparkContext.setJobDescription(s"extra:${q.name} rep$i")
             val s0 = System.nanoTime()
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
             (System.nanoTime() - s0) / 1e9
           }
-          println(f"EXTRA $n%-28s cold=${times.head}%8.3f min=${times.min}%8.3f")
+          println(f"EXTRA ${q.name}%-28s cold=${times.head}%8.3f min=${times.min}%8.3f")
         }
       case "explain" =>
         val dir = args(1)
-        val tag = args(2)
-        val names = args.drop(3).toSeq
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-        names.foreach { n =>
-          val df = SparkEntry.queries(n)(spark, sfDir)
-          val plan = df.queryExecution.explainString(
+        if (dir != "-") java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+        queries.foreach { q =>
+          val plan = q.build(spark, sfDir).queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(dir, s"${n}_$tag.txt"), plan)
-          println(s"EXPLAIN wrote $dir/${n}_$tag.txt")
+          if (dir == "-") println(s"\n========== ${q.name} ==========\n$plan")
+          else {
+            val file = java.nio.file.Paths.get(dir, s"${q.name}_${args(2)}.txt")
+            java.nio.file.Files.writeString(file, plan)
+            println(s"EXPLAIN wrote $file")
+          }
         }
-      case other => sys.error(s"unknown mode $other (time|explain)")
     }
     spark.stop()
   }

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -27,42 +28,30 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // a query that throws is reported and the rest still run, but the exit
     // status says so: a failed query is a failure, never "not checked"
-    val failed = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .flatMap { case (name, fn) =>
+    val failed = SparkEntry.registry
+      .filter(q => only.forall(_.contains(q.name)))
+      .flatMap { q =>
         try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          q.build(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q.name}")
           None
         } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          Some(name)
+          System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
+          Some(q.name)
         }
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .enable(com.fasterxml.jackson.databind.SerializationFeature.ORDER_MAP_ENTRIES_BY_KEYS)
+    def write(file: String, m: Map[String, Any]): Unit =
+      Files.writeString(Paths.get(s"$outDir/$file"), json.writeValueAsString(m.asJava))
+    write("oracle_sql.json", SparkEntry.oracleSql)
     // stage-metric accumulators registered by the queries that ran (m6/m7
     // decode-fallback counts): the run manifest a 100 TB job would check
     // to distinguish "all real samples" from "silent mass fallback"
-    import scala.jdk.CollectionConverters._
-    val metrics = SparkEntry.stageMetrics.asScala.toSeq.sortBy(_._1)
-      .map { case (k, acc) => s"${q(k)}: ${acc.value}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/stage_metrics.json"), metrics)
+    write("stage_metrics.json",
+      SparkEntry.stageMetrics.asScala.map { case (k, acc) => k -> acc.value }.toMap)
     spark.stop()
     if (failed.nonEmpty) {
-      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.toSeq.sorted.mkString(", ")}")
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.sorted.mkString(", ")}")
       sys.exit(1)
     }
   }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.model.ResolvedTable
 import graft.mapper.TripleMapper
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -29,22 +29,31 @@ object TranscriptStream {
   def readStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(transcriptSchema).parquet(dir)
 
+  /** Source column per transcript CSVW column; `ts` reads the lexical
+    * `ts_lex` that [[withTsLex]] adds. */
+  val inputs: Map[String, Column] = Map(
+    "conv_id" -> col("conv_id"), "turn_idx" -> col("turn_idx"),
+    "role" -> col("role"), "text" -> col("text"), "tool" -> col("tool"),
+    "ts" -> col("ts_lex"))
+
+  /** Per-row bnode key: (conv_id, turn_idx) is the transcript primary key. */
+  val skolem: Column = concat(col("conv_id"), lit("-"), col("turn_idx"))
+
+  /** Adds `ts_lex`, the xsd:dateTime lexical form of `ts`. */
+  def withTsLex(df: DataFrame): DataFrame =
+    df.withColumn("ts_lex", date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss"))
+
   /** Map a (streaming or batch) transcript frame to triples. Row numbering
     * in streaming mode uses turn_idx directly (no window over unbounded
     * input); skolemization is already (conv_id, turn_idx)-deterministic.
     */
   def triples(stream: DataFrame, table: ResolvedTable,
-              carryEventTime: Boolean = false): DataFrame =
-    TripleMapper.triples(
-      stream.withColumn("ts_lex", date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss")),
-      table,
-      inputs = Map(
-        "conv_id" -> col("conv_id"), "turn_idx" -> col("turn_idx"),
-        "role" -> col("role"), "text" -> col("text"), "tool" -> col("tool"),
-        "ts" -> col("ts_lex")),
-      skolem = concat(col("conv_id"), lit("-"), col("turn_idx")),
+              carryEventTime: Boolean = false,
+              minimal: Boolean = true): DataFrame =
+    TripleMapper.triples(withTsLex(stream), table, inputs, skolem,
       rownum = col("turn_idx") + 1,
       sourceNum = col("turn_idx") + 1,
+      minimal = minimal,
       carry = if (carryEventTime) Seq("ts") else Nil)
 
   /** Stateless text enrichment on the ingest stream: language id, quality

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.commons.io.FileUtils
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
@@ -30,6 +31,8 @@ class AqeSkewJoinSpec extends AnyFunSuite {
   test("mega-conversation join is skew-split at runtime (skew=true in the final plan)") {
     val prev = tuned.keys.map(k => k -> spark.conf.getOption(k)).toMap
     tuned.foreach { case (k, v) => spark.conf.set(k, v) }
+    val dir = java.nio.file.Files.createTempDirectory("graft_skew").toFile
+    val statsDir = java.nio.file.Files.createTempDirectory("graft_skew_dim").toFile
     try {
       val t = graft.sources.TranscriptGen.transcripts(spark, 100000L)
       // one mega conversation + a thin uniform slice: the exact hot-key
@@ -38,22 +41,20 @@ class AqeSkewJoinSpec extends AnyFunSuite {
       // to parquet first — the realistic join-two-tables shape, and the
       // window inside the generator would otherwise sit between the join
       // and its shuffle, blocking the skew-split pattern match.
-      val dir = java.nio.file.Files.createTempDirectory("graft_skew").toString
       t.filter(col("conv_id").startsWith("mega_") ||
           abs(xxhash64(col("conv_id"))) % 50 === 0)
-        .write.mode("overwrite").parquet(dir)
+        .write.mode("overwrite").parquet(dir.toString)
       // round-robin repartition so the join's shuffle has several map
       // tasks: AQE splits a skewed reduce partition at map-block
       // granularity, and a single-map-task shuffle (the default for a
       // file scan this small) is unsplittable no matter how skewed
-      val turns = spark.read.parquet(dir).repartition(8)
+      val turns = spark.read.parquet(dir.toString).repartition(8)
       // materialize the per-conversation stats as a table as well: the
       // skew-split pattern needs BOTH join children to be sort-over-shuffle
       // (an aggregate between the sort and the shuffle blocks the rewrite)
-      val statsDir = java.nio.file.Files.createTempDirectory("graft_skew_dim").toString
       turns.groupBy("conv_id").agg(count(lit(1)).as("n_turns"))
-        .write.mode("overwrite").parquet(statsDir)
-      val convStats = spark.read.parquet(statsDir)
+        .write.mode("overwrite").parquet(statsDir.toString)
+      val convStats = spark.read.parquet(statsDir.toString)
       val joined = turns.join(convStats, "conv_id")
       // collect() drives THIS DataFrame's QueryExecution (count() would
       // plan a separate tree and leave joined's adaptive plan unexecuted)
@@ -73,9 +74,12 @@ class AqeSkewJoinSpec extends AnyFunSuite {
       }
       assert(plan.contains("skew=true"),
         s"expected a runtime skew-split SortMergeJoin; shuffle sizes:\n${sizes.mkString("\n")}")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+    } finally {
+      Seq(dir, statsDir).foreach(FileUtils.deleteQuietly)
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
     }
   }
 
@@ -101,18 +105,20 @@ class AqeSkewJoinSpec extends AnyFunSuite {
     val megaEntities = spark.range(0, 100000).selectExpr(
       "CASE WHEN id % 50 = 0 THEN concat('e_', id % 7) ELSE 'e_mega' END AS entity_id",
       "concat('n', lpad(cast(id AS string), 7, '0')) AS k")
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew_star").toString
-    megaEntities.write.mode("overwrite").parquet(dir)
-    val mentions = spark.read.parquet(dir).repartition(8)
-    val edges = graft.link.EntityLink.starEdges(mentions, "k")
-    val rows = edges.collect()
-    // Σk: every non-hub member contributes exactly one edge
-    assert(rows.length == 100000 - 8, s"expected linear edge count, got ${rows.length}")
-    assert(rows.count(_.getString(0) == "n0000001") == 100000 - 2000 - 1) // e_mega hub = min member
-    val plan = edges.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      s"expected the dictionary-scale hub side to broadcast:\n$plan")
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
-      s"the member side must not be shuffled by entity_id for the hub join:\n$plan")
+    val dir = java.nio.file.Files.createTempDirectory("graft_skew_star").toFile
+    try {
+      megaEntities.write.mode("overwrite").parquet(dir.toString)
+      val mentions = spark.read.parquet(dir.toString).repartition(8)
+      val edges = graft.link.EntityLink.starEdges(mentions, "k")
+      val rows = edges.collect()
+      // Σk: every non-hub member contributes exactly one edge
+      assert(rows.length == 100000 - 8, s"expected linear edge count, got ${rows.length}")
+      assert(rows.count(_.getString(0) == "n0000001") == 100000 - 2000 - 1) // e_mega hub = min member
+      val plan = edges.queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin"),
+        s"expected the dictionary-scale hub side to broadcast:\n$plan")
+      assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
+        s"the member side must not be shuffled by entity_id for the hub join:\n$plan")
+    } finally FileUtils.deleteQuietly(dir)
   }
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.Bench
+import graft.{Bench, SparkEntry}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
@@ -190,5 +190,15 @@ class BenchHarnessSpec extends AnyFunSuite {
     // pathological: empty queries, no value
     val n2 = mapper.readTree(Bench.compactLine("""{"queries":{}}"""))
     assert(n2.get("n_queries").asInt == 0)
+  }
+
+  // ---- the query registry Bench, Verify and BenchExtra iterate ---------
+
+  test("registry: 80 queries, unique names, every one with oracle SQL") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.size == 80)
+    assert(names.distinct.size == names.size, names.diff(names.distinct))
+    val blank = SparkEntry.registry.filter(_.oracleSql.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, blank)
   }
 }
