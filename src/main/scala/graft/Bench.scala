@@ -1,17 +1,27 @@
 package graft
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{IntNode, ObjectNode}
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 
 /** Benchmark main. Two parts:
   *
   * 1. Headline per-query timings on `SPARK_GRAFT_SF_DIR` at
   *    `local[SPARK_GRAFT_CPUS]` (driver contract: one JSON line).
-  * 2. Scaling run (BASELINE.md): the flagship transcript→triples→dedup
-  *    pipeline over a deterministic synthetic corpus, executed at N and 4N
-  *    cores on the *same* materialized input; reports triples/sec at both
-  *    and efficiency = (tp_4N / tp_N) / 4.
+  * 2. Scaling run: the flagship transcript→triples→dedup pipeline over a
+  *    deterministic synthetic corpus, executed at N and 4N cores on the
+  *    *same* materialized input in interleaved lo/hi pairs; reports every
+  *    pair's walls and efficiency = (tp_4N / tp_N) / 4, plus their median
+  *    and quartiles. It needs a host with at least 4N cores: on a smaller
+  *    host the 4N leg is oversubscribed, so the block only records
+  *    `measurable: false` with the host's core count.
+  *
+  * Each run writes its own document to `BENCH/RESULT.json` and never reads
+  * an earlier `RESULT.json` or `HISTORY.jsonl`; a measured scaling run also
+  * appends its block to `BENCH/HISTORY.jsonl`.
   *
   * The whole main runs under a wall-clock budget (`GRAFT_BENCH_BUDGET_SECS`,
   * default 900): headline reps degrade to 1 and then stop when the budget
@@ -19,31 +29,48 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
   * and a watchdog thread guarantees the contract JSON line (with whatever
   * completed) is printed and the process exits 0 even if a query hangs —
   * a partial result beats a timeout with no result.
-  *
-  * Scaling pairs are window-classified by rule (the VM host has three
-  * documented noise modes — spiky steal, sustained co-tenant contention,
-  * burst-credit throttle ramp): a pair is `contaminated` when its
-  * efficiency is super-unity, `throttled` when its hi-config wall ramps
-  * ≥20% over the run's best, `contended` when its lo-config wall is ≥15%
-  * over the run's best, else `quiet`. The headline efficiency is the
-  * median over QUIET pairs only; runs with too few quiet pairs are marked
-  * degraded instead of silently reporting a host-noise number.
   */
 object Bench {
+
+  /** Flagship corpus size: per-run compute must dominate fixed overhead
+    * and host noise (observed efficiency 0.3 at 1M turns vs 0.73 at 12M). */
+  private val Turns = 12000000L
+  private val LoCores = 4
+  private val HiCores = 16
+  private val ScalingPairs = 6
+  private val HeadlineReps = 2
+
+  /** Corpus cache key: the persistent scaling corpus is reused only while
+    * this stamp and [[Turns]] match. BUMP THIS whenever
+    * [[graft.sources.TranscriptGen]] changes the corpus it writes.
+    */
+  private val pipelineVersion = "r4"
+
+  private val json = new ObjectMapper()
+
+  /** JDK 17 module opens Spark needs outside spark-submit (build.sbt's
+    * list), for the worker JVMs and their executors. */
+  private[graft] val addOpens: Seq[String] = Seq(
+    "java.base/java.lang", "java.base/java.lang.invoke",
+    "java.base/java.lang.reflect", "java.base/java.io",
+    "java.base/java.net", "java.base/java.nio",
+    "java.base/java.util", "java.base/java.util.concurrent",
+    "java.base/java.util.concurrent.atomic",
+    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
+    "java.base/sun.security.action", "java.base/sun.util.calendar"
+  ).map(p => s"--add-opens=$p=ALL-UNNAMED")
+
+  /** tmpfs shuffle dir when available: local-mode shuffles are disk-bound
+    * otherwise and the timings measure the disk, not the engine. */
+  private[graft] def tmpfsLocalDir(name: String): Option[String] = {
+    val shm = Paths.get("/dev/shm")
+    if (Files.isWritable(shm)) Some(Files.createDirectories(shm.resolve(name)).toString)
+    else None
+  }
 
   private[graft] def session(cores: Int): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    // tmpfs shuffle dir when available: local-mode shuffles are disk-bound
-    // otherwise and the scaling comparison measures the disk, not the engine
-    val localDir = {
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      if (java.nio.file.Files.isWritable(shm)) {
-        val d = shm.resolve("graft_spark_local")
-        java.nio.file.Files.createDirectories(d)
-        Some(d.toString)
-      } else None
-    }
     val b = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(s"graft-bench-$cores")
@@ -51,7 +78,7 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    localDir.foreach(d => b.config("spark.local.dir", d))
+    tmpfsLocalDir("graft_spark_local").foreach(d => b.config("spark.local.dir", d))
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -61,23 +88,12 @@ object Bench {
     * back-to-back sessions showed >2× order effects from GC/code-cache
     * state; separate processes mirror separate cluster applications).
     */
-  private def spawnWorker(cores: Int, corpus: String,
-                          noWarm: Boolean = false): (Long, Double) = {
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+  private def spawnWorker(cores: Int, corpus: String): (Long, Double) = {
     val java = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
-    val cmd = (Seq(java, "-Xmx8g", "-Dspark.ui.enabled=false",
+    val cmd = Seq(java, "-Xmx8g", "-Dspark.ui.enabled=false",
       "-Dspark.sql.session.timeZone=UTC") ++ addOpens ++
-      Seq("-cp", cp, "graft.BenchWorker", cores.toString, corpus, "full") ++
-      (if (noWarm) Seq("nowarm") else Seq.empty))
+      Seq("-cp", cp, "graft.BenchWorker", cores.toString, corpus, "full")
     val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
     // local-cluster executors are launched through the standalone Worker,
     // which resolves the Spark distribution from SPARK_HOME
@@ -87,9 +103,6 @@ object Bench {
     // the executor command builder needs the Scala suffix when not launched
     // through the distribution's env scripts
     pb.environment().put("SPARK_SCALA_VERSION", "2.13")
-    // keep the worker's master mode in sync with the default Bench reports
-    pb.environment().put("GRAFT_BENCH_MASTER",
-      sys.env.getOrElse("GRAFT_BENCH_MASTER", "lc"))
     val proc = pb.start()
     val out = new String(proc.getInputStream.readAllBytes())
     proc.waitFor()
@@ -99,218 +112,142 @@ object Bench {
     (parts(1).toLong, parts(2).toDouble)
   }
 
-  private def median(xs: Seq[Double]): Double =
-    if (xs.isEmpty) 0.0
-    else {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  private def dec(v: Double, scale: Int = 3): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(v).setScale(scale, java.math.RoundingMode.HALF_UP)
+
+  /** Quantile `p` of a non-empty sample, linearly interpolated between
+    * order statistics (numpy's default). */
+  private def quantile(xs: Seq[Double], p: Double): Double = {
+    val s = xs.sorted
+    val h = (s.size - 1) * p
+    val i = h.toInt
+    if (i + 1 < s.size) s(i) + (h - i) * (s(i + 1) - s(i)) else s(i)
+  }
+
+  /** The scaling block for a host that cannot run the 4N leg unshared, or
+    * a run whose budget left no room for a pair. */
+  private[graft] def unmeasurable(nproc: Int): ObjectNode = {
+    val b = json.createObjectNode()
+    b.put("measurable", false)
+    b.put("nproc", nproc)
+    b.put("cores_needed", HiCores)
+    b
+  }
+
+  /** The scaling block of this run's interleaved `(sec_lo, sec_hi)` pairs,
+    * all of which counted `triples`: each pair's walls and efficiency, and
+    * the efficiency median and quartiles. `sec_*`/`triples_per_sec_*` use
+    * the median wall per configuration.
+    */
+  private[graft] def scalingBlock(nproc: Int, triples: Long,
+                                  pairs: Seq[(Double, Double)]): ObjectNode = {
+    val ratio = HiCores.toDouble / LoCores
+    val effs = pairs.map { case (lo, hi) => (lo / hi) / ratio }
+    val secLo = quantile(pairs.map(_._1), 0.5)
+    val secHi = quantile(pairs.map(_._2), 0.5)
+    val b = json.createObjectNode()
+    b.put("measurable", true)
+    b.put("nproc", nproc)
+    b.put("triples", triples)
+    b.put("turns", Turns)
+    b.put("cores_lo", LoCores)
+    b.put("cores_hi", HiCores)
+    b.put("sec_lo", dec(secLo, 2))
+    b.put("sec_hi", dec(secHi, 2))
+    b.put("triples_per_sec_lo", dec(triples / secLo, 0))
+    b.put("triples_per_sec_hi", dec(triples / secHi, 0))
+    b.put("efficiency", dec(quantile(effs, 0.5)))
+    b.put("efficiency_q1", dec(quantile(effs, 0.25)))
+    b.put("efficiency_q3", dec(quantile(effs, 0.75)))
+    val arr = b.putArray("pairs")
+    pairs.zip(effs).foreach { case ((lo, hi), e) =>
+      arr.addObject().put("sec_lo", dec(lo, 2)).put("sec_hi", dec(hi, 2))
+        .put("efficiency", dec(e))
     }
-
-  /** One scaling sample pair with its rule-based window tag. */
-  private[graft] final case class Pair(lo: Double, hi: Double) {
-    def eff(ratio: Double): Double = (lo / hi) / ratio
-  }
-
-  /** Version stamp for cross-run pooling: quiet pairs from HISTORY.jsonl
-    * count toward the committed efficiency only while the flagship pipeline
-    * they measured is the one shipping. BUMP THIS whenever
-    * [[BenchWorker.kgPipelineCount]], [[graft.sources.TranscriptGen]], the
-    * transcript triple mapper, or the worker Spark config changes in a way
-    * that affects the measurement. History lines without the field predate
-    * the stamp and belong to "r4" (the flagship plan was re-verified
-    * unchanged through round 4, PLANS.md 2026-08-17).
-    */
-  private val pipelineVersion = "r4"
-
-  /** Absolute quiet gates: quiet windows for the default 12M-turn corpus
-    * measure lo ≤ ~80 s / hi ≤ ~25 s (~6% tolerance applied). The corpus
-    * cost is linear in turns, so the gates scale with the configured turn
-    * count instead of silently tagging every pair of a smaller corpus
-    * contended/throttled. Env overrides `GRAFT_BENCH_QUIET_{LO,HI}_SECS`
-    * are 12M-turn-calibrated values and scale by the SAME turns ratio —
-    * an override tuned at one corpus size stays correct at another, and
-    * the pool loader re-applies identical gates to historic lines.
-    */
-  private[graft] def absoluteGates(turns: Long): (Double, Double) = {
-    val scale = turns.toDouble / 12000000.0
-    val absLo = sys.env.get("GRAFT_BENCH_QUIET_LO_SECS").map(_.toDouble)
-      .getOrElse(85.0) * scale
-    val absHi = sys.env.get("GRAFT_BENCH_QUIET_HI_SECS").map(_.toDouble)
-      .getOrElse(26.5) * scale
-    (absLo, absHi)
-  }
-
-  /** Rule-based window classification (BENCH/BASELINE.md measurement
-    * history): super-unity efficiency ⇒ the lo leg was host-hit
-    * (contaminated); hi wall ≥20% over the run's best hi ⇒ burst-credit
-    * throttle ramp; lo wall ≥15% over the run's best lo ⇒ contended.
-    * ABSOLUTE gates on top: a uniformly-contended run has tight relative
-    * spread — every pair slow together — which only the absolutes can see.
-    */
-  private[graft] def classify(pairs: Seq[Pair], ratio: Double,
-                       absLo: Double, absHi: Double): Seq[String] = {
-    if (pairs.isEmpty) return Nil
-    val minLo = pairs.map(_.lo).min
-    val minHi = pairs.map(_.hi).min
-    pairs.map { p =>
-      if (p.eff(ratio) > 1.0) "contaminated"
-      else if (p.hi > 1.20 * minHi || p.hi > absHi) "throttled"
-      else if (p.lo > 1.15 * minLo || p.lo > absLo) "contended"
-      else "quiet"
-    }
-  }
-
-  /** Quiet pairs pooled ACROSS runs from `BENCH/HISTORY.jsonl` — one run
-    * rarely catches a quiet window 6 consecutive times on this host, but
-    * quiet pairs accumulate across attempts. Only lines of the current
-    * [[pipelineVersion]], corpus size, AND measurement config (cores_lo /
-    * cores_hi / master mode — a 2,4 pair's walls would trivially pass the
-    * 4,16-calibrated gates and its ratio measures a different scaling
-    * claim) qualify; lines without config fields predate the stamp and
-    * belong to the 4,16 "lc" default every historic run used. The absolute
-    * quiet gates are re-applied retroactively (lines recording per-pair
-    * walls are re-checked pair-by-pair; older lines qualify only if their
-    * run-best walls pass — which excludes the round-3 sustained-contention
-    * run whose relative-only rules mis-tagged uniformly-slow pairs quiet).
-    * A malformed line (missing required fields) is skipped, never fatal —
-    * an NPE here would lose a whole ~40-minute run's emit. Returns the
-    * most recent `k` qualifying `(ts, efficiency)` pairs.
-    */
-  private[graft] def loadQuietPool(absLo: Double, absHi: Double, turns: Long,
-                            k: Int,
-                            coresLo: Int = 4, coresHi: Int = 16,
-                            mode: String = "lc",
-                            p: java.nio.file.Path = Paths.get("BENCH/HISTORY.jsonl")
-                           ): Vector[(Long, Double)] = {
-    if (!Files.exists(p)) return Vector.empty
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val lines = Files.readAllLines(p)
-    val out = Vector.newBuilder[(Long, Double)]
-    lines.forEach { ln =>
-      try {
-        val n = m.readTree(ln)
-        if (n != null && n.has("pairs") && n.has("tags") && n.has("ts_ms")) {
-          val pipe = if (n.has("pipeline")) n.get("pipeline").asText else "r4"
-          val lineTurns = if (n.has("turns")) n.get("turns").asLong else 12000000L
-          val lineCoresLo = if (n.has("cores_lo")) n.get("cores_lo").asInt else 4
-          val lineCoresHi = if (n.has("cores_hi")) n.get("cores_hi").asInt else 16
-          val lineMode = if (n.has("mode")) n.get("mode").asText else "lc"
-          if (pipe == pipelineVersion && lineTurns == turns &&
-              lineCoresLo == coresLo && lineCoresHi == coresHi &&
-              lineMode == mode) {
-            val ts = n.get("ts_ms").asLong
-            val effs = n.get("pairs")
-            val tags = n.get("tags")
-            val pl = n.get("pair_lo") // null on pre-pool lines
-            val ph = n.get("pair_hi")
-            (0 until math.min(effs.size, tags.size)).foreach { i =>
-              val wallsOk =
-                if (pl != null && ph != null)
-                  pl.get(i).asDouble <= absLo && ph.get(i).asDouble <= absHi
-                else
-                  n.has("sec_lo") && n.has("sec_hi") &&
-                    n.get("sec_lo").asDouble <= absLo &&
-                    n.get("sec_hi").asDouble <= absHi
-              if (tags.get(i).asText == "quiet" && wallsOk)
-                out += ((ts, effs.get(i).asDouble))
-            }
-          }
-        }
-      } catch { case _: Exception => () } // skip malformed line, keep the run
-    }
-    out.result().sortBy(_._1).takeRight(k)
-  }
-
-  /** Field extractor for this file's own flat JSON — values are bare
-    * numbers or simple strings, never nested.
-    */
-  private[graft] def jsField(src: String, key: String): Option[String] = {
-    val m = ("\"" + java.util.regex.Pattern.quote(key) +
-      "\":\"?(-?[A-Za-z0-9._/+-]+)\"?").r.findFirstMatchIn(src)
-    m.map(_.group(1))
+    b
   }
 
   /** Compact truncation-proof contract line (< ~400 bytes): the full
-    * document with 60 queries is ~3.3 KB and the driver's stdout tail
-    * capture truncated it mid-key two rounds running. Derived from the
-    * full JSON so the watchdog path needs no extra state.
+    * document with 60 queries is ~3.3 KB and a stdout tail capture
+    * truncated it mid-key two rounds running. Derived from the full
+    * document so the watchdog path needs no extra state.
     */
-  private[graft] def compactLine(json: String): String = {
-    val nQueries = {
-      val i = json.indexOf("\"queries\":{")
-      if (i < 0) 0
-      else {
-        val seg = json.substring(i + 11, math.max(json.indexOf('}', i), i + 11))
-        if (seg.trim.isEmpty) 0 else seg.count(_ == ':')
-      }
+  private[graft] def compactLine(doc: JsonNode): String = {
+    val line = json.createObjectNode()
+    line.put("metric", "total")
+    val value = doc.path("value")
+    line.set[JsonNode]("value", if (value.isNumber) value else IntNode.valueOf(0))
+    line.put("unit", "sec")
+    line.put("n_queries", doc.path("queries").size)
+    line.put("sf", doc.path("sf").asText("?"))
+    line.put("watchdog_fired", doc.path("watchdog_fired").asBoolean(false))
+    val scaling = doc.path("scaling")
+    if (scaling.path("measurable").asBoolean(false))
+      line.set[JsonNode]("scaling_efficiency", scaling.get("efficiency"))
+    line.put("full", "BENCH/RESULT.json")
+    json.writeValueAsString(line)
+  }
+
+  /** Owns one run's files under `dir`: every snapshot overwrites
+    * `RESULT.json`, `emit` prints the latest snapshot and then the compact
+    * line exactly once, and `history` appends a measured scaling block to
+    * `HISTORY.jsonl`. Neither file is ever read.
+    */
+  private[graft] final class Report(dir: Path, sfDir: String) {
+    private val latest = new AtomicReference[ObjectNode]({
+      val d = json.createObjectNode()
+      d.put("metric", "total").put("value", 0.0).put("unit", "sec")
+      d.putObject("queries")
+      d.put("sf", sfDir)
+      d
+    })
+    private val printed = new AtomicBoolean(false)
+
+    private def write(doc: JsonNode): Unit = {
+      Files.createDirectories(dir)
+      Files.writeString(dir.resolve("RESULT.json"), json.writeValueAsString(doc) + "\n")
     }
-    def f(k: String, d: String = "null") = jsField(json, k).getOrElse(d)
-    val scaling =
-      if (json.contains("\"scaling\":")) {
-        val s = json.substring(json.indexOf("\"scaling\":"))
-        s""","scaling_efficiency":${jsField(s, "efficiency").getOrElse("null")},""" +
-          s""""window_quality":"${jsField(s, "window_quality").getOrElse("unknown")}",""" +
-          s""""quiet_pool":${jsField(s, "quiet_pool").orElse(jsField(s, "quiet_pairs")).getOrElse("0")}"""
-      } else ""
-    s"""{"metric":"total","value":${f("value", "0")},"unit":"sec",""" +
-      s""""n_queries":$nQueries,"sf":"${f("sf", "?")}",""" +
-      s""""watchdog_fired":${f("watchdog_fired", "false")}$scaling,""" +
-      s""""full":"BENCH/RESULT.json"}"""
+
+    def snapshot(doc: ObjectNode): Unit = { latest.set(doc); write(doc) }
+
+    /** Watchdog truncation is machine-readable: a consumer of RESULT.json
+      * must be able to tell a clean run from one the watchdog cut short. */
+    def emit(watchdogFired: Boolean): Unit = if (printed.compareAndSet(false, true)) {
+      val doc =
+        if (!watchdogFired) latest.get
+        else json.createObjectNode().put("watchdog_fired", true).setAll[ObjectNode](latest.get)
+      write(doc)
+      println(json.writeValueAsString(doc))
+      // compact line LAST: the full document is ~3.3 KB and tail-capture
+      // truncation made it unparseable two rounds running
+      println(compactLine(doc))
+      System.out.flush()
+    }
+
+    def history(scaling: ObjectNode): Unit = {
+      val line = json.createObjectNode().put("ts_ms", System.currentTimeMillis())
+        .setAll[ObjectNode](scaling)
+      Files.createDirectories(dir)
+      Files.writeString(dir.resolve("HISTORY.jsonl"), json.writeValueAsString(line) + "\n",
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    }
   }
 
   def main(args: Array[String]): Unit = {
     val t0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - t0) / 1e9
-    // window-quality telemetry: ambient load sampled FIRST — after the
-    // headline suite or the corpus burst the 1-min average would report our
-    // own CPU burn as host contention
+    // ambient load sampled FIRST — after the headline suite or the corpus
+    // burst the 1-min average would report our own CPU burn
     val loadBefore =
       try Files.readString(Paths.get("/proc/loadavg")).split("\\s+")(0).toDouble
       catch { case _: Exception => -1.0 }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val doScaling = !sys.env.get("GRAFT_BENCH_SCALING").contains("0")
-    val doHeadline = !sys.env.get("GRAFT_BENCH_HEADLINE").contains("0")
     val budget = math.max(120,
       sys.env.getOrElse("GRAFT_BENCH_BUDGET_SECS", "900").toInt)
     def remaining: Double = budget - elapsed
+    val report = new Report(Paths.get("BENCH"), sfDir)
 
-    // previous result read ONCE up front: incremental snapshots overwrite
-    // the file, so partial runs must carry forward the blocks they skip
-    val prevResult = {
-      val p = Paths.get("BENCH/RESULT.json")
-      if (Files.exists(p)) Files.readString(p) else ""
-    }
-    val prevScalingJson = {
-      val i = prevResult.indexOf(",\"scaling\":")
-      if (i >= 0) prevResult.substring(i, prevResult.lastIndexOf('}')) else ""
-    }
-
-    // ---- one-shot contract emission (normal exit OR watchdog) ----------
-    val latest = new AtomicReference[String](
-      if (prevResult.nonEmpty) prevResult.trim
-      else s"""{"metric":"total","value":0.0,"unit":"sec","queries":{},"sf":"$sfDir"}""")
-    val printed = new AtomicBoolean(false)
-    def snapshot(json: String): Unit = {
-      latest.set(json)
-      Files.createDirectories(Paths.get("BENCH"))
-      Files.writeString(Paths.get("BENCH/RESULT.json"), json + "\n")
-    }
-    val wdFired = new AtomicBoolean(false)
-    def emit(): Unit = if (printed.compareAndSet(false, true)) {
-      // watchdog truncation is machine-readable: a consumer of RESULT.json
-      // must be able to tell a clean run from one the watchdog cut short
-      val json =
-        if (wdFired.get) latest.get.replaceFirst("\\{", "{\"watchdog_fired\":true,")
-        else latest.get
-      Files.createDirectories(Paths.get("BENCH"))
-      Files.writeString(Paths.get("BENCH/RESULT.json"), json + "\n")
-      println(json)
-      // compact line LAST: the full document is ~3.3 KB and tail-capture
-      // truncation made it unparseable to the driver two rounds running
-      println(compactLine(json))
-      System.out.flush()
-    }
     // Watchdog: if anything hangs past budget + grace, print what we have
     // and hard-exit 0 — the round-3 driver run timed out (rc 124) with a
     // fully-computed headline that was never printed. halt() skips Spark's
@@ -323,462 +260,133 @@ object Bench {
       System.err.println(
         f"[bench] watchdog: budget ${budget}s + ${grace}s grace exceeded " +
           f"(elapsed $elapsed%.0fs) — emitting partial result")
-      wdFired.set(true)
-      emit()
+      report.emit(watchdogFired = true)
       Runtime.getRuntime.halt(0)
     }, "bench-watchdog")
     watchdog.setDaemon(true)
     watchdog.start()
 
     // ---- part 1: headline queries --------------------------------------
-    val reps = math.max(1,
-      sys.env.getOrElse("GRAFT_BENCH_HEADLINE_REPS", "2").toInt)
-    val only: Option[Set[String]] =
-      sys.env.get("GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    var skippedForBudget = List.empty[String]
+    var results = Vector.empty[(String, Double, Double)]
+    var skippedForBudget = Vector.empty[String]
     // queries the budget degraded to ONE (cold) rep: recorded so a reader
-    // can tell a cold single-rep number from a true warm regression without
-    // forensically equality-checking queries vs queries_cold (round-5 nit)
-    var singleRepQs = List.empty[String]
-    var spark: SparkSession = null
+    // can tell a cold single-rep number from a true warm regression
+    var singleRepQs = Vector.empty[String]
 
-    def buildJson(results: Seq[(String, Double, Double)],
-                  scalingJson: String): String = {
-      val (qs, cold, total, singleRep) =
-        if (results.isEmpty && !doHeadline) {
-          // headline-skip mode carries the previous headline forward
-          // (warm queries, cold first-reps, single-rep list, and the total —
-          // a scaling-only run must not erase the committed headline evidence)
-          val qi = prevResult.indexOf("\"queries\":")
-          val qj = if (qi >= 0) prevResult.indexOf('}', qi) else -1
-          val ci = prevResult.indexOf("\"queries_cold\":")
-          val cj = if (ci >= 0) prevResult.indexOf('}', ci) else -1
-          val vi = prevResult.indexOf("\"value\":")
-          val vj = if (vi >= 0) prevResult.indexOf(',', vi) else -1
-          val si = prevResult.indexOf("\"single_rep\":")
-          val sj = if (si >= 0) prevResult.indexOf(']', si) else -1
-          if (qj >= 0 && vj >= 0)
-            (prevResult.substring(qi + 10, qj + 1),
-             if (cj >= 0) prevResult.substring(ci + 15, cj + 1) else "{}",
-             prevResult.substring(vi + 8, vj).toDouble,
-             if (sj >= 0) prevResult.substring(si + 13, sj + 1) else "[]")
-          else ("{}", "{}", 0.0, "[]")
-        } else (
-          results.map { case (k, v, _) => "\"" + k + "\":" + f"$v%.3f" }
-            .mkString("{", ",", "}"),
-          results.map { case (k, _, c) => "\"" + k + "\":" + f"$c%.3f" }
-            .mkString("{", ",", "}"),
-          results.map(_._2).filter(_ >= 0).sum,
-          if (singleRepQs.isEmpty) "[]"
-          else singleRepQs.reverse.mkString("[\"", "\",\"", "\"]"))
-      val skipped =
-        if (skippedForBudget.isEmpty) ""
-        else skippedForBudget.reverse.mkString(",\"skipped_for_budget\":[\"", "\",\"", "\"]")
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,""" +
-        s""""queries_cold":$cold,"reps":$reps,"single_rep":$singleRep,""" +
-        s""""budget_secs":$budget,"elapsed_secs":${f"$elapsed%.1f"},""" +
-        s""""ambient_load_before":${f"$loadBefore%.2f"}$skipped,"sf":"$sfDir"$scalingJson}"""
-    }
-
-    var results = Seq.empty[(String, Double, Double)]
-    if (doHeadline) {
-      spark = session(cpus)
-      // pre-materialize the streaming fixture so str1 times the stream,
-      // not the one-off input rewrite
-      SparkEntry.streamFixture(spark, sfDir)
-      // registry order puts the cheap tail last for the budget to trim
-      SparkEntry.registry.filter(q => only.forall(_.contains(q.name))).foreach { q =>
-        // budget gates: don't start a query with <30s left (the
-        // watchdog still guarantees emission if one hangs); rep 2+
-        // only while comfortably inside budget
-        if (remaining < 30) {
-          skippedForBudget ::= q.name
-        } else {
-          val effReps = if (remaining < 90) 1 else reps
-          if (effReps < reps) singleRepQs ::= q.name
-          // per-query MIN over reps: the VM host's noise is one-sided
-          // (steal/IO-wait spikes only ever slow a query down), so the
-          // min is the engine's time; the COLD first rep is reported
-          // alongside for cross-round comparability
-          val times = (1 to effReps).map { _ =>
-            val s0 = System.nanoTime()
-            val ok = try { q.build(spark, sfDir).count(); true }
-                     catch { case _: Throwable => false }
-            if (ok) (System.nanoTime() - s0) / 1e9 else -1.0
-          }
-          val best = if (times.contains(-1.0)) -1.0 else times.min
-          results :+= ((q.name, best, times.head))
-          snapshot(buildJson(results, prevScalingJson))
-        }
+    def document(scaling: Option[ObjectNode]): ObjectNode = {
+      val d = json.createObjectNode()
+      d.put("metric", "total")
+      d.put("value", dec(results.map(_._2).filter(_ >= 0).sum))
+      d.put("unit", "sec")
+      val qs = d.putObject("queries")
+      val cold = d.putObject("queries_cold")
+      results.foreach { case (k, best, first) => qs.put(k, dec(best)); cold.put(k, dec(first)) }
+      d.put("reps", HeadlineReps)
+      val single = d.putArray("single_rep")
+      singleRepQs.foreach(single.add(_))
+      d.put("budget_secs", budget)
+      d.put("elapsed_secs", dec(elapsed, 1))
+      d.put("ambient_load_before", dec(loadBefore, 2))
+      if (skippedForBudget.nonEmpty) {
+        val a = d.putArray("skipped_for_budget")
+        skippedForBudget.foreach(a.add(_))
       }
-      if (skippedForBudget.nonEmpty)
-        System.err.println(s"[bench] budget trimmed ${skippedForBudget.size} " +
-          s"headline queries: ${skippedForBudget.reverse.mkString(", ")}")
+      d.put("sf", sfDir)
+      scaling.foreach(d.set[JsonNode]("scaling", _))
+      d
     }
-    snapshot(buildJson(results, prevScalingJson))
+
+    var spark = session(cpus)
+    // pre-materialize the streaming fixture so str1 times the stream,
+    // not the one-off input rewrite
+    SparkEntry.streamFixture(spark, sfDir)
+    // registry order puts the cheap tail last for the budget to trim
+    SparkEntry.registry.foreach { q =>
+      // budget gates: don't start a query with <30s left (the watchdog
+      // still guarantees emission if one hangs); rep 2+ only while
+      // comfortably inside budget
+      if (remaining < 30) {
+        skippedForBudget :+= q.name
+      } else {
+        val reps = if (remaining < 90) 1 else HeadlineReps
+        if (reps < HeadlineReps) singleRepQs :+= q.name
+        // per-query MIN over reps: the VM host's noise is one-sided
+        // (steal/IO-wait spikes only ever slow a query down), so the min
+        // is the engine's time; the COLD first rep is reported alongside
+        // for cross-round comparability
+        val times = (1 to reps).map { _ =>
+          val s0 = System.nanoTime()
+          val ok = try { q.build(spark, sfDir).count(); true }
+                   catch { case _: Throwable => false }
+          if (ok) (System.nanoTime() - s0) / 1e9 else -1.0
+        }
+        val best = if (times.contains(-1.0)) -1.0 else times.min
+        results :+= ((q.name, best, times.head))
+        report.snapshot(document(None))
+      }
+    }
+    if (skippedForBudget.nonEmpty)
+      System.err.println(s"[bench] budget trimmed ${skippedForBudget.size} " +
+        s"headline queries: ${skippedForBudget.mkString(", ")}")
+    report.snapshot(document(None))
 
     // ---- part 2: scaling evidence (N vs 4N cores, same input) ----------
-    // estimated costs (measured round 3 on this host): corpus write ~150 s,
-    // one interleaved lo+hi pair ~300 s; refined with live measurements
+    val nproc = Runtime.getRuntime.availableProcessors
+    // The deterministic corpus write is a ~180 s burn; a complete earlier
+    // write (Spark's _SUCCESS marker) of the same corpus key is reused.
+    val corpus = s"/tmp/graft_corpus/turns_${Turns}_$pipelineVersion"
+    val corpusReusable = Files.exists(Paths.get(corpus, "_SUCCESS"))
+    // estimated costs (measured round 3): corpus write ~180 s, one
+    // interleaved lo+hi pair ~300 s; the first pair's measured cost
+    // replaces the estimate for the rest
     var pairEstimate = 300.0
-    if (doScaling && spark == null) spark = session(cpus)
-    // sized so per-run compute dominates fixed overhead AND host noise:
-    // small corpora measured the split planner + scheduling jitter, not
-    // the engine (observed efficiency 0.3 at 1M turns vs 0.73 at 12M)
-    val turns = sys.env.getOrElse("GRAFT_BENCH_TURNS", "12000000").toLong
-    val (absLo, absHi) = absoluteGates(turns)
-    val poolK = math.max(2, sys.env.getOrElse("GRAFT_BENCH_POOL_K", "8").toInt)
-
-    // Persistent corpus (GRAFT_BENCH_CORPUS_DIR): the deterministic 12M-turn
-    // corpus write is a ~180 s 32-core burn that depletes the host's burst
-    // credits right before the pairs it's supposed to serve — on a
-    // credit-throttled VM that alone can push the first pair out of the
-    // quiet gates. Reusing a corpus generated in an earlier attempt makes
-    // repeated scaling attempts both cheaper and cleaner. Keyed by turn
-    // count; _SUCCESS marks a complete write (Spark's own commit marker).
-    // keyed by turn count AND pipeline version: corpus content depends only
-    // on TranscriptGen, but the version stamp is the cheap over-approximate
-    // invalidation for generator changes
-    val corpusPersist: Option[String] =
-      sys.env.get("GRAFT_BENCH_CORPUS_DIR").orElse(Some("/tmp/graft_corpus"))
-        .filter(_.nonEmpty)
-        .map(b => s"$b/turns_${turns}_$pipelineVersion")
-    val corpusReusable: Boolean =
-      corpusPersist.exists(p => Files.exists(Paths.get(p, "_SUCCESS")))
-    val corpusEstimate = if (corpusReusable) 5.0 else 180.0
-
-    // Pre-flight canary: a ~40-min scaling run launched into a degraded
-    // window wastes the whole budget and its pairs get refused by the
-    // classification rules anyway (2026-08-17: every probe over a 4-hour
-    // span read 1.3-3× quiet). The two most noise-sensitive cheap headline
-    // queries are re-measured RIGHT before the corpus write — headline
-    // timings are minutes stale by then and the headline burn itself can
-    // deplete the host's burst credits. Thresholds are calibrated to the
-    // sf0.1 fixtures; other SF dirs skip the probe with a note.
-    def canaryOk(): Boolean = {
-      if (sys.env.get("GRAFT_BENCH_CANARY").contains("0")) return true
-      if (!sfDir.contains("sf0.1")) {
-        System.err.println(s"[bench] canary thresholds uncalibrated for $sfDir — skipping probe")
-        return true
-      }
-      // defaults are the CLEARLY-hopeless line (~1.6x quiet: quiet mins
-      // are ~0.9/0.5 s): the classification rules + keep-best gate already
-      // protect the committed numbers, so the canary only exists to stop a
-      // run from burning its whole budget in a window where no pair could
-      // classify quiet. Manual launches use stricter values via env
-      // (t1<=1.15/d3<=0.60 per the round-4 launch rule).
-      val t1Max = sys.env.getOrElse("GRAFT_BENCH_CANARY_T1_SECS", "1.5").toDouble
-      val d3Max = sys.env.getOrElse("GRAFT_BENCH_CANARY_D3_SECS", "0.9").toDouble
-      def probe(name: String): Double = {
-        val fn = SparkEntry.queries(name)
-        (1 to 2).map { _ =>
-          val s0 = System.nanoTime(); fn(spark, sfDir).count()
-          (System.nanoTime() - s0) / 1e9
-        }.min
-      }
-      val t1 = probe("t1_triples_minimal")
-      val d3 = probe("d3_simhash")
-      val ok = t1 <= t1Max && d3 <= d3Max
-      System.err.println(f"[bench] canary t1=$t1%.2fs (max $t1Max%.2f) " +
-        f"d3=$d3%.2fs (max $d3Max%.2f) -> ${if (ok) "quiet" else "degraded — scaling skipped, previous block carried forward"}")
-      if (!ok) {
-        Files.createDirectories(Paths.get("BENCH"))
-        Files.writeString(Paths.get("BENCH/HISTORY.jsonl"),
-          s"""{"ts_ms":${System.currentTimeMillis()},"canary_skip":true,""" +
-            f""""t1":$t1%.3f,"d3":$d3%.3f,"pipeline":"$pipelineVersion"}%n""",
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
-      }
-      ok
-    }
-
-    // GRAFT_BENCH_CORPUS_ONLY=1: generate/refresh the persistent corpus and
-    // exit without measuring — lets the expensive burn be scheduled apart
-    // from the noise-sensitive pair runs.
-    val corpusOnly = sys.env.get("GRAFT_BENCH_CORPUS_ONLY").contains("1")
-    if (corpusOnly) corpusPersist match {
-      case Some(dir) =>
-        if (!corpusReusable) {
-          if (spark == null) spark = session(cpus)
-          graft.sources.TranscriptGen.transcripts(spark, turns)
-            .repartition(256).write.mode("overwrite").parquet(dir)
-        }
-        System.err.println(s"[bench] corpus ready at $dir (GRAFT_BENCH_CORPUS_ONLY)")
-      case None =>
-        System.err.println("[bench] GRAFT_BENCH_CORPUS_ONLY requires GRAFT_BENCH_CORPUS_DIR")
-    }
-
-    val scalingFits = doScaling && !corpusOnly &&
-      remaining > corpusEstimate + pairEstimate * 1.25 + 30
-    if (doScaling && !corpusOnly && !scalingFits)
-      System.err.println(f"[bench] budget too tight for scaling " +
-        f"(${remaining}%.0fs left, need ~${corpusEstimate + pairEstimate * 1.25 + 30}%.0f) — carrying previous block forward")
-    if (scalingFits && canaryOk()) {
-      val corpus = corpusPersist
-        .getOrElse(Files.createTempDirectory("graft_bench_corpus").toString)
-      if (corpusReusable) {
-        System.err.println(s"[bench] reusing corpus at $corpus")
+    val scalingNeed = (if (corpusReusable) 5.0 else 180.0) + pairEstimate * 1.25 + 30
+    val scaling =
+      if (nproc < HiCores) {
+        System.err.println(s"[bench] scaling not measurable: the ${HiCores}-core " +
+          s"leg needs $HiCores cores, this host has $nproc")
+        unmeasurable(nproc)
+      } else if (remaining <= scalingNeed) {
+        System.err.println(f"[bench] budget too tight for scaling " +
+          f"($remaining%.0fs left, need ~$scalingNeed%.0f)")
+        unmeasurable(nproc)
       } else {
-        // 256 output files: parquet splits can't go below a row group, so
-        // the file count caps scan parallelism — 32 single-row-group files
-        // would make the 32-thread run a single straggler-bound task wave
-        graft.sources.TranscriptGen.transcripts(spark, turns)
-          .repartition(256)
-          .write.mode("overwrite").parquet(corpus)
+        if (corpusReusable) System.err.println(s"[bench] reusing corpus at $corpus")
+        else {
+          // 256 output files: parquet splits can't go below a row group, so
+          // the file count caps scan parallelism
+          graft.sources.TranscriptGen.transcripts(spark, Turns)
+            .repartition(256)
+            .write.mode("overwrite").parquet(corpus)
+        }
+        spark.stop(); spark = null
+        // 1 executor × 4 cores vs 4 executors × 4 cores (BenchWorker), each
+        // executor its own JVM and heap; lo/hi interleaved so each pair
+        // shares one host-noise window
+        var pairs = Vector.empty[(Double, Double)]
+        var counts = Vector.empty[Long]
+        while (pairs.size < ScalingPairs && remaining > pairEstimate * 1.25 + 30) {
+          val p0 = elapsed
+          val (nLo, lo) = spawnWorker(LoCores, corpus)
+          val (nHi, hi) = spawnWorker(HiCores, corpus)
+          counts ++= Seq(nLo, nHi)
+          pairs :+= ((lo, hi))
+          pairEstimate = math.max(elapsed - p0, 60.0)
+        }
+        if (pairs.size < ScalingPairs)
+          System.err.println(s"[bench] budget trimmed scaling to ${pairs.size}/$ScalingPairs pairs")
+        if (pairs.isEmpty) unmeasurable(nproc)
+        else {
+          require(counts.distinct.size == 1,
+            s"scaling runs disagree on the triple count: ${counts.mkString(", ")}")
+          val block = scalingBlock(nproc, counts.head, pairs)
+          report.history(block)
+          block
+        }
       }
-      spark.stop(); spark = null
-
-      // Default mode is a REAL local cluster (GRAFT_BENCH_MASTER=lc):
-      // 1 executor × 4 cores vs 4 executors × 4 cores, each executor its
-      // own JVM with its own heap — the faithful N→4N proxy, since a real
-      // cluster scales memory and GC capacity with executor count (a single
-      // fixed-heap JVM starves per-core memory at the high end). Runs are
-      // interleaved lo/hi and window-classified; workers warm once so the
-      // measurement is the steady state a long job amortizes to.
-      val master = sys.env.getOrElse("GRAFT_BENCH_MASTER", "lc")
-      val Array(loCores, hiCores) =
-        sys.env.getOrElse("GRAFT_BENCH_CORES", "4,16").split(",").map(_.trim.toInt)
-      val ratio = hiCores.toDouble / loCores
-      val maxReps = math.max(1, sys.env.getOrElse("GRAFT_BENCH_REPS", "6").toInt)
-      var samples = Vector.empty[(Int, (Long, Double))]
-      var pairs = Vector.empty[Pair]
-      var rep = 0
-      // run interleaved pairs while they fit the budget; the first pair's
-      // measured cost replaces the estimate for the rest
-      while (rep < maxReps && remaining > pairEstimate * 1.25 + 30) {
-        val p0 = elapsed
-        val lo = spawnWorker(loCores, corpus)
-        val hi = spawnWorker(hiCores, corpus)
-        samples :+= (loCores -> lo); samples :+= (hiCores -> hi)
-        pairs :+= Pair(lo._2, hi._2)
-        pairEstimate = math.max(elapsed - p0, 60.0)
-        rep += 1
-      }
-      if (rep < maxReps)
-        System.err.println(s"[bench] budget trimmed scaling to $rep/$maxReps pairs")
-
-      if (pairs.nonEmpty) {
-        val tags = classify(pairs, ratio, absLo, absHi)
-        val pairEffs = pairs.map(_.eff(ratio))
-        val quietEffs = pairEffs.zip(tags).collect { case (e, "quiet") => e }
-        // per-run quality (history + wall-display gating): quorum = 2/3 of
-        // attempted pairs (and at least 2) quiet, else limited/degraded
-        val quorum = math.max(2, (pairs.size * 2 + 2) / 3)
-        val runQuality =
-          if (quietEffs.size >= quorum) "ok"
-          else if (quietEffs.nonEmpty) "limited"
-          else "degraded"
-        val effThisRun =
-          if (quietEffs.nonEmpty) median(quietEffs) else median(pairEffs)
-        if (runQuality != "ok")
-          System.err.println(s"[bench] scaling window $runQuality: only " +
-            s"${quietEffs.size}/${pairs.size} quiet pairs (tags: ${tags.mkString(",")})")
-        val (n8, t8) = samples.filter(_._1 == loCores).map(_._2).minBy(_._2)
-        val (n32, t32) = samples.filter(_._1 == hiCores).map(_._2).minBy(_._2)
-        require(n8 == n32, s"scaling runs disagree: $n8 vs $n32")
-        val tp8 = n8 / t8
-        val tp32 = n32 / t32
-        val effCross = (tp32 / tp8) / ratio
-        val pairEffsJson = pairEffs.map(e => f"$e%.3f").mkString("[", ",", "]")
-        val tagsJson = tags.mkString("[\"", "\",\"", "\"]")
-        // history line FIRST (before any gating) so no rewrite can lose a
-        // measurement; per-pair walls recorded so the pool loader can
-        // re-apply the absolute gates exactly on future reads
-        Files.createDirectories(Paths.get("BENCH"))
-        Files.writeString(Paths.get("BENCH/HISTORY.jsonl"),
-          s"""{"ts_ms":${System.currentTimeMillis()},"eff":${f"$effThisRun%.3f"},
-             |"pairs":$pairEffsJson,"tags":$tagsJson,"quality":"$runQuality",
-             |"pipeline":"$pipelineVersion","turns":$turns,"triples":$n32,
-             |"cores_lo":$loCores,"cores_hi":$hiCores,"mode":"$master",
-             |"pair_lo":${pairs.map(p => f"${p.lo}%.2f").mkString("[", ",", "]")},
-             |"pair_hi":${pairs.map(p => f"${p.hi}%.2f").mkString("[", ",", "]")},
-             |"ambient_load":${f"$loadBefore%.2f"},"sec_lo":${f"$t8%.2f"},
-             |"sec_hi":${f"$t32%.2f"}}""".stripMargin.replaceAll("\n", "") + "\n",
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
-
-        // COMMITTED headline = median over the most recent `poolK` quiet
-        // pairs ACROSS runs (same pipeline version + corpus size, absolute
-        // gates re-applied) — one run rarely catches a quiet window 6
-        // consecutive times on this host, but quiet pairs accumulate.
-        // The pool includes this run's quiet pairs via the line above.
-        val pool = loadQuietPool(absLo, absHi, turns, poolK,
-          loCores, hiCores, master)
-        val poolEffs = pool.map(_._2)
-        val eff = if (poolEffs.nonEmpty) median(poolEffs) else median(pairEffs)
-        val effLooMin =
-          if (poolEffs.size > 1)
-            poolEffs.indices.map(i => median(poolEffs.patch(i, Nil, 1).toSeq)).min
-          else eff
-        val windowQuality =
-          if (poolEffs.size >= 4) "ok"
-          else if (poolEffs.nonEmpty) "limited"
-          else "degraded"
-
-        // walls keep-best: the displayed throughput rows come from the best
-        // host window on record — a worse-window run keeps contributing its
-        // quiet pairs to the pool but must not displace better-quality wall
-        // numbers (quality ok > limited > degraded, ties by quiet count).
-        // GRAFT_BENCH_FORCE_RESULT=1 overrides after a code change that
-        // invalidates the old measurement.
-        def qRank(q: String): Int =
-          q match { case "ok" => 2; case "limited" => 1; case _ => 0 }
-        val prevWallsQ = jsField(prevScalingJson, "walls_quality")
-          .orElse(jsField(prevScalingJson, "window_quality"))
-        val prevWallsQuiet = jsField(prevScalingJson, "walls_quiet_pairs")
-          .orElse(jsField(prevScalingJson, "quiet_pairs"))
-          .flatMap(_.toIntOption).getOrElse(0)
-        val prevWallFields = Seq("sec_lo", "sec_hi", "triples_per_sec_lo",
-          "triples_per_sec_hi", "triples").map(k => jsField(prevScalingJson, k))
-        val keepPrevWalls =
-          !sys.env.get("GRAFT_BENCH_FORCE_RESULT").contains("1") &&
-            prevWallFields.forall(_.isDefined) &&
-            prevWallsQ.exists { pq =>
-              qRank(pq) > qRank(runQuality) ||
-                (qRank(pq) == qRank(runQuality) && prevWallsQuiet > quietEffs.size)
-            }
-        val (wSecLo, wSecHi, wTpLo, wTpHi, wTriples, wallsQ, wallsQuiet) =
-          if (keepPrevWalls) {
-            System.err.println(s"[bench] keep-best walls: this window ($runQuality, " +
-              s"${quietEffs.size} quiet) is worse than the committed walls " +
-              s"(${prevWallsQ.get}, $prevWallsQuiet quiet) — wall/throughput " +
-              "rows carried forward; this run's quiet pairs still pool")
-            (prevWallFields(0).get.toDouble, prevWallFields(1).get.toDouble,
-              prevWallFields(2).get.toDouble, prevWallFields(3).get.toDouble,
-              prevWallFields(4).get.toLong, prevWallsQ.get, prevWallsQuiet)
-          } else (t8, t32, tp8, tp32, n32, runQuality, quietEffs.size)
-
-        val scalingJson =
-          s""","scaling":{"triples":$wTriples,"turns":$turns,
-             |"cores_lo":$loCores,"cores_hi":$hiCores,"mode":"$master",
-             |"sec_lo":${f"$wSecLo%.2f"},"sec_hi":${f"$wSecHi%.2f"},
-             |"triples_per_sec_lo":${f"$wTpLo%.0f"},"triples_per_sec_hi":${f"$wTpHi%.0f"},
-             |"efficiency":${f"$eff%.3f"},"quiet_pool":${poolEffs.size},
-             |"pool_k":$poolK,"pipeline":"$pipelineVersion",
-             |"efficiency_loo_min":${f"$effLooMin%.3f"},
-             |"window_quality":"$windowQuality",
-             |"efficiency_this_run":${f"$effThisRun%.3f"},
-             |"efficiency_pairs":$pairEffsJson,"pair_tags":$tagsJson,
-             |"this_run_quality":"$runQuality","quiet_pairs":${quietEffs.size},
-             |"walls_quality":"$wallsQ","walls_quiet_pairs":$wallsQuiet,
-             |"efficiency_cross_window":${f"$effCross%.3f"},
-             |"ambient_load_before":${f"$loadBefore%.2f"}}""".stripMargin.replaceAll("\n", "")
-        // always snapshot: the pooled headline is monotone-safe (a bad
-        // window contributes nothing but can't corrupt it)
-        snapshot(buildJson(results, scalingJson))
-        writeBaselineMd(master, loCores, hiCores, turns, wTriples,
-          wSecLo, wSecHi, wTpLo, wTpHi, wallsQ,
-          eff, effLooMin, poolEffs.size, poolK, windowQuality, effCross,
-          pairEffs, tags, runQuality, samples, loadBefore)
-      }
-    }
+    report.snapshot(document(Some(scaling)))
 
     if (spark != null) spark.stop()
-    emit()
-  }
-
-  /** BENCH/BASELINE.md writer. Preserves everything from the
-    * `## Measurement history` heading onward from the previous file (the
-    * curated narrative lives there and must survive rewrites).
-    */
-  private def writeBaselineMd(master: String, loCores: Int, hiCores: Int,
-      turns: Long, triples: Long, wSecLo: Double, wSecHi: Double,
-      wTpLo: Double, wTpHi: Double, wallsQ: String,
-      eff: Double, effLooMin: Double, poolSize: Int, poolK: Int,
-      windowQuality: String, effCross: Double,
-      pairEffs: Seq[Double], tags: Seq[String], runQuality: String,
-      samples: Seq[(Int, (Long, Double))], loadBefore: Double): Unit = {
-    def execs(c: Int) = math.max(c / 4, 1)
-    val cfg = (c: Int) =>
-      if (master == "lc") s"local-cluster[${execs(c)} executors × 4 cores, 4g each]"
-      else s"local[$c]"
-    // doubled leading pipe: stripMargin on the enclosing template treats a
-    // line's first '|' as the margin and would otherwise eat the table border
-    val sampleRows = samples.zipWithIndex.map { case ((c, (_, t)), i) =>
-      s"|| ${i / 2 + 1} | ${cfg(c)} | ${f"$t%.2f"} | ${tags(i / 2)} |"
-    }.mkString("\n")
-    val pairRows = pairEffs.zip(tags).map { case (e, tg) => f"$e%.3f ($tg)" }
-      .mkString(", ")
-    val md =
-      s"""# BENCH scaling evidence (north rule: N → 4N executors)
-         |
-         |Flagship pipeline: transcripts → CSVW triple mapper → two-stage
-         |dedup (map-side partial + final hash aggregate). Same
-         |materialized deterministic input ($turns turns, $triples distinct
-         |triples) at two cluster sizes: **${cfg(loCores)} vs
-         |${cfg(hiCores)}** — real executor JVMs via Spark's
-         |`local-cluster` master, so each executor brings its own heap and
-         |GC, exactly as 4× executors would on a real cluster. Every
-         |measurement runs in a fresh driver JVM; configurations are
-         |interleaved lo/hi/lo/hi; each worker warms once and reports the
-         |steady state a long job amortizes to.
-         |
-         |Headline per-query numbers (`BENCH/RESULT.json`) are the
-         |per-query MIN over `GRAFT_BENCH_HEADLINE_REPS` (default 2)
-         |in-session reps, with the cold first-rep time reported alongside
-         |(`queries_cold`) — the VM host's noise is one-sided (a
-         |steal/IO-wait spike only ever slows a query), so the min is the
-         |engine's time. Streaming queries remain the most window-sensitive
-         |(microbatch coordination amplifies host latency; state
-         |checkpoints go to tmpfs for the same reason).
-         |
-         || config | wall sec (best) | triples/sec |
-         ||---|---|---|
-         || ${cfg(loCores)} | ${f"$wSecLo%.2f"} | ${f"$wTpLo%.0f"} |
-         || ${cfg(hiCores)} | ${f"$wSecHi%.2f"} | ${f"$wTpHi%.0f"} |
-         |
-         |(wall/throughput rows from the best host window on record,
-         |quality: $wallsQ — a worse-window attempt contributes its quiet
-         |pairs to the pool below but never displaces these rows)
-         |
-         |**Scaling efficiency (N → 4N) = ${f"$eff%.3f"}** (target ≥ 0.8),
-         |the MEDIAN over the most recent $poolSize RULE-SELECTED QUIET
-         |pairs pooled ACROSS runs from `BENCH/HISTORY.jsonl` (cap $poolK;
-         |pool quality: **$windowQuality** — ok needs ≥ 4 quiet pairs).
-         |Each interleaved lo/hi pair shares one noise window, so its ratio
-         |is robust to the host's cross-window throughput drift; pairs are
-         |classified by executable rules (super-unity ⇒ contaminated,
-         |hi wall ≥ 1.2× run-best ⇒ throttled, lo wall ≥ 1.15× run-best ⇒
-         |contended, plus turn-scaled ABSOLUTE wall gates that catch
-         |uniformly-contended runs) and only QUIET pairs pool — one run
-         |rarely catches a quiet window 6 consecutive times on this host,
-         |but quiet evidence accumulates across attempts. Pool lines are
-         |keyed by pipeline version + corpus size, and the absolute gates
-         |are re-applied retroactively on read (per-pair walls are recorded
-         |in every history line going forward).
-         |
-         |This run's pairs ($runQuality): $pairRows.
-         |Leave-one-out robustness over the pooled quiet pairs: dropping
-         |any single one keeps the median ≥ ${f"$effLooMin%.3f"}. The
-         |config-wise-best (cross-window) ratio of THIS run is
-         |${f"$effCross%.3f"}, reported for reference only — its minima can
-         |come from different noise windows. Ambient host load before the
-         |run: ${f"$loadBefore%.2f"}.
-         |
-         |This run's samples (interleaved execution order):
-         |
-         || rep | config | wall sec | pair tag |
-         ||---|---|---|---|
-         |$sampleRows
-         |
-         |Round-1 note: the same pipeline measured 0.602 with a
-         |single-JVM `local[4]` vs `local[16]` proxy and a dedup plan
-         |that repartitioned before aggregating. Two changes closed the
-         |gap: (a) the dedup is now a group-only hash aggregate whose
-         |map-side partial dedups before the exchange — the shuffle
-         |carries ~distinct rows instead of every duplicate — and (b) the
-         |N→4N comparison uses real executor JVMs, so the high-end config
-         |isn't starved of per-core heap inside one fixed-size JVM.
-         |""".stripMargin
-    val prevHistory = {
-      val p = Paths.get("BENCH/BASELINE.md")
-      if (Files.exists(p)) {
-        val s = Files.readString(p)
-        val i = s.indexOf("## Measurement history")
-        if (i >= 0) "\n" + s.substring(i) else ""
-      } else ""
-    }
-    Files.createDirectories(Paths.get("BENCH"))
-    Files.writeString(Paths.get("BENCH/BASELINE.md"), md + prevHistory)
+    report.emit(watchdogFired = false)
   }
 }

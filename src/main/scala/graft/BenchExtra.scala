@@ -2,22 +2,22 @@ package graft
 
 /** Round-9 optimization harness (guide §1.4/§1.5): per-query noop-sink
   * isolation timings plus `.explain("formatted")` dumps, separate from the
-  * FROZEN driver-contract [[Bench]] main. Usage:
+  * [[Bench]] main. Usage:
   *
   *   sbt "runMain graft.BenchExtra time q1_agg g2_graph_canonicalize"
   *   sbt "runMain graft.BenchExtra explain plans/r09 before g2_graph_canonicalize"
   *   sbt "runMain graft.BenchExtra explain - q1_agg"
   *
-  * `time` runs each named query (all when none named) `GRAFT_EXTRA_REPS`
-  * (default 2) times against the noop sink — every column of every row
-  * computed, no sink cost — and prints one `name cold_s min_s` line per
-  * query. `explain` writes `<dir>/<name>_<tag>.txt` per query, or prints
+  * `time` runs each named query (all when none named) twice against the
+  * noop sink — every column of every row computed, no sink cost — and
+  * prints one `name cold_s min_s` line per query. `explain` writes `<dir>/<name>_<tag>.txt` per query, or prints
   * the plans to stdout when the dir is `-`. Building a streaming (str*)
   * query runs its stream, so explaining one also executes it. The session
   * is [[Bench]]'s (local[$SPARK_GRAFT_CPUS], AQE on, shuffle partitions =
   * 2×cores, tmpfs local dir) so timings are comparable.
   */
 object BenchExtra {
+  private val Reps = 2
   private val usage =
     "usage: graft.BenchExtra time [query...] | explain <dir> <tag> <query...> | explain - <query...>"
 
@@ -45,10 +45,9 @@ object BenchExtra {
     val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     mode match {
       case "time" =>
-        val reps = math.max(1, sys.env.getOrElse("GRAFT_EXTRA_REPS", "2").toInt)
         SparkEntry.streamFixture(spark, sfDir)
         queries.foreach { q =>
-          val times = (1 to reps).map { i =>
+          val times = (1 to Reps).map { i =>
             spark.sparkContext.setJobDescription(s"extra:${q.name} rep$i")
             val s0 = System.nanoTime()
             q.build(spark, sfDir).write.format("noop").mode("overwrite").save()

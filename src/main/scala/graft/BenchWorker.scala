@@ -1,40 +1,28 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** One isolated scaling measurement: fresh JVM per (cores) configuration so
   * successive runs don't inherit GC/code-cache state from each other —
   * measured order effects in a shared JVM distorted same-input runs by >2×.
-  * Spawned by [[Bench]]; prints one `WORKER_RESULT <triples> <seconds>` line.
+  * Spawned by [[Bench]] as `BenchWorker <cores> <corpus> [full|map]`;
+  * prints one `WORKER_RESULT <triples> <seconds>` line.
   */
 object BenchWorker {
 
+  private val CoresPerExecutor = 4
+  private val ExecMemMb = 4096
+
+  /** A LOCAL CLUSTER of cores/4 real executor JVMs with 4 cores and their
+    * own heap each — the faithful N vs 4N proxy (a real cluster scales
+    * memory and GC capacity with executor count; a single fixed-heap JVM
+    * starves per-core memory at the high end and under-reports scaling
+    * efficiency).
+    */
   def session(cores: Int): SparkSession = {
-    // GRAFT_BENCH_MASTER=lc runs a LOCAL CLUSTER: cores/4 real executor JVMs
-    // with 4 cores + their own heap each — the faithful N vs 4N proxy (a
-    // real cluster scales memory and GC capacity with executor count; a
-    // single fixed-heap JVM starves per-core memory at the high end and
-    // under-reports scaling efficiency).
-    val lc = sys.env.get("GRAFT_BENCH_MASTER").contains("lc")
-    val coresPerExec = 4
-    val execMemMb = sys.env.getOrElse("GRAFT_BENCH_EXEC_MEM_MB", "4096").toInt
-    val master =
-      if (lc) s"local-cluster[${math.max(cores / coresPerExec, 1)},$coresPerExec,$execMemMb]"
-      else s"local[$cores]"
-    // tmpfs shuffle dirs when available: local shuffles are disk-bound
-    // otherwise and the N-vs-4N comparison would measure the disk, not the
-    // engine (executors inherit spark.local.dir through the worker)
-    val localDir = {
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      if (java.nio.file.Files.isWritable(shm)) {
-        val d = shm.resolve("graft_spark_worker")
-        java.nio.file.Files.createDirectories(d)
-        Some(d.toString)
-      } else None
-    }
+    val executors = math.max(cores / CoresPerExecutor, 1)
     val b = SparkSession.builder()
-      .master(master)
+      .master(s"local-cluster[$executors,$CoresPerExecutor,$ExecMemMb]")
       .appName(s"graft-bench-worker-$cores")
       .config("spark.sql.shuffle.partitions", cores * 2)
       .config("spark.sql.adaptive.enabled", "true")
@@ -42,27 +30,17 @@ object BenchWorker {
       .config("spark.ui.enabled", "false")
       // the bench corpus compresses to ~70 MB: the 128 MB default split size
       // puts the ENTIRE scan in one task for every thread count, making the
-      // scaling comparison measure the split planner, not the engine. 2 MB
+      // scaling comparison measure the split planner, not the engine. Small
       // splits give both configs enough scan tasks (a real warehouse table
       // has millions of splits; config identical for both runs).
       .config("spark.sql.files.maxPartitionBytes", (1024 * 1024).toString)
       .config("spark.sql.files.openCostInBytes", (1024 * 1024).toString)
-    localDir.foreach(d => b.config("spark.local.dir", d))
-    if (lc) {
       // executor JVMs need the library classes (custom Catalyst expressions)
       // and the JDK17 module opens the driver gets from build.sbt
-      val addOpens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar"
-      ).map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-      b.config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-        .config("spark.executor.extraJavaOptions", addOpens)
-    }
+      .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
+      .config("spark.executor.extraJavaOptions", Bench.addOpens.mkString(" "))
+    // executors inherit spark.local.dir through the worker
+    Bench.tmpfsLocalDir("graft_spark_worker").foreach(d => b.config("spark.local.dir", d))
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
@@ -93,29 +71,19 @@ object BenchWorker {
   def main(args: Array[String]): Unit = {
     val cores = args(0).toInt
     val corpus = args(1)
-    val mode = if (args.length > 2) args(2) else "full"
-    if (mode == "gen") {
-      val turns = args(3).toLong
-      val s = session(cores)
-      graft.sources.TranscriptGen.transcripts(s, turns)
-        .repartition(256)
-        .write.mode("overwrite").parquet(corpus)
-      println(s"WORKER_RESULT ${s.read.parquet(corpus).count()} 0.0")
-      s.stop()
-      return
+    val run: SparkSession => Long = (if (args.length > 2) args(2) else "full") match {
+      case "full" => kgPipelineCount(_, corpus)
+      case "map" => mapOnlyCount(_, corpus)
+      case other => sys.error(s"unknown mode $other (full|map)")
     }
-    val noWarm = args.contains("nowarm")
-    val run: SparkSession => Long =
-      if (mode == "map") mapOnlyCount(_, corpus) else kgPipelineCount(_, corpus)
     val spark = session(cores)
     // warm JIT/codegen on identical work, then report the best of two
     // measurements — the steady state a long job amortizes to; host noise
-    // is one-sided, so in-worker best-of-2 plus the parent's interleaved
-    // reps + min filter tightens the estimator substantially (single
-    // measurements drifted the efficiency estimate by ±0.15 across windows)
-    if (!noWarm) run(spark)
-    val reps = if (noWarm) 1 else 2
-    val (n, dt) = (1 to reps).map { _ =>
+    // is one-sided, so in-worker best-of-2 tightens the estimator
+    // (single measurements drifted the efficiency estimate by ±0.15
+    // across windows)
+    run(spark)
+    val (n, dt) = (1 to 2).map { _ =>
       val t0 = System.nanoTime()
       val n = run(spark)
       (n, (System.nanoTime() - t0) / 1e9)

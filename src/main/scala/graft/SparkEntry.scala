@@ -168,6 +168,31 @@ object SparkEntry {
     dir
   }
 
+  /** Runs a suite query's finite `stream` to completion into the memory sink
+    * `name` — no-data batches off, `statePartitions` state partitions,
+    * tmpfs checkpoint — and returns that sink's table.
+    */
+  private def drainToMemory(s: SparkSession, name: String, outputMode: String,
+                            statePartitions: Int)(stream: => DataFrame): DataFrame = {
+    withNoDataBatchesOff(s) { withStatePartitions(s, statePartitions) {
+      withStreamCheckpoint { ckpt =>
+        val q = stream.writeStream.outputMode(outputMode).format("memory")
+          .option("checkpointLocation", ckpt)
+          .queryName(name).start()
+        // finally: a failure mid-stream must still stop the query BEFORE
+        // withStreamCheckpoint deletes the live checkpoint dir under it
+        try q.processAllAvailable() finally {
+          q.stop()
+          // the StateStore maintenance thread outlives the query and logs
+          // a stack trace against a stopped SparkEnv in shared-JVM
+          // harnesses
+          org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+        }
+      }
+    } }
+    s.table(name)
+  }
+
   private val streamFixtureCache = scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** Parquet snapshot of the transcript corpus for the streaming query,
@@ -1653,7 +1678,7 @@ object SparkEntry {
       val rows = t(s, d, "region").select(col("r_regionkey").cast("long"), col("r_name"))
         .collect().sortBy(_.getLong(0)).map(r => s"${r.getLong(0)},${r.getString(1)}")
       val csv = "# top comment\n# second comment\nkey,name\n" + rows.mkString("\n") + "\n"
-      val f = java.nio.file.Files.createTempFile("graft_a3", ".csv")
+      val f = tempDirUntilExit("graft_a3").resolve("a3.csv")
       java.nio.file.Files.writeString(f, csv)
       val ex = graft.sources.CsvDialectSource.readExact(s, f.toString,
         graft.model.DialectMeta(commentPrefix = Some("#"), skipRows = 2))
@@ -1835,7 +1860,7 @@ object SparkEntry {
 
     // ---- skipColumns (P1): physical column dropped, numbering intact
     QueryDef("p1_skip_columns", (s, d) => {
-      val tmp = java.nio.file.Files.createTempFile("graft_skipcols", ".csv")
+      val tmp = tempDirUntilExit("graft_skipcols").resolve("skipcols.csv")
       val rows = t(s, d, "region").select(col("r_regionkey").cast("long"), col("r_name"))
         .collect().sortBy(_.getLong(0))
         .map(r => s"pad;${r.getLong(0)};${r.getString(1)}")
@@ -1893,7 +1918,7 @@ object SparkEntry {
     // ---- HTML table scan (S2): fragment-selected table, th header row,
     // fixture-verified numbering (logical over data rows, source = tr index)
     QueryDef("s2_html_table", (s, d) => {
-      val tmp = java.nio.file.Files.createTempFile("graft_html", ".html")
+      val tmp = tempDirUntilExit("graft_html").resolve("regions.html")
       val rows = t(s, d, "region").select(col("r_regionkey").cast("long"), col("r_name"))
         .collect().sortBy(_.getLong(0))
         .map(r => s"<tr><td>${r.getLong(0)}</td><td>${r.getString(1)}</td></tr>")
@@ -1924,7 +1949,7 @@ object SparkEntry {
     // logical/source numbering — the expectation is region itself, so the
     // oracle reconstructs it in SQL
     QueryDef("s3_csv_dialect", (s, d) => {
-      val tmp = java.nio.file.Files.createTempFile("graft_dialect", ".csv")
+      val tmp = tempDirUntilExit("graft_dialect").resolve("dialect.csv")
       val rows = t(s, d, "region").select(col("r_regionkey").cast("long"), col("r_name"))
         .collect().sortBy(_.getLong(0))
         .map(r => s"${r.getLong(0)};${r.getString(1)}")
@@ -1951,22 +1976,22 @@ object SparkEntry {
       }
       def meta(url: String) = s"""{"url": "$url", "tableSchema": {"columns": [{"name": "a"}]}}"""
       // scenario 1: {+url}-metadata.json default template
-      val d1 = Files.createTempDirectory("graft_disc1"); val c1 = mkCsv(d1)
+      val d1 = tempDirUntilExit("graft_disc1"); val c1 = mkCsv(d1)
       Files.writeString(java.nio.file.Paths.get(c1.toString + "-metadata.json"),
         meta("http://example.org/disc_default"))
       // scenario 2: .well-known/csvm custom template
-      val d2 = Files.createTempDirectory("graft_disc2"); val c2 = mkCsv(d2)
+      val d2 = tempDirUntilExit("graft_disc2"); val c2 = mkCsv(d2)
       Files.createDirectories(d2.resolve(".well-known"))
       Files.writeString(d2.resolve(".well-known").resolve("csvm"), "custom.json\n")
       Files.writeString(d2.resolve("custom.json"), meta("http://example.org/disc_wellknown"))
       // scenario 3: user-supplied metadata wins over defaults
-      val d3 = Files.createTempDirectory("graft_disc3"); val c3 = mkCsv(d3)
+      val d3 = tempDirUntilExit("graft_disc3"); val c3 = mkCsv(d3)
       Files.writeString(java.nio.file.Paths.get(c3.toString + "-metadata.json"),
         meta("http://example.org/ignored"))
       val user = d3.resolve("user.json")
       Files.writeString(user, meta("http://example.org/disc_user"))
       // scenario 4: nothing found → synthesized TableGroup from the file
-      val d4 = Files.createTempDirectory("graft_disc4"); val c4 = mkCsv(d4)
+      val d4 = tempDirUntilExit("graft_disc4"); val c4 = mkCsv(d4)
       Seq(
         ("default_template",
           graft.sources.CsvwDiscover.forInput(c1.toString).tables.head.url),
@@ -2010,7 +2035,7 @@ object SparkEntry {
           }
         }]
       }"""
-      val f = java.nio.file.Files.createTempFile("graft_meta", ".json")
+      val f = tempDirUntilExit("graft_meta").resolve("metadata.json")
       java.nio.file.Files.writeString(f, meta)
       val group = CsvwJson.parseTableGroup(java.nio.file.Files.readString(f))
       Resolve.group(group).flatMap(t => t.columns.map(c =>
@@ -2146,25 +2171,9 @@ object SparkEntry {
     // ---- streaming ingest (file source → watermark window agg → memory sink)
     QueryDef("str1_stream_counts", (s, d) => {
       val tmp = streamFixture(s, d)
-      withNoDataBatchesOff(s) { withStatePartitions(s, 8) {
-        withStreamCheckpoint { ckpt =>
-          val q = graft.streaming.TranscriptStream.turnCounts(
-              graft.streaming.TranscriptStream.readStream(s, tmp))
-            .writeStream.outputMode("complete").format("memory")
-            .option("checkpointLocation", ckpt)
-            .queryName("graft_stream_counts").start()
-          // finally: a failure mid-stream must still stop the query BEFORE
-          // withStreamCheckpoint deletes the live checkpoint dir under it
-          try q.processAllAvailable() finally {
-            q.stop()
-            // the StateStore maintenance thread outlives the query and logs
-            // a stack trace against a stopped SparkEnv in shared-JVM
-            // harnesses
-            org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-          }
-        }
-      } }
-      s.table("graft_stream_counts").select(
+      drainToMemory(s, "graft_stream_counts", "complete", 8) {
+        TranscriptStream.turnCounts(TranscriptStream.readStream(s, tmp))
+      }.select(
         date_format(col("window.start"), "yyyy-MM-dd'T'HH:mm:ss").as("window_start"),
         col("conv_id"), col("turns"))
     },
@@ -2182,20 +2191,9 @@ object SparkEntry {
       val tmp = streamFixture(s, d)
       val dict = Seq(("e_13", "13"), ("e_42", "42"), ("e_87", "87"))
         .toDF("entity_id", "surface")
-      withNoDataBatchesOff(s) { withStatePartitions(s, 8) {
-        withStreamCheckpoint { ckpt =>
-          val q = graft.streaming.TranscriptStream.mentionCounts(
-              graft.streaming.TranscriptStream.readStream(s, tmp), dict)
-            .writeStream.outputMode("complete").format("memory")
-            .option("checkpointLocation", ckpt)
-            .queryName("graft_stream_mentions").start()
-          try q.processAllAvailable() finally {
-            q.stop()
-            org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-          }
-        }
-      } }
-      s.table("graft_stream_mentions").select(
+      drainToMemory(s, "graft_stream_mentions", "complete", 8) {
+        TranscriptStream.mentionCounts(TranscriptStream.readStream(s, tmp), dict)
+      }.select(
         date_format(col("window.start"), "yyyy-MM-dd'T'HH:mm:ss").as("window_start"),
         col("entity_id"), col("mentions"))
     },
@@ -2223,24 +2221,12 @@ object SparkEntry {
       // handful of windows str1 keeps): the per-key typed serde +
       // state-store ops are the batch's CPU, so parallelism should match
       // cores, not be sized down to a small key space
-      withNoDataBatchesOff(s) { withStatePartitions(s, 32) {
-        withStreamCheckpoint { ckpt =>
-          val trip = graft.streaming.TranscriptStream.triples(
-            graft.streaming.TranscriptStream.readStream(s, tmp), transcriptTable,
-            carryEventTime = true)
-          val q = graft.streaming.TranscriptStream.dedupedTriplesTtl(trip,
-              ttl = java.time.Duration.ofDays(365))
-            .toDF("subj", "pred", "obj")
-            .writeStream.outputMode("append").format("memory")
-            .option("checkpointLocation", ckpt)
-            .queryName("graft_stream_dedup").start()
-          try q.processAllAvailable() finally {
-            q.stop()
-            org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-          }
-        }
-      } }
-      s.table("graft_stream_dedup")
+      drainToMemory(s, "graft_stream_dedup", "append", 32) {
+        val trip = TranscriptStream.triples(TranscriptStream.readStream(s, tmp),
+          transcriptTable, carryEventTime = true)
+        TranscriptStream.dedupedTriplesTtl(trip, ttl = java.time.Duration.ofDays(365))
+          .toDF("subj", "pred", "obj")
+      }
     },
       s"$trCte SELECT DISTINCT subj, pred, obj FROM (\n$minimalTriplesSelect\n)"),
 
@@ -2250,22 +2236,10 @@ object SparkEntry {
     QueryDef("str3_stream_dedup_native", (s, d) => {
       val tmp = streamFixture(s, d)
       // same key cardinality as str2: parallelism matches cores
-      withNoDataBatchesOff(s) { withStatePartitions(s, 32) {
-        withStreamCheckpoint { ckpt =>
-          val trip = graft.streaming.TranscriptStream.triples(
-            graft.streaming.TranscriptStream.readStream(s, tmp), transcriptTable,
-            carryEventTime = true)
-          val q = graft.streaming.TranscriptStream.dedupedTriplesNative(trip)
-            .writeStream.outputMode("append").format("memory")
-            .option("checkpointLocation", ckpt)
-            .queryName("graft_stream_dedup_native").start()
-          try q.processAllAvailable() finally {
-            q.stop()
-            org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-          }
-        }
-      } }
-      s.table("graft_stream_dedup_native")
+      drainToMemory(s, "graft_stream_dedup_native", "append", 32) {
+        TranscriptStream.dedupedTriplesNative(TranscriptStream.triples(
+          TranscriptStream.readStream(s, tmp), transcriptTable, carryEventTime = true))
+      }
     },
       s"$trCte SELECT DISTINCT subj, pred, obj FROM (\n$minimalTriplesSelect\n)")))
 
