@@ -46,7 +46,9 @@ object Sampling {
     * sf0.1 for x6. `try_element_at` (NOT `element_at`, which raises on a
     * missing key under Spark 4's ANSI default) yields NULL for absent or
     * NULL strata, which `coalesce` routes to `defaultRate` exactly as the
-    * CASE chain's `otherwise` did.
+    * CASE chain's `otherwise` did. The stratum is cast to string, the
+    * map's key type: a non-string stratum (an integer column) would
+    * otherwise fail analysis with `MAP_FUNCTION_DIFF_TYPES` under ANSI mode.
     */
   def stratifiedSample(df: DataFrame, idCol: String, strataCol: Column,
                        rates: Map[String, Double],
@@ -57,7 +59,7 @@ object Sampling {
       if (rates.isEmpty) lit(defaultRate)
       else coalesce(try_element_at(
         map(rates.toSeq.sortBy(_._1).flatMap { case (s, r) =>
-          Seq(lit(s), lit(r)) }: _*), strataCol), lit(defaultRate))
+          Seq(lit(s), lit(r)) }: _*), strataCol.cast("string")), lit(defaultRate))
     df.filter(hashUnit(col(idCol)) < rate)
   }
 }

@@ -1,5 +1,6 @@
 package graft.materialize
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -47,6 +48,8 @@ object GraphWriter {
     writeLineage(spark, path, metrics)
   }
 
+  private val json = new ObjectMapper()
+
   /** One lineage row per committed part file, read from that file's parquet
     * footer alone: `rows` is the sum of its row-group row counts, `min_subj`
     * / `max_subj` come from the `subj` column statistics, `partition_id` is
@@ -66,14 +69,16 @@ object GraphWriter {
     spark.createDataFrame(lineage).coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$path.lineage")
     val total = lineage.map(_.rows).sum
+    val manifest = json.createObjectNode()
+      .put("path", path).put("rows", total).put("stage_complete", true)
     // run metrics (e.g. ValidateGate severity counts) ride in the manifest so
     // a resume can see whether the producing run was clean
-    val metricsJson =
-      if (metrics.isEmpty) ""
-      else metrics.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":$v""" }.mkString(""","metrics":{""", ",", "}")
-    val manifest = s"""{"path":"$path","rows":$total,"stage_complete":true$metricsJson}"""
-    Files.writeString(Paths.get(s"${dirOf(path)}/_MANIFEST_${nameOf(path)}.json"), manifest)
+    if (metrics.nonEmpty) {
+      val m = manifest.putObject("metrics")
+      metrics.toSeq.sortBy(_._1).foreach { case (k, v) => m.put(k, v) }
+    }
+    Files.writeString(Paths.get(s"${dirOf(path)}/_MANIFEST_${nameOf(path)}.json"),
+      json.writeValueAsString(manifest))
   }
 
   final case class PartLineage(partition_id: Int, rows: Long, min_subj: String, max_subj: String)

@@ -116,7 +116,7 @@ object HtmlTableSource {
       StructField("_row", LongType) :: StructField("_sourceRow", LongType) ::
       (1 to width).map(i => StructField(s"_c$i", StringType)).toList)
     CsvDialectSource.ExactResult(
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, math.max(rows.size / 10000, 1)), schema),
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, spark.sparkContext.defaultParallelism), schema),
       titles.drop(skipCols), comments = Nil)
   }
 

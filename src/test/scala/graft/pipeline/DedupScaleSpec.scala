@@ -3,7 +3,6 @@ package graft.pipeline
 import graft.functions.{AnnFunctions, DedupFunctions}
 import graft.link.ConnectedComponents
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -273,29 +272,8 @@ class DedupScaleSpec extends AnyFunSuite {
     // turns the small side into, the aggregate's shuffle stage, the
     // checkpoint). A per-round probe action or a second join would move it.
     val edges = (0 until 119).map(i => (f"n$i%04d", f"n${i + 1}%04d")).toDF("src", "dst")
-    val sc = spark.sparkContext
-    val (group, fence) = ("cc-job-pin", "cc-job-pin-fence")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    // listener events arrive in order: once the fence job's start is seen,
-    // every job the run started has been counted
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`fence`) => fenced.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "connected components")
-      try ConnectedComponents.run(spark, edges) finally sc.clearJobGroup()
-      sc.setJobGroup(fence, "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 44, s"${jobs.get} jobs")
+    val jobs = graft.mapper.TestSpark.jobsDuring(ConnectedComponents.run(spark, edges))
+    assert(jobs == 44, s"$jobs jobs")
   }
 
   test("fused SimHash64Expr is bit-identical to the HOF formulation") {

@@ -169,6 +169,17 @@ class GraphWriterSpec extends AnyFunSuite {
     assert(manifestRows(dir, "graph") == 602)
   }
 
+  test("manifest is valid JSON when the path holds a quote or a backslash") {
+    val dir = java.nio.file.Files.createTempDirectory("gw\"q\\b").toString
+    val path = s"$dir/graph"
+    GraphWriter.writeTriples(triples, path, metrics = Map("errors" -> 0L))
+    val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/_MANIFEST_graph.json")))
+    assert(m.get("path").asText == path)
+    assert(m.get("rows").asLong == 2)
+    assert(m.get("stage_complete").asBoolean && m.get("metrics").get("errors").asLong == 0)
+  }
+
   test("stage() resumes from manifest without recompute") {
     val dir = java.nio.file.Files.createTempDirectory("gw2").toString
     var computes = 0
@@ -270,6 +281,115 @@ class CsvDialectSourceSpec extends AnyFunSuite {
     val rows = res.rows.collect().sortBy(_.getLong(0))
     assert(rows.map(_.getString(2)).toSeq == Seq("r1é", "r2"))
     assert(rows.map(_.getLong(1)).toSeq == Seq(2L, 3L))
+  }
+
+  private def tempCsv(name: String, lines: Seq[String]): String = {
+    val f = java.nio.file.Files.createTempFile(name, ".csv")
+    java.nio.file.Files.writeString(f, lines.mkString("\n") + "\n")
+    f.toString
+  }
+
+  /** Records per partition of the line scan readExact runs over `path`. */
+  private def splitSizes(path: String): Seq[Int] =
+    spark.sparkContext.textFile(path, spark.sparkContext.defaultParallelism)
+      .glom().collect().map(_.length).toSeq
+
+  /** Rows as (_row, _sourceRow, cells), in logical order. */
+  private def rowsOf(res: CsvDialectSource.ExactResult): Seq[(Long, Long, Seq[String])] =
+    res.rows.collect().sortBy(_.getLong(0)).toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.toSeq.drop(2).map(_.asInstanceOf[String])))
+
+  /** `each_row` over `;`-separated, quote-free lines, one record per line,
+    * with default trim and `#` as the only comment prefix: (rows, header
+    * titles, comments), numbered sequentially.
+    */
+  private def sequentialExpectation(lines: Seq[String], skipRows: Int, headerRows: Int,
+      skipColumns: Int, skipBlank: Boolean) = {
+    val rows = Seq.newBuilder[(Long, Long, Seq[String])]
+    val headers = Seq.newBuilder[Seq[String]]
+    val comments = Seq.newBuilder[String]
+    var row = 0L
+    for ((l, i) <- lines.zipWithIndex) {
+      val n = i + 1L
+      def cells = l.split(";", -1).toSeq.drop(skipColumns).map(_.trim)
+      if (n <= skipRows || l.startsWith("#")) {
+        val t = l.trim
+        val v = if (t.startsWith("#")) t.drop(1).trim else t
+        if (v.nonEmpty) comments += v
+      } else if (n <= skipRows + headerRows) headers += cells
+      else if (!skipBlank || cells.exists(_.nonEmpty)) { row += 1; rows += ((row, n, cells)) }
+    }
+    val hs = headers.result()
+    val titles = (0 until hs.map(_.length).maxOption.getOrElse(0)).toList
+      .map(c => hs.flatMap(_.lift(c)).filter(_.nonEmpty).toList)
+    val rs = rows.result()
+    val width = (titles.length +: rs.map(_._3.length)).max
+    (rs.map { case (r, n, c) => (r, n, c.padTo(width, "")) }, titles, comments.result().toList)
+  }
+
+  test("readExact over a split scan equals a sequential each_row") {
+    val rnd = new scala.util.Random(5)
+    def dataLine(i: Int): String = rnd.nextInt(12) match {
+      case 0 => s"# data note $i"
+      case 1 => ""
+      case 2 => " ; ;"
+      case 3 => s"  # not a comment $i;x"
+      case _ => (0 until 2 + rnd.nextInt(6)).map(c => if (rnd.nextInt(5) == 0) " " else s" v${i}_$c ")
+        .mkString(";")
+    }
+    val lines = Seq("# skipped note", "plain skipped line", "",
+      "skip;id; name ;extra", "#  header-region note", "skip;ID;;EXTRA;more") ++
+      (1 to 2000).map(dataLine)
+    val path = tempCsv("dialect_split", lines)
+    assert(splitSizes(path).length >= 4, "the scan must be split across every core")
+    for ((skip, headers) <- Seq((3, 3), (0, 2), (2, 0))) {
+      val dialect = DialectMeta(delimiter = ";", skipRows = skip, headerRowCount = Some(headers),
+        commentPrefix = Some("#"), skipBlankRows = true, skipColumns = 1)
+      val res = CsvDialectSource.readExact(spark, path, dialect)
+      val (rows, titles, comments) = sequentialExpectation(lines, skip, headers, 1, skipBlank = true)
+      assert(rows.length > 1000)
+      assert(rowsOf(res) == rows, s"skipRows=$skip headerRowCount=$headers")
+      assert(res.headerTitles == titles)
+      assert(res.comments == comments)
+      assert(res.rows.columns.length == 2 + rows.head._3.length)
+    }
+  }
+
+  test("readExact: a header region spread over one-record splits") {
+    // line lengths 12/10/10/8 put one record in each of the 4 byte splits
+    val lines = Seq("# top notes", "id;name;x", "ID;NAME;X", "1;ann;x")
+    val path = tempCsv("dialect_tiny", lines)
+    assert(splitSizes(path) == Seq(1, 1, 1, 1))
+    val res = CsvDialectSource.readExact(spark, path,
+      DialectMeta(delimiter = ";", skipRows = 1, headerRowCount = Some(2), commentPrefix = Some("#")))
+    assert(res.headerTitles == List(List("id", "ID"), List("name", "NAME"), List("x", "X")))
+    assert(res.comments == List("top notes"))
+    assert(rowsOf(res) == Seq((1L, 4L, Seq("1", "ann", "x"))))
+  }
+
+  test("readExact: an open quote in the last split still numbers records") {
+    val lines = Seq("id;note") ++ (1 to 1000).map(i => s"r$i;plain") ++
+      Seq("q;\"first half", "second half\"", "last;row")
+    val path = tempCsv("dialect_late", lines)
+    val sizes = splitSizes(path)
+    assert(sizes.length >= 4 && sizes.last >= 3, sizes.toString)
+    val rows = rowsOf(CsvDialectSource.readExact(spark, path, DialectMeta(delimiter = ";")))
+    assert(rows.length == 1002)
+    assert(rows(1000) == ((1001L, 1002L, Seq("q", "first half\nsecond half"))))
+    // the record after the two-line one is record 1003, on line 1004
+    assert(rows(1001) == ((1002L, 1003L, Seq("last", "row"))))
+  }
+
+  test("readExact on a default-framing file runs one job; rows runs none until used") {
+    val lines = Seq("# note", "id;name") ++ (1 to 500).map(i => s"$i;n$i") ++ Seq("", "# tail note")
+    val path = tempCsv("dialect_jobs", lines)
+    val dialect = DialectMeta(delimiter = ";", commentPrefix = Some("#"), skipRows = 1)
+    import graft.mapper.TestSpark.jobsDuring
+    var res: CsvDialectSource.ExactResult = null
+    assert(jobsDuring { res = CsvDialectSource.readExact(spark, path, dialect) } == 1)
+    assert(jobsDuring(res.rows.schema) == 0)
+    assert(res.comments == List("note", "tail note"))
+    assert(jobsDuring(assert(res.rows.collect().length == 501)) == 1)
   }
 }
 

@@ -89,6 +89,17 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(math.abs(byLang("de") / 75000.0 - 0.1) < 0.03, byLang)
   }
 
+  test("stratified sampling: an integer stratum column probes the string-keyed rates") {
+    import graft.functions.Sampling
+    val docs = spark.range(0, 1000, 1, 4).selectExpr("id AS doc_id", "CAST(id % 3 AS INT) AS bucket")
+    val kept = Sampling.stratifiedSample(docs, "doc_id", col("bucket"),
+      Map("0" -> 1.0, "1" -> 0.0), 0.5).collect()
+    val byBucket = kept.groupBy(_.getInt(1)).map { case (b, rs) => b -> rs.length }
+    assert(byBucket(0) == 334 && !byBucket.contains(1), byBucket)
+    // bucket 2 has no rate: the default applies
+    assert(byBucket(2) > 100 && byBucket(2) < 233, byBucket)
+  }
+
   test("stratified sampling: derived stratum evaluated once; map probe == CASE chain") {
     import graft.functions.{Sampling, TextFunctions}
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
