@@ -407,13 +407,13 @@ object SparkEntry {
 
     // the north-star composition end-to-end: transcript triples → mention
     // detection (broadcast dict) → STAR candidate edges (Σk, not Σk² — hot
-    // entities stay linear) → iterative connected components → subjects
+    // entities stay linear) → connected components → subjects
     // rewritten to their component's canonical (lexicographic-min) URN →
     // re-dedup. Each transcript text '{"k": N}' holds exactly ONE number
     // token, so a turn links to at most one entity and the components are
     // exactly the per-surface mention groups — which is what lets the
     // oracle state the canonical map in closed form (min URN per surface)
-    // while the Spark side still runs the full generic CC iteration
+    // while the Spark side still runs the generic ConnectedComponents
     QueryDef("g2_graph_canonicalize", (s, d) => {
       import s.implicits._
       val dict = Seq(("e_13", "13"), ("e_42", "42"), ("e_87", "87"),
@@ -536,9 +536,9 @@ object SparkEntry {
       val m = EntityLink.mentions(docs, dict, "doc_id", "text")
         .select(col("doc_id").cast("string").as("doc_id"), col("entity_id"))
       val edges = EntityLink.candidateEdges(m, "doc_id")
-      // iterative tiny-graph rounds: size the per-round shuffle to the
-      // component count, not the batch default (same sizing note as the
-      // streaming state partitions)
+      // tiny graph: size CC's shuffles (the edge dedup, and the rounds of
+      // a graph too big for the driver) to the component count, not the
+      // batch default (same sizing note as the streaming state partitions)
       withStatePartitions(s, 8) { ConnectedComponents.run(s, edges) }
     },
       """WITH RECURSIVE dict(entity_id, surface) AS (VALUES

@@ -59,7 +59,6 @@ object Multimodal {
     * results are visually and statistically checkable.
     */
   def pngBytesReal(width: Int, height: Int, seed: Int): Array[Byte] = {
-    imageIoInMemory
     val img = new java.awt.image.BufferedImage(width, height,
       java.awt.image.BufferedImage.TYPE_INT_RGB)
     val row = new Array[Int](width)
@@ -76,21 +75,26 @@ object Multimodal {
       img.setRGB(0, y, width, 1, row, 0, width)
       y += 1
     }
-    val out = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", out)
-    out.toByteArray
+    encodePng(img)
   }
 
-  /** ImageIO wraps every read/write in a DISK-backed stream cache by
-    * default (a temp file created and deleted per image). The pixel legs
-    * here run entirely on in-memory byte arrays, so flip the JVM-global
-    * cache to memory once (guide §1.2 per-task work): two temp-file
-    * round-trips per image disappear and the encoded bytes are identical —
-    * only the staging location changes. Lazy so the static setter runs
-    * once per executor JVM, on first use inside the task.
-    */
-  private lazy val imageIoInMemory: Unit =
-    javax.imageio.ImageIO.setUseCache(false)
+  // ImageIO's stream factories stage every read/write in a temp file
+  // unless the JVM-global `ImageIO.setUseCache(false)` is set, which would
+  // change every other ImageIO user in the process. These two build the
+  // memory-cached streams themselves: no temp file, the same bytes.
+
+  /** Decode an ImageIO-readable payload; `null` when no reader accepts it. */
+  private def decodeImage(b: Array[Byte]): java.awt.image.BufferedImage =
+    javax.imageio.ImageIO.read(new javax.imageio.stream.MemoryCacheImageInputStream(
+      new java.io.ByteArrayInputStream(b)))
+
+  /** Encode as PNG; the stream is closed (flushed) before the bytes are taken. */
+  private def encodePng(img: java.awt.image.RenderedImage): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bytes)
+    try javax.imageio.ImageIO.write(img, "png", out) finally out.close()
+    bytes.toByteArray
+  }
 
   /** Real pixel resampling: decode a complete PNG (or any ImageIO-readable
     * payload), bilinear-resample to (ow, oh) on a `Graphics2D`, re-encode as
@@ -101,8 +105,7 @@ object Multimodal {
     */
   private[graft] def resamplePng(b: Array[Byte], ow: Int, oh: Int): Option[Array[Byte]] =
     try {
-      imageIoInMemory
-      val src = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b))
+      val src = decodeImage(b)
       if (src == null) None
       else {
         val dst = new java.awt.image.BufferedImage(ow, oh,
@@ -113,9 +116,7 @@ object Multimodal {
             java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
           g.drawImage(src, 0, 0, ow, oh, null)
         } finally g.dispose()
-        val out = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(dst, "png", out)
-        Some(out.toByteArray)
+        Some(encodePng(dst))
       }
     } catch { case _: Exception => None }
 
@@ -608,9 +609,7 @@ object Multimodal {
             val corner =
               if (ow == w && oh == h)
                 try {
-                  imageIoInMemory
-                  val img = javax.imageio.ImageIO.read(
-                    new java.io.ByteArrayInputStream(emitted))
+                  val img = decodeImage(emitted)
                   if (img == null) None else Some(img.getRGB(0, 0) & 0xff)
                 } catch { case _: Exception => None }
               else None

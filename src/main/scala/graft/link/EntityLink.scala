@@ -1,7 +1,9 @@
 package graft.link
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Entity linking over emitted text (north_star: "batched mention-detection +
   * entity-link scoring via broadcast-dictionary hash joins"). No analog in
@@ -90,49 +92,110 @@ object EntityLink {
       .dropDuplicates()
 }
 
-/** Iterative connected components over an edge DataFrame — hand-rolled (no
-  * GraphX), deterministic, checkpointed per iteration so the plan lineage
-  * stays bounded (north_star "canonicalization through iterative
-  * connected-components").
+/** Connected components over an edge DataFrame — hand-rolled (no GraphX),
+  * deterministic (north_star "canonicalization through iterative
+  * connected-components"). Every node is labelled with its component's
+  * minimum member id in Spark's string order (binary UTF-8, i.e. Unicode
+  * code point order — not `String.compareTo`'s UTF-16 order, which differs
+  * once ids hold supplementary-plane characters).
   *
-  * Algorithm: min-label propagation *plus pointer jumping* — each round a
-  * node takes the minimum of (its label, its neighbors' labels, its label's
-  * label). The pointer-jump term halves label-chain depth every round when
-  * ids increase along a chain, so such a path of length L converges in
-  * O(log L) rounds instead of the O(L) of plain propagation (round 1 was
-  * plain propagation with a silent 20-round cap — a 21-hop chain got wrong
-  * labels with no error). Ids in random order along a long path leave local
-  * minima that the jump cannot skip: a 300-node path with shuffled ids
-  * takes 50–180 rounds. Non-convergence within `maxIterations` throws
-  * rather than returning silently wrong labels.
+  * Null rule: an edge with a null `src` or `dst` is dropped before anything
+  * else, so no null id is labelled and a null never joins two components.
+  * A node seen only on such edges gets no label.
   *
-  * Scale notes: each round is ONE join and ONE aggregate on the node-id
-  * key. The neighbor leg and the pointer-jump leg both feed the same
-  * decomposable `min`, so they share one join, one exchange and one
-  * aggregate. The round's only action is its own eager `localCheckpoint`,
-  * which truncates lineage and, through `Dataset.observe`, counts the nodes
-  * whose label changed — no separate convergence probe. Sharing one join
-  * matters because of checkpoint size estimates: a checkpoint inherits its
-  * source plan's estimate and a join's estimate is the product of its
-  * inputs', so the estimate squares every round (GiBs for ~15 k labels
-  * after five rounds). The planner then shuffles both sides of every join
-  * over checkpoints, and only AQE, from the shuffles' real sizes, demotes
-  * the join to a broadcast — each join costs its own shuffles. Past ~20
-  * rounds the estimate runs to numbers of thousands of digits whose
-  * arithmetic alone stalls planning, so every checkpoint here drops its
-  * estimate: the planner sees an unknown size (a shuffle join, as before)
-  * and AQE still picks the strategy from real sizes. Hot components are
-  * skewed keys covered by AQE skew handling.
+  * Two legs, chosen by the size of the symmetric edge set. Its checkpoint
+  * observes the UTF-8 byte total of its ids (`Dataset.observe`, no extra
+  * job):
+  *
+  *  - Local leg: when that total is at most 1/32 of the driver's maximum
+  *    heap, one more job collects the edges and a union-find on the driver
+  *    labels every node in one pass. At the sizes the pipelines meet (~15 k
+  *    edges) CC cost is per-job overhead, not rows, so this replaces every
+  *    round of the loop below. The labels come back as a relation over an
+  *    RDD with no size estimate — the shape of the loop's last checkpoint —
+  *    so downstream joins plan exactly as they do after the loop (an exact
+  *    local size would make the planner broadcast the canonical map).
+  *  - Distributed leg, for edge sets over the bound: min-label propagation
+  *    *plus pointer jumping*, checkpointed every round so the plan lineage
+  *    stays bounded. Each round a node takes the minimum of (its label, its
+  *    neighbors' labels, its label's label). The pointer-jump term halves
+  *    label-chain depth every round when ids increase along a chain, so such
+  *    a path of length L converges in O(log L) rounds instead of the O(L)
+  *    of plain propagation. Ids in random order along a long path leave
+  *    local minima that the jump cannot skip: a 300-node path with shuffled
+  *    ids takes 50–180 rounds. Non-convergence within `maxIterations` throws
+  *    rather than returning silently wrong labels.
+  *
+  * Scale notes (distributed leg): each round is ONE join and ONE aggregate
+  * on the node-id key. The neighbor leg and the pointer-jump leg both feed
+  * the same decomposable `min`, so they share one join, one exchange and
+  * one aggregate. The round's only action is its own eager
+  * `localCheckpoint`, which truncates lineage and, through
+  * `Dataset.observe`, counts the nodes whose label changed — no separate
+  * convergence probe. Sharing one join matters because of checkpoint size
+  * estimates: a checkpoint inherits its source plan's estimate and a join's
+  * estimate is the product of its inputs', so the estimate squares every
+  * round (GiBs for ~15 k labels after five rounds). The planner then
+  * shuffles both sides of every join over checkpoints, and only AQE, from
+  * the shuffles' real sizes, demotes the join to a broadcast — each join
+  * costs its own shuffles. Past ~20 rounds the estimate runs to numbers of
+  * thousands of digits whose arithmetic alone stalls planning, so every
+  * checkpoint here drops its estimate: the planner sees an unknown size (a
+  * shuffle join, as before) and AQE still picks the strategy from real
+  * sizes. Hot components are skewed keys covered by AQE skew handling.
   */
 object ConnectedComponents {
 
   /** @param edges (src, dst) string columns
     * @return (id, component) where component = min node id in the component
     */
-  def run(spark: SparkSession, edges: DataFrame, maxIterations: Int = 50): DataFrame = {
-    val sym = checkpoint(edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .dropDuplicates())
+  def run(spark: SparkSession, edges: DataFrame, maxIterations: Int = 50): DataFrame =
+    run(spark, edges, maxIterations, Runtime.getRuntime.maxMemory / 32)
+
+  /** [[run]] with the local leg's byte bound explicit: 0 forces the loop on
+    * any non-empty edge set. */
+  private[graft] def run(spark: SparkSession, edges: DataFrame, maxIterations: Int,
+                         localBytes: Long): DataFrame = {
+    val e = edges.filter(col("src").isNotNull && col("dst").isNotNull)
+    val size = new Observation()
+    val sym = checkpoint(e.select(col("src"), col("dst"))
+      .union(e.select(col("dst").as("src"), col("src").as("dst")))
+      .dropDuplicates()
+      .observe(size, coalesce(sum(octet_length(col("src")) + octet_length(col("dst"))), lit(0L))
+        .as("bytes")))
+    if (size.get("bytes").asInstanceOf[Long] <= localBytes) unionFind(spark, sym)
+    else propagate(sym, maxIterations)
+  }
+
+  /** The local leg: one side of every symmetric edge pair (self-loops kept,
+    * so their node is labelled) through a union-find whose roots keep their
+    * set's minimum member. */
+  private def unionFind(spark: SparkSession, sym: DataFrame): DataFrame = {
+    val index = scala.collection.mutable.HashMap.empty[String, Int]
+    val parent = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val lowest = scala.collection.mutable.ArrayBuffer.empty[String] // read at roots only
+    def node(v: String): Int =
+      index.getOrElseUpdate(v, { parent += parent.length; lowest += v; parent.length - 1 })
+    def find(v: Int): Int = {
+      var i = v
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    sym.filter(col("src") <= col("dst")).collect().foreach { r =>
+      val (a, b) = (find(node(r.getString(0))), find(node(r.getString(1))))
+      if (a != b) {
+        parent(b) = a
+        if (UTF8String.fromString(lowest(b)).compareTo(UTF8String.fromString(lowest(a))) < 0)
+          lowest(a) = lowest(b)
+      }
+    }
+    val rows = index.toSeq.map { case (v, i) => Row(v, lowest(find(i))) }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, spark.sparkContext.defaultParallelism),
+      StructType(Seq(StructField("id", StringType), StructField("component", StringType))))
+  }
+
+  /** The distributed leg: the per-round loop over the checkpointed `sym`. */
+  private def propagate(sym: DataFrame, maxIterations: Int): DataFrame = {
     // neighbor requests: v asks for label(src) of each neighbor src. The
     // typed-null `old` keeps the union two-legged; max() ignores nulls.
     val neighbors = sym.select(col("src").as("key"), col("dst").as("id"),

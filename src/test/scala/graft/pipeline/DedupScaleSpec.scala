@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.functions.{AnnFunctions, DedupFunctions}
 import graft.link.ConnectedComponents
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -174,12 +175,20 @@ class DedupScaleSpec extends AnyFunSuite {
     assert(capped.size == 1)
   }
 
+  /** CC labels on each leg: the default bound (every graph here is small,
+    * so the driver-side union-find) and a bound of 0 (the per-round loop). */
+  private def ccLegs(edges: DataFrame, maxIterations: Int = 50): Seq[(String, Array[(String, String)])] =
+    Seq("local" -> ConnectedComponents.run(spark, edges, maxIterations),
+      "loop" -> ConnectedComponents.run(spark, edges, maxIterations, localBytes = 0L))
+      .map { case (leg, cc) => leg -> cc.as[(String, String)].collect() }
+
   test("connected components: 120-node path converges via pointer jumping") {
-    // plain min-label propagation needs 119 rounds; the 50-iteration budget
-    // is only enough because label chains halve each round
+    // plain min-label propagation needs 119 rounds; the loop's 50-iteration
+    // budget is only enough because label chains halve each round
     val edges = (0 until 119).map(i => (f"n$i%04d", f"n${i + 1}%04d")).toDF("src", "dst")
-    val cc = ConnectedComponents.run(spark, edges).as[(String, String)].collect()
-    assert(cc.length == 120 && cc.forall(_._2 == "n0000"))
+    ccLegs(edges).foreach { case (leg, cc) =>
+      assert(cc.length == 120 && cc.forall(_._2 == "n0000"), leg)
+    }
   }
 
   test("connected components: star graph converges within ONE iteration (init folds round one)") {
@@ -188,15 +197,15 @@ class DedupScaleSpec extends AnyFunSuite {
     // the loop starts and the single allowed iteration is just the
     // convergence confirmation — the round-8 identity init needed two
     val edges = (1 to 50).map(i => ("hub000", f"m$i%03d")).toDF("src", "dst")
-    val cc = ConnectedComponents.run(spark, edges, maxIterations = 1)
-      .as[(String, String)].collect()
-    assert(cc.length == 51 && cc.forall(_._2 == "hub000"), cc.take(5).mkString(","))
+    ccLegs(edges, maxIterations = 1).foreach { case (leg, cc) =>
+      assert(cc.length == 51 && cc.forall(_._2 == "hub000"), s"$leg: ${cc.take(5).mkString(",")}")
+    }
   }
 
   test("connected components fails loudly when the iteration budget is too small") {
     val edges = (0 until 40).map(i => (f"n$i%04d", f"n${i + 1}%04d")).toDF("src", "dst")
     val ex = intercept[IllegalArgumentException] {
-      ConnectedComponents.run(spark, edges, maxIterations = 2)
+      ConnectedComponents.run(spark, edges, maxIterations = 2, localBytes = 0L)
     }
     assert(ex.getMessage.contains("did not converge"))
   }
@@ -249,31 +258,64 @@ class DedupScaleSpec extends AnyFunSuite {
   test("connected components: labels equal each component's minimum on seeded random graphs") {
     Seq(11L, 12L, 13L).foreach { seed =>
       val edges = randomGraph(seed)
-      // shuffled ids along a path defeat pointer jumping (see the
-      // ConnectedComponents scaladoc), so the budget is the plain
-      // propagation bound: one round per hop of the longest path, plus one
-      val got = ConnectedComponents.run(spark, edges.toDF("src", "dst"), maxIterations = 300)
-        .as[(String, String)].collect()
       val want = unionFindMin(edges)
-      assert(got.length == want.size, s"seed $seed: one label per node")
-      assert(got.toMap == want, s"seed $seed")
+      // shuffled ids along a path defeat pointer jumping (see the
+      // ConnectedComponents scaladoc), so the loop's budget is the plain
+      // propagation bound: one round per hop of the longest path, plus one
+      ccLegs(edges.toDF("src", "dst"), maxIterations = 300).foreach { case (leg, got) =>
+        assert(got.length == want.size, s"seed $seed, $leg: one label per node")
+        assert(got.toMap == want, s"seed $seed, $leg")
+      }
     }
   }
 
   test("connected components of an empty edge set is empty") {
-    // convergence is read from the checkpoint's observed metrics, which must
-    // arrive even when no task sees a row
-    assert(ConnectedComponents.run(spark, Seq.empty[(String, String)].toDF("src", "dst")).isEmpty)
+    // the leg is chosen and convergence read from the checkpoints' observed
+    // metrics, which must arrive even when no task sees a row
+    ccLegs(Seq.empty[(String, String)].toDF("src", "dst")).foreach { case (leg, cc) =>
+      assert(cc.isEmpty, leg)
+    }
+  }
+
+  test("connected components: labels are minimal in binary UTF-8 order") {
+    // U+FFFD sorts after the surrogate pair of U+1F600 in UTF-16
+    // (String.compareTo) but before it in UTF-8 bytes, Spark's string order
+    val (bmp, astral) = ("\uFFFDx", "\uD83D\uDE00y")
+    val edges = Seq((astral, bmp), (astral, "\uFFFEz")).toDF("src", "dst")
+    ccLegs(edges).foreach { case (leg, cc) =>
+      assert(cc.toMap == Map(bmp -> bmp, astral -> bmp, "\uFFFEz" -> bmp), leg)
+    }
+  }
+
+  test("connected components drop edges with a null endpoint") {
+    // a null touching a and z must neither merge them nor get a label
+    val edges = Seq(("a", null), (null, "z"), ("a", "b"), ("p1", "p2"), ("p3", "p2"))
+      .toDF("src", "dst")
+    ccLegs(edges).foreach { case (leg, cc) =>
+      assert(cc.toMap == Map("a" -> "a", "b" -> "a", "p1" -> "p1", "p2" -> "p1", "p3" -> "p1"),
+        s"$leg: ${cc.mkString(",")}")
+    }
   }
 
   test("connected components: job count on the 120-node path is pinned") {
-    // 44 = 2 checkpoints before the loop (a shuffle stage + the checkpoint
-    // each) + 8 rounds × 5 (the join's two shuffle stages, the broadcast AQE
-    // turns the small side into, the aggregate's shuffle stage, the
-    // checkpoint). A per-round probe action or a second join would move it.
+    // the loop (bound 0): 44 = 2 checkpoints before the loop (a shuffle
+    // stage + the checkpoint each) + 8 rounds × 5 (the join's two shuffle
+    // stages, the broadcast AQE turns the small side into, the aggregate's
+    // shuffle stage, the checkpoint). A per-round probe action or a second
+    // join would move it.
+    val edges = (0 until 119).map(i => (f"n$i%04d", f"n${i + 1}%04d")).toDF("src", "dst")
+    val jobs = graft.mapper.TestSpark.jobsDuring(
+      ConnectedComponents.run(spark, edges, maxIterations = 50, localBytes = 0L))
+    assert(jobs == 44, s"$jobs jobs")
+  }
+
+  test("connected components: local-leg job count on the 120-node path is pinned") {
+    // 3 = the symmetric edge checkpoint (a shuffle stage + the checkpoint,
+    // which also observes the byte total) + the collect; the labels are a
+    // lazy relation over the driver's rows
     val edges = (0 until 119).map(i => (f"n$i%04d", f"n${i + 1}%04d")).toDF("src", "dst")
     val jobs = graft.mapper.TestSpark.jobsDuring(ConnectedComponents.run(spark, edges))
-    assert(jobs == 44, s"$jobs jobs")
+    assert(jobs == 3, s"$jobs jobs")
   }
 
   test("fused SimHash64Expr is bit-identical to the HOF formulation") {

@@ -939,6 +939,12 @@ class FunctionsSpec extends AnyFunSuite {
     assert(again(0).payload.sameElements(big.payload))
   }
 
+  test("resamplePng leaves ImageIO's JVM-global stream cache setting alone") {
+    val png = Multimodal.resamplePng(Multimodal.pngBytesReal(20, 10, seed = 1), 8, 4)
+    assert(png.exists(p => Multimodal.decodeHeader(p) == (("image", 8, 4, 1))))
+    assert(javax.imageio.ImageIO.getUseCache)
+  }
+
   test("reencode uses real pixels when the plan carries payloads") {
     val payload = Multimodal.pngBytesReal(64, 64, seed = 3)
     val plan = Seq((5L, 16, 16, payload))
