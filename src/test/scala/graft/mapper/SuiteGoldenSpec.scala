@@ -14,13 +14,36 @@ import java.nio.file.{Files, Paths}
   * `be_equivalent_graph` check the reference suite performs. Unlike the
   * hand-transcribed per-family golden specs, nothing here is copied by
   * hand: a transcription error is impossible.
+  *
+  * The family cases (Turtle and JSON, both modes), test232 and the
+  * foreign-key-clean case compare against the reference's own files, so
+  * they need that directory and are canceled (not passed) where it is
+  * absent. The three behaviour checks — the `.tsv` tab default and the two
+  * streamed-JSON writers — open the reference fixture when the directory
+  * exists and otherwise an in-repo fixture under
+  * `src/test/resources/w3c-subset` with the features they exercise.
   */
 class SuiteGoldenSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private val Data = "/root/reference/spec/data"
+  private val haveReference = Files.isDirectory(Paths.get(Data))
+
+  /** Cancels a reference-parity case where the reference checkout is absent. */
+  private def assumeReference(): Unit =
+    assume(haveReference, s"reference fixture directory $Data is absent")
+
+  private lazy val Local =
+    Paths.get(getClass.getResource("/w3c-subset/manifest.json").toURI).getParent
+
+  /** The reference fixture `ref` where the checkout exists, else the in-repo
+    * `w3c-subset/local` carrying the features the test exercises.
+    */
+  private def fixture(ref: String, local: String): String =
+    if (haveReference) s"$Data/$ref" else Local.resolve(local).toString
 
   private def runFamily(input: String, ttl: String, minimal: Boolean): Unit = {
+    assumeReference()
     import spark.implicits._
     val base = "http://example.org/" + input
     val opened = CsvwReader.open(spark, s"$Data/$input", base, minimal = minimal)
@@ -73,6 +96,7 @@ class SuiteGoldenSpec extends AnyFunSuite {
   }
 
   private def runJsonFamily(input: String, jsonGolden: String, minimal: Boolean): Unit = {
+    assumeReference()
     val base = "http://example.org/" + input
     val opened = CsvwReader.open(spark, s"$Data/$input", base, minimal = minimal)
     val got = CsvwReader.jsonDocument(opened, minimal)
@@ -95,6 +119,7 @@ class SuiteGoldenSpec extends AnyFunSuite {
   // ---- validate-mode parity (reader_spec.rb:278-288): test232 duplicate PK
 
   test("test232: duplicate primary key raises in validate mode") {
+    assumeReference()
     val base = "http://example.org/test232-metadata.json"
     val opened = CsvwReader.open(spark, s"$Data/test232-metadata.json", base,
       minimal = true, validate = true)
@@ -109,7 +134,8 @@ class SuiteGoldenSpec extends AnyFunSuite {
   test("tree-ops.tsv: tab dialect by extension, embedded-only metadata") {
     import spark.implicits._
     val base = "http://example.org/tree-ops.tsv"
-    val opened = CsvwReader.open(spark, s"$Data/tree-ops.tsv", base, minimal = true)
+    val opened = CsvwReader.open(spark, fixture("tree-ops.tsv", "tree-ops.tsv"), base,
+      minimal = true)
     // names synthesize from the tab-split header titles, pct-encoded
     assert(opened.resolved.head.columns.map(_.name) ==
       List("GID", "On%20Street", "Species", "Trim%20Cycle", "Inventory%20Date"))
@@ -122,11 +148,18 @@ class SuiteGoldenSpec extends AnyFunSuite {
     assert(got.exists(t => t._2 == s"$base#On%20Street" && t._3 == "ADDISON AV"))
   }
 
+  // countries.json, or in-repo streamjson-metadata.json: two tables, so the
+  // stream crosses a table boundary; a table-group @id + dc:title and table
+  // @id/dc:title/dc:description, so the standard writer's spliced headers
+  // (@id/common/url before the streamed row array) are exercised, not just
+  // the bare-url shape
+  private lazy val streamInput = fixture("countries.json", "streamjson-metadata.json")
+  private lazy val streamBase =
+    "http://example.org/" + Paths.get(streamInput).getFileName
+
   test("streamed minimal JSON document is byte-identical to the collected one") {
-    // countries.json: two tables, so the stream also crosses a table
-    // boundary; writeMinimalJson is the row-count-unbounded path
-    val base = "http://example.org/countries.json"
-    val opened = CsvwReader.open(spark, s"$Data/countries.json", base, minimal = true)
+    // writeMinimalJson is the row-count-unbounded path
+    val opened = CsvwReader.open(spark, streamInput, streamBase, minimal = true)
     val collected = CsvwReader.jsonDocument(opened, minimal = true)
     val out = Files.createTempFile("graft_stream_json", ".json")
     CsvwReader.writeMinimalJson(opened, out)
@@ -134,11 +167,7 @@ class SuiteGoldenSpec extends AnyFunSuite {
   }
 
   test("streamed standard JSON document is byte-identical to the collected one") {
-    // countries.json carries table-group + table common properties, so the
-    // spliced headers (@id/common/url before the streamed row array) are
-    // exercised, not just the bare-url shape
-    val base = "http://example.org/countries.json"
-    val opened = CsvwReader.open(spark, s"$Data/countries.json", base, minimal = false)
+    val opened = CsvwReader.open(spark, streamInput, streamBase, minimal = false)
     val collected = CsvwReader.jsonDocument(opened, minimal = false)
     val out = Files.createTempFile("graft_stream_json_std", ".json")
     CsvwReader.writeStandardJson(opened, out)
@@ -146,6 +175,7 @@ class SuiteGoldenSpec extends AnyFunSuite {
   }
 
   test("countries.json: consistent foreign keys validate clean (reader_spec.rb:291-298)") {
+    assumeReference()
     val base = "http://example.org/countries.json"
     val opened = CsvwReader.open(spark, s"$Data/countries.json", base,
       minimal = true, validate = true)
