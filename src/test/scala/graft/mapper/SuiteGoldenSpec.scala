@@ -17,8 +17,9 @@ import java.nio.file.{Files, Paths}
   *
   * The family cases (Turtle and JSON, both modes), test232 and the
   * foreign-key-clean case compare against the reference's own files, so
-  * they need that directory and are canceled (not passed) where it is
-  * absent. The three behaviour checks — the `.tsv` tab default and the two
+  * they need that directory and fail where it is absent, until the
+  * reference bytes are vendored into the repository. The three behaviour
+  * checks — the `.tsv` tab default and the two
   * streamed-JSON writers — open the reference fixture when the directory
   * exists and otherwise an in-repo fixture under
   * `src/test/resources/w3c-subset` with the features they exercise.
@@ -28,10 +29,6 @@ class SuiteGoldenSpec extends AnyFunSuite {
 
   private val Data = "/root/reference/spec/data"
   private val haveReference = Files.isDirectory(Paths.get(Data))
-
-  /** Cancels a reference-parity case where the reference checkout is absent. */
-  private def assumeReference(): Unit =
-    assume(haveReference, s"reference fixture directory $Data is absent")
 
   private lazy val Local =
     Paths.get(getClass.getResource("/w3c-subset/manifest.json").toURI).getParent
@@ -43,7 +40,6 @@ class SuiteGoldenSpec extends AnyFunSuite {
     if (haveReference) s"$Data/$ref" else Local.resolve(local).toString
 
   private def runFamily(input: String, ttl: String, minimal: Boolean): Unit = {
-    assumeReference()
     import spark.implicits._
     val base = "http://example.org/" + input
     val opened = CsvwReader.open(spark, s"$Data/$input", base, minimal = minimal)
@@ -96,7 +92,6 @@ class SuiteGoldenSpec extends AnyFunSuite {
   }
 
   private def runJsonFamily(input: String, jsonGolden: String, minimal: Boolean): Unit = {
-    assumeReference()
     val base = "http://example.org/" + input
     val opened = CsvwReader.open(spark, s"$Data/$input", base, minimal = minimal)
     val got = CsvwReader.jsonDocument(opened, minimal)
@@ -119,7 +114,6 @@ class SuiteGoldenSpec extends AnyFunSuite {
   // ---- validate-mode parity (reader_spec.rb:278-288): test232 duplicate PK
 
   test("test232: duplicate primary key raises in validate mode") {
-    assumeReference()
     val base = "http://example.org/test232-metadata.json"
     val opened = CsvwReader.open(spark, s"$Data/test232-metadata.json", base,
       minimal = true, validate = true)
@@ -175,7 +169,6 @@ class SuiteGoldenSpec extends AnyFunSuite {
   }
 
   test("countries.json: consistent foreign keys validate clean (reader_spec.rb:291-298)") {
-    assumeReference()
     val base = "http://example.org/countries.json"
     val opened = CsvwReader.open(spark, s"$Data/countries.json", base,
       minimal = true, validate = true)
