@@ -1,11 +1,10 @@
 package graft
 
-/** Round-9 optimization harness (guide §1.4/§1.5): per-query noop-sink
-  * isolation timings plus `.explain("formatted")` dumps, separate from the
-  * [[Bench]] main. Usage:
+/** Per-query harness: noop-sink isolation timings plus
+  * `.explain("formatted")` dumps, separate from the [[Bench]] main. Usage:
   *
   *   sbt "runMain graft.BenchExtra time q1_agg g2_graph_canonicalize"
-  *   sbt "runMain graft.BenchExtra explain plans/r09 before g2_graph_canonicalize"
+  *   sbt "runMain graft.BenchExtra explain target/plans before g2_graph_canonicalize"
   *   sbt "runMain graft.BenchExtra explain - q1_agg"
   *
   * `time` runs each named query (all when none named) twice against the

@@ -1,6 +1,5 @@
 package graft.mapper
 
-import graft.expr.CsvwFunctions
 import graft.model._
 import graft.validate.Validations
 
@@ -150,12 +149,9 @@ object CsvwPipeline {
             // reference in the reference implementation (reader.rb:708-721
             // iterates cell values, and empty cells contribute none)
             val srcDf = fk.columnReference.foldLeft(src.df) { (d, k) =>
-              val in = src.inputs.getOrElse(k, col(k)).cast("string")
-              val fkVal = t.columns.find(_.name == k).map { c =>
-                val cell = CsvwFunctions.csvwCell(in, c)
-                when(cell.getField("isNull"), lit(null))
-                  .otherwise(element_at(cell.getField("vals"), 1).getField("lex"))
-              }.getOrElse(in)
+              val fkVal = t.columns.find(_.name == k)
+                .map(c => RowCells.firstLex(RowCells.cellOf(c, src.inputs).getField("vals")))
+                .getOrElse(src.inputs.getOrElse(k, col(k)))
               d.withColumn(s"__fk_$k", fkVal.cast("string"))
             }
             val dstDf = fk.referencedColumns.foldLeft(dst.df) { (d, k) =>

@@ -31,25 +31,28 @@ object CsvwReader {
   /** `to_json` analog over an opened group (`reader.rb:411-447`): minimal
     * mode is the flat array of describes objects; standard mode the nested
     * table-group document. Reuses the open's table bindings, so the JSON
-    * pass stages the same codegen'd cell pipeline.
+    * pass stages the same codegen'd cell pipeline. The document is written
+    * by [[JsonOutput.writeDocument]] into memory; [[writeMinimalJson]] and
+    * [[writeStandardJson]] write the same bytes to a file, so the document
+    * may exceed the driver heap.
     */
-  def jsonDocument(opened: Opened, minimal: Boolean): String =
-    JsonOutput.groupDocument(opened.group, jsonParts(opened, minimal), minimal)
+  def jsonDocument(opened: Opened, minimal: Boolean): String = {
+    val w = new java.io.StringWriter()
+    writeJson(opened, minimal, w)
+    w.toString
+  }
 
-  /** Minimal-mode `to_json` streamed to a file instead of collected — the
-    * row-count-unbounded form ([[JsonOutput.writeMinimalDocument]]): one
-    * global sort, then the ordered rows flow through the driver one at a
-    * time. Output is byte-identical to `jsonDocument(_, minimal = true)`.
-    */
-  def writeMinimalJson(opened: Opened, out: java.nio.file.Path): Unit =
-    JsonOutput.writeMinimalDocument(jsonParts(opened, minimal = true), out)
+  def writeMinimalJson(opened: Opened, out: Path): Unit = writeJsonFile(opened, minimal = true, out)
 
-  /** Standard-mode `to_json` streamed to a file — the row-count-unbounded
-    * form of `jsonDocument(_, minimal = false)`
-    * ([[JsonOutput.writeStandardDocument]]); byte-identical output.
-    */
-  def writeStandardJson(opened: Opened, out: java.nio.file.Path): Unit =
-    JsonOutput.writeStandardDocument(opened.group, jsonParts(opened, minimal = false), out)
+  def writeStandardJson(opened: Opened, out: Path): Unit = writeJsonFile(opened, minimal = false, out)
+
+  private def writeJsonFile(opened: Opened, minimal: Boolean, out: Path): Unit = {
+    val w = Files.newBufferedWriter(out)
+    try writeJson(opened, minimal, w) finally w.close()
+  }
+
+  private def writeJson(opened: Opened, minimal: Boolean, w: java.io.Writer): Unit =
+    JsonOutput.writeDocument(opened.group, jsonParts(opened, minimal), minimal, w)
 
   private def jsonParts(opened: Opened, minimal: Boolean)
       : Seq[(TableMeta, ResolvedTable, org.apache.spark.sql.DataFrame)] =

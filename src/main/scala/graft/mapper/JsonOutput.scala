@@ -1,8 +1,7 @@
 package graft.mapper
 
 import graft.core.{Iri, Xsd}
-import graft.expr.CsvwFunctions
-import graft.model.{ResolvedColumn, ResolvedTable}
+import graft.model.ResolvedTable
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.JsonNode
@@ -75,53 +74,22 @@ object JsonOutput {
                         inputs: Map[String, Column],
                         skolem: Column, rownum: Column, sourceNum: Column): DataFrame = {
     val cols = table.columns
-    var staged = df
-      .withColumn("__skolem", skolem.cast("string"))
-      .withColumn("__rownum", rownum.cast("long"))
-      .withColumn("__srcnum", sourceNum.cast("long"))
-    cols.foreach { c =>
-      val in = if (c.virtual) lit("") else inputs.getOrElse(c.name, col(c.name)).cast("string")
-      staged = staged.withColumn(s"__cell_${c.name}", CsvwFunctions.csvwCell(in, c))
-    }
-
-    // template variable map, as in TripleMapper (metadata.rb:2050, 2120-2126)
-    val colVars: Seq[(String, Column)] = cols.map { c =>
-      // backticks: unnamed (virtual) columns default to `_col.N` — a bare
-      // col() reference would parse the dot as struct-field access
-      val vals = col(s"`__cell_${c.name}`").getField("vals")
-      val v =
-        if (c.separator.isDefined) transform(vals, x => x.getField("lex"))
-        // size guard: ANSI element_at throws on an empty value list (a
-        // null-substituted cell), where the template variable is just unbound
-        else coalesce(when(size(vals) >= 1, element_at(vals, 1).getField("lex")), lit(""))
-      c.name -> v
-    }
-    val rowVars: Seq[(String, Column)] = Seq(
-      "_row" -> col("__rownum").cast("string"),
-      "_sourceRow" -> col("__srcnum").cast("string"))
-    def expand(t: graft.core.UriTemplate.Compiled, c: ResolvedColumn): Column = {
-      val cellVars = Seq(
-        "_name" -> lit(Iri.pctDecode(c.name)),
-        "_column" -> lit(c.number.toString),
-        "_sourceColumn" -> lit(c.sourceNumber.toString))
-      val used = t.parts.collect { case graft.core.UriTemplate.Expr(_, vs) => vs.map(_.name) }.flatten.toSet
-      CsvwFunctions.uriTemplate(t, table.url, (colVars ++ rowVars ++ cellVars).filter(v => used.contains(v._1)))
-    }
+    val cells = RowCells(df, table, inputs, skolem, rownum, sourceNum)
 
     val nullS = lit(null).cast("string")
     val perCol: Seq[Column] = cols.map { c =>
       struct(
-        col(s"`__cell_${c.name}`").as("cell"),
-        c.aboutUrl.map(expand(_, c)).getOrElse(nullS).as("about"),
-        c.propertyUrl.map(expand(_, c)).getOrElse(nullS).as("prop"),
-        c.valueUrl.map(expand(_, c)).getOrElse(nullS).as("value"))
+        cells.cell(c).as("cell"),
+        c.aboutUrl.map(cells.expand(_, c)).getOrElse(nullS).as("about"),
+        c.propertyUrl.map(cells.expand(_, c)).getOrElse(nullS).as("prop"),
+        c.valueUrl.map(cells.expand(_, c)).getOrElse(nullS).as("value"))
     }
     val jcols = cols.map(c => JCol(Iri.pctDecode(c.name), c.suppressOutput, c.virtual,
       c.datatypeBase, c.separator.isDefined, c.valueUrl.isDefined,
       table.rowTitles.contains(c.name)))
     val tableUrl = table.url
 
-    val narrow = staged.select(
+    val narrow = cells.staged.select(
       col("__rownum") +: col("__srcnum") +: perCol: _*)
     narrow.mapPartitions { it =>
       val mapper = new ObjectMapper()
@@ -268,113 +236,6 @@ object JsonOutput {
         co.set[com.fasterxml.jackson.databind.JsonNode](prop, arr)
     }
 
-  /** Standard-mode JSON document (`reader.rb:456-637` `to_hash`):
-    * `{"tables":[{"url":…,"row":[{"url":"#row=N","rownum":n,"describes":[…]}]}]}`.
-    * Driver-side assembly — the reference's standard output is a single
-    * document, so this is inherently document-sized; the per-row objects are
-    * still computed distributed via [[describedRows]].
-    */
-  def standardDocument(tables: Seq[(ResolvedTable, DataFrame)]): String = {
-    val mapper = new ObjectMapper()
-    val root = mapper.createObjectNode()
-    val tablesArr = root.putArray("tables")
-    tables.foreach { case (t, described) =>
-      val tNode = tablesArr.addObject()
-      tNode.put("url", t.url)
-      val rowArr = tNode.putArray("row")
-      described.select(col("json"), col("__rn"), col("__src"))
-        .collect().sortBy(_.getLong(1))
-        .foreach(r => rowArr.add(mapper.readTree(r.getString(0))))
-    }
-    mapper.writeValueAsString(root)
-  }
-
-  /** Minimal-mode group document STREAMED to a file: the same
-    * row-concatenation as [[groupDocument]] (minimal branch) but the
-    * globally-ordered `json` column flows through `toLocalIterator` — one
-    * range-partitioned sort, then partitions stream to the writer in order
-    * — so driver memory holds one row at a time and the document may
-    * exceed driver heap. [[groupDocument]] keeps the collect form for
-    * document-sized outputs (a JSON document is consumed whole anyway);
-    * this is the row-count-unbounded escape hatch.
-    */
-  def writeMinimalDocument(parts: Seq[(graft.model.TableMeta, ResolvedTable, DataFrame)],
-                           out: java.nio.file.Path): Unit = {
-    val w = java.nio.file.Files.newBufferedWriter(out)
-    try {
-      w.write("[")
-      var first = true
-      parts.foreach { case (_, _, ordered) =>
-        val it = ordered.orderBy(col("__rn"), col("__pos")).select(col("json"))
-          .toLocalIterator()
-        while (it.hasNext) {
-          if (!first) w.write(",")
-          first = false
-          w.write(it.next().getString(0))
-        }
-      }
-      w.write("]")
-    } finally w.close()
-  }
-
-  /** Standard-mode group document STREAMED to a file: byte-identical to
-    * [[groupDocument]]`(…, minimal = false)` but each table's row objects
-    * flow through `toLocalIterator` after one range-partitioned sort on
-    * `__rn`, so driver memory holds one row object at a time — the
-    * row-count-unbounded escape hatch for standard mode, mirroring
-    * [[writeMinimalDocument]]. The document-level headers (`@id`, common
-    * properties, table `url`) are serialized through the same Jackson
-    * nodes as the collect form, then the streamed `row` array is spliced
-    * in as the last member — the position [[groupDocument]] gives it.
-    */
-  def writeStandardDocument(group: graft.model.TableGroupMeta,
-                            parts: Seq[(graft.model.TableMeta, ResolvedTable, DataFrame)],
-                            out: java.nio.file.Path): Unit = {
-    val mapper = new ObjectMapper()
-    def putCommon(node: ObjectNode, common: Seq[(String, String)]): Unit =
-      common.foreach { case (k, raw) =>
-        val v = compactCommon(mapper, mapper.readTree(raw))
-        val wrapped =
-          if (k == "notes" && !v.isArray) { val a = mapper.createArrayNode(); a.add(v); a }
-          else v
-        node.set[JsonNode](k, wrapped)
-      }
-    // serialize a header object and reopen it so a trailing member can be
-    // appended: "{}" -> "{", "{...}" -> "{...,"
-    def opened(node: ObjectNode): String = {
-      val s = mapper.writeValueAsString(node)
-      if (s == "{}") "{" else s.dropRight(1) + ","
-    }
-    val w = java.nio.file.Files.newBufferedWriter(out)
-    try {
-      val root = mapper.createObjectNode()
-      group.id.foreach(root.put("@id", _))
-      putCommon(root, group.common)
-      w.write(opened(root))
-      w.write("\"tables\":[")
-      var firstTable = true
-      parts.foreach { case (tm, rt, described) =>
-        if (!firstTable) w.write(",")
-        firstTable = false
-        val tNode = mapper.createObjectNode()
-        tm.id.foreach(tNode.put("@id", _))
-        tNode.put("url", rt.url)
-        putCommon(tNode, tm.common)
-        w.write(opened(tNode))
-        w.write("\"row\":[")
-        val it = described.orderBy(col("__rn")).select(col("json")).toLocalIterator()
-        var first = true
-        while (it.hasNext) {
-          if (!first) w.write(",")
-          first = false
-          w.write(it.next().getString(0))
-        }
-        w.write("]}")
-      }
-      w.write("]}")
-    } finally w.close()
-  }
-
   /** JSON-friendly common-property value (`metadata.rb:959-980`, the
     * non-block branch of `common_properties`): `@value` objects unwrap to
     * the value, `@id`-only objects flatten to the IRI string, node objects
@@ -402,26 +263,37 @@ object JsonOutput {
     } else n
   }
 
-  /** Whole-group JSON document, the `to_hash` analog (`reader.rb:456-637`):
-    * minimal mode concatenates every table's describes objects in row
-    * order; standard mode nests `{"@id"?, common…, "tables": [{"@id"?,
-    * "url", common…, "notes"?, "row": […]}]}`. Suppressed tables are
-    * omitted. `parts` carries, per non-suppressed table, the DataFrame from
+  /** Whole-group JSON document, the `to_hash` analog (`reader.rb:456-637`),
+    * written to `w`: minimal mode concatenates every table's describes
+    * objects in row order; standard mode nests `{"@id"?, common…,
+    * "tables": [{"@id"?, "url", common…, "notes"?, "row": […]}]}`.
+    * `parts` carries, per non-suppressed table, the DataFrame from
     * [[minimalRowsOrdered]] (minimal) or [[describedRows]] (standard).
+    *
+    * Each table's rows go through one range-partitioned sort, then stream
+    * to `w` through `toLocalIterator` in order, so the driver holds one row
+    * at a time and the document may exceed its heap. In standard mode the
+    * headers (`@id`, common properties, table `url`) are serialized through
+    * Jackson and the streamed `row` array is spliced in as their last member.
     */
-  def groupDocument(group: graft.model.TableGroupMeta,
+  def writeDocument(group: graft.model.TableGroupMeta,
                     parts: Seq[(graft.model.TableMeta, ResolvedTable, DataFrame)],
-                    minimal: Boolean): String = {
-    val mapper = new ObjectMapper()
-    if (minimal) {
-      val arr = mapper.createArrayNode()
-      parts.foreach { case (_, _, ordered) =>
-        ordered.select(col("json"), col("__rn"), col("__pos"))
-          .collect().sortBy(r => (r.getLong(1), r.getInt(2)))
-          .foreach(r => arr.add(mapper.readTree(r.getString(0))))
+                    minimal: Boolean, w: java.io.Writer): Unit = {
+    var sep = ""
+    def rows(df: DataFrame, order: Column*): Unit = {
+      val it = df.orderBy(order: _*).select(col("json")).toLocalIterator()
+      while (it.hasNext) {
+        w.write(sep)
+        sep = ","
+        w.write(it.next().getString(0))
       }
-      mapper.writeValueAsString(arr)
+    }
+    if (minimal) {
+      w.write("[")
+      parts.foreach { case (_, _, ordered) => rows(ordered, col("__rn"), col("__pos")) }
+      w.write("]")
     } else {
+      val mapper = new ObjectMapper()
       // notes is always an array (reader.rb:474-475); same rule at group
       // and table level
       def putCommon(node: ObjectNode, common: Seq[(String, String)]): Unit =
@@ -432,21 +304,30 @@ object JsonOutput {
             else v
           node.set[JsonNode](k, wrapped)
         }
+      // serialize a header object and reopen it so a trailing member can be
+      // appended: "{}" -> "{", "{...}" -> "{...,"
+      def opened(node: ObjectNode): String = {
+        val s = mapper.writeValueAsString(node)
+        if (s == "{}") "{" else s.dropRight(1) + ","
+      }
       val root = mapper.createObjectNode()
       group.id.foreach(root.put("@id", _))
       putCommon(root, group.common)
-      val tablesArr = root.putArray("tables")
-      parts.foreach { case (tm, rt, described) =>
-        val tNode = tablesArr.addObject()
+      w.write(opened(root))
+      w.write("\"tables\":[")
+      parts.zipWithIndex.foreach { case ((tm, rt, described), i) =>
+        if (i > 0) w.write(",")
+        val tNode = mapper.createObjectNode()
         tm.id.foreach(tNode.put("@id", _))
         tNode.put("url", rt.url)
         putCommon(tNode, tm.common)
-        val rowArr = tNode.putArray("row")
-        described.select(col("json"), col("__rn"))
-          .collect().sortBy(_.getLong(1))
-          .foreach(r => rowArr.add(mapper.readTree(r.getString(0))))
+        w.write(opened(tNode))
+        w.write("\"row\":[")
+        sep = ""
+        rows(described, col("__rn"))
+        w.write("]}")
       }
-      mapper.writeValueAsString(root)
+      w.write("]}")
     }
   }
 }

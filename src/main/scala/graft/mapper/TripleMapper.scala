@@ -82,51 +82,15 @@ object TripleMapper {
       sourceNum: Column,
       minimal: Boolean = true,
       tableResource: String = "_:table1",
-      withCellErrors: Boolean = false,
       carry: Seq[String] = Nil): DataFrame = {
 
     val base = table.url
     val cols = table.columns
 
     // stage 1: evaluate every cell once
-    val cellNames = cols.map(c => s"__cell_${c.name}")
-    var staged = df
-      .withColumn("__skolem", skolem.cast("string"))
-      .withColumn("__rownum", rownum.cast("long"))
-      .withColumn("__srcnum", sourceNum.cast("long"))
-    cols.zip(cellNames).foreach { case (c, cn) =>
-      val in = if (c.virtual) lit("") else inputs.getOrElse(c.name, col(c.name)).cast("string")
-      staged = staged.withColumn(cn, CsvwFunctions.csvwCell(in, c))
-    }
-
-    // backticks: unnamed (virtual) columns default to `_col.N` — a bare
-    // col() reference would parse the dot as struct-field access
-    def cell(c: ResolvedColumn): Column = col(s"`__cell_${c.name}`")
-    def vals(c: ResolvedColumn): Column = cell(c).getField("vals")
-    def isNullCell(c: ResolvedColumn): Column = cell(c).getField("isNull")
-
-    // template variable map (metadata.rb:2050, 2120-2126): column name →
-    // string (scalar; "" when null) or array<string> (list columns)
-    val colVars: Seq[(String, Column)] = cols.map { c =>
-      val v =
-        if (c.separator.isDefined) transform(vals(c), x => x.getField("lex"))
-        else coalesce(element_at(vals(c), 1).getField("lex"), lit(""))
-      c.name -> v
-    }
-    val rowVars: Seq[(String, Column)] = Seq(
-      "_row" -> col("__rownum").cast("string"),
-      "_sourceRow" -> col("__srcnum").cast("string"))
-
-    def expandTemplate(t: graft.core.UriTemplate.Compiled, c: ResolvedColumn): Column = {
-      val cellVars = Seq(
-        "_name" -> lit(Iri.pctDecode(c.name)),
-        "_column" -> lit(c.number.toString),
-        "_sourceColumn" -> lit(c.sourceNumber.toString))
-      // only pass variables the template actually uses (keeps expr narrow)
-      val used = t.parts.collect { case graft.core.UriTemplate.Expr(_, vs) => vs.map(_.name) }.flatten.toSet
-      val vars = (colVars ++ rowVars ++ cellVars).filter(v => used.contains(v._1))
-      CsvwFunctions.uriTemplate(t, base, vars)
-    }
+    val cells = RowCells(df, table, inputs, skolem, rownum, sourceNum)
+    var staged = cells.staged
+    import cells.vals
 
     val rowRes = concat(lit("_:r"), col("__skolem"))
     val defaultSubject = concat(lit("_:d"), col("__skolem"))
@@ -137,32 +101,26 @@ object TripleMapper {
     // Generate node — lambda scopes defeat common-subexpression elimination).
     // only templates without per-cell variables (_name/_column/_sourceColumn)
     // are hoistable — those expand identically for every column
-    def usesCellVars(t: graft.core.UriTemplate.Compiled): Boolean =
-      t.parts.exists {
-        case graft.core.UriTemplate.Expr(_, vs) =>
-          vs.exists(v => v.name == "_name" || v.name == "_column" || v.name == "_sourceColumn")
-        case _ => false
-      }
     // staged-column names keyed by position in the deduplicated template
     // list — hashCode-keyed names could collide across distinct templates
     // (second withColumn silently wins → wrong subjects)
     val aboutTemplates: Map[String, String] = cols
-      .flatMap(c => c.aboutUrl.filterNot(usesCellVars).map(_.template))
+      .flatMap(c => c.aboutUrl.filter(RowCells.rowConstant).map(_.template))
       .distinct.zipWithIndex
       .map { case (tmpl, i) => tmpl -> s"__about_$i" }
       .toMap
     aboutTemplates.foreach { case (tmpl, colName) =>
       val c = cols.find(_.aboutUrl.exists(_.template == tmpl)).get
-      staged = staged.withColumn(colName, expandTemplate(c.aboutUrl.get, c))
+      staged = staged.withColumn(colName, cells.expand(c.aboutUrl.get, c))
     }
 
     // per-column subject / predicate / valueUrl
     def aboutOf(c: ResolvedColumn): Column =
       c.aboutUrl.map { t =>
-        aboutTemplates.get(t.template).map(col).getOrElse(expandTemplate(t, c))
+        aboutTemplates.get(t.template).map(col).getOrElse(cells.expand(t, c))
       }.getOrElse(defaultSubject)
     def predOf(c: ResolvedColumn): Column =
-      c.propertyUrl.map(expandTemplate(_, c))
+      c.propertyUrl.map(cells.expand(_, c))
         .getOrElse(lit(Iri.recompose(Iri.parse(base).copy(fragment = Some(c.name)))))
 
     // literal lang/dtype rendering per element (metadata.rb:2091-2096, 2263-2276).
@@ -188,8 +146,8 @@ object TripleMapper {
         case Some(vu) =>
           // valueUrl skipped when cell null and column non-virtual
           // (metadata.rb:1960-1961)
-          val cond = if (c.virtual) lit(true) else !isNullCell(c)
-          when(cond, array(iriTr(about, pred, expandTemplate(vu, c)))).otherwise(emptyTriples)
+          val cond = if (c.virtual) lit(true) else !cells.isNull(c)
+          when(cond, array(iriTr(about, pred, cells.expand(vu, c)))).otherwise(emptyTriples)
         case None if c.ordered && c.separator.isDefined =>
           // rdf:List emission (reader.rb:332-338): deterministic cons bnodes
           val n = size(vals(c))
@@ -253,10 +211,7 @@ object TripleMapper {
     // fill per row instead of k transform lambdas + flatten intermediates.
     def staticPred(c: ResolvedColumn): Option[String] = c.propertyUrl match {
       case None => Some(Iri.recompose(Iri.parse(base).copy(fragment = Some(c.name))))
-      case Some(t) => CsvwFunctions.constTemplate(t, base, Map(
-        "_name" -> Iri.pctDecode(c.name),
-        "_column" -> c.number.toString,
-        "_sourceColumn" -> c.sourceNumber.toString))
+      case Some(t) => CsvwFunctions.constTemplate(t, base, RowCells.cellVars(c).toMap)
     }
     val fusedCandidates: Seq[(String, ResolvedColumn, String)] =
       cols.filterNot(_.suppressOutput).flatMap { c =>
@@ -315,23 +270,20 @@ object TripleMapper {
     Triple(tableResource, Vocab.Csvw + "url", table.url, obj_iri = true, null, null))
 
   /** Per-row cell errors as a side-output DataFrame (A5/error semantics):
-    * `(skolem, column, error)`. Shares the staged cell computation shape.
+    * `(skolem, column, error)`, read from the same staged cells as [[triples]].
     */
   def cellErrors(
       df: DataFrame,
       table: ResolvedTable,
       inputs: Map[String, Column],
       skolem: Column): DataFrame = {
-    var staged = df.withColumn("__skolem", skolem.cast("string"))
-    table.columns.foreach { c =>
-      val in = if (c.virtual) lit("") else inputs.getOrElse(c.name, col(c.name)).cast("string")
-      staged = staged.withColumn(s"__cell_${c.name}", CsvwFunctions.csvwCell(in, c))
-    }
+    // error rows are keyed by the skolem alone: no row numbers
+    val cells = RowCells(df, table, inputs, skolem, lit(null), lit(null))
     val errCols = table.columns.map { c =>
-      transform(col(s"`__cell_${c.name}`").getField("errs"),
+      transform(cells.cell(c).getField("errs"),
         e => struct(lit(c.name).as("column"), e.as("error")))
     }
-    staged
+    cells.staged
       .select(col("__skolem").as("row_key"), explode(flatten(array(errCols: _*))).as("e"))
       .select(col("row_key"), col("e.column").as("column"), col("e.error").as("error"))
   }

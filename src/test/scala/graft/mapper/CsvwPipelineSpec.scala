@@ -159,11 +159,14 @@ class JsonStandardSpec extends AnyFunSuite {
       "tableSchema": {
         "aboutUrl": "urn:row:{_row}",
         "columns": [{"name": "name", "datatype": "string"}]}}"""
-    val t = graft.model.Resolve.group(CsvwJson.parseTableGroup(json)).head
+    val group = CsvwJson.parseTableGroup(json)
+    val t = graft.model.Resolve.group(group).head
     val df = Seq(("alice", 1), ("bob", 2)).toDF("name", "rn")
     val described = JsonOutput.describedRows(df, t, Map("name" -> col("name")),
       col("rn"), col("rn"), col("rn"))
-    val doc = JsonOutput.standardDocument(Seq(t -> described))
+    val w = new java.io.StringWriter()
+    JsonOutput.writeDocument(group, Seq((group.tables.head, t, described)), minimal = false, w)
+    val doc = w.toString
     val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(doc)
     val tbl = node.get("tables").get(0)
     assert(tbl.get("url").asText() == "http://example.org/t")

@@ -210,4 +210,34 @@ class TripleMapperSpec extends AnyFunSuite {
     val errs = TripleMapper.cellErrors(df, t, Map("n" -> col("n")), col("rn")).collect()
     assert(errs.length == 1 && errs(0).getString(1) == "n")
   }
+
+  test("a template over a null cell expands with the variable empty, as in JSON output") {
+    // ANSI element_at throws on the null cell's empty value list; the
+    // template variable must bind to "" instead, in RDF and JSON alike
+    val json = """{
+      "url": "http://example.org/t",
+      "tableSchema": {
+        "aboutUrl": "urn:x:{tool}",
+        "columns": [
+          {"name": "role", "datatype": "string"},
+          {"name": "tool", "datatype": "string", "null": [""]},
+          {"name": "uses", "virtual": true, "propertyUrl": "http://example.org/uses",
+           "valueUrl": "urn:tool:{tool}"}
+        ]
+      }
+    }"""
+    val t = graft.model.Resolve.group(CsvwJson.parseTableGroup(json)).head
+    val df = Seq(("user", "", 1), ("assistant", "search", 2)).toDF("role", "tool", "rn")
+    val inputs = Map("role" -> col("role"), "tool" -> col("tool"))
+    val got = TripleMapper.triples(df, t, inputs, col("rn"), col("rn"), col("rn"))
+      .as[Triple].collect().toSet
+    val subject = got.find(_.obj == "user").map(_.subj)
+    assert(subject.contains("urn:x:"), got.toString)
+    assert(got.contains(Triple("urn:x:", "http://example.org/uses", "urn:tool:", obj_iri = true, null, null)))
+    val ids = JsonOutput.minimalRows(df, t, inputs, col("rn"), col("rn"), col("rn"))
+      .as[String].collect()
+      .map(new com.fasterxml.jackson.databind.ObjectMapper().readTree(_))
+      .filter(_.get("role").asText() == "user").map(_.get("@id").asText())
+    assert(ids.toSeq == subject.toSeq)
+  }
 }

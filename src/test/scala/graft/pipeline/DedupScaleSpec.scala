@@ -182,6 +182,16 @@ class DedupScaleSpec extends AnyFunSuite {
       "loop" -> ConnectedComponents.run(spark, edges, maxIterations, localBytes = 0L))
       .map { case (leg, cc) => leg -> cc.as[(String, String)].collect() }
 
+  test("connected components: the local leg's bound respects spark.driver.maxResultSize") {
+    val (gib, mib) = (1L << 30, 1L << 20)
+    // a 2 GiB heap under the default 1 GiB result limit: 1/32 of the heap
+    assert(ConnectedComponents.localBound(2 * gib, gib) == 64 * mib)
+    // a 64 GiB heap: 2 GiB of ids would overrun the limit, so 1/4 of it
+    assert(ConnectedComponents.localBound(64 * gib, gib) == 256 * mib)
+    // maxResultSize = 0 means no limit
+    assert(ConnectedComponents.localBound(64 * gib, 0L) == 2 * gib)
+  }
+
   test("connected components: 120-node path converges via pointer jumping") {
     // plain min-label propagation needs 119 rounds; the loop's 50-iteration
     // budget is only enough because label chains halve each round

@@ -180,6 +180,29 @@ class GraphWriterSpec extends AnyFunSuite {
     assert(m.get("stage_complete").asBoolean && m.get("metrics").get("errors").asLong == 0)
   }
 
+  test("identical triples write identical bytes; the manifest differs only in its path") {
+    // it9 -> it10 lengthens the path by one byte, as a benchmark's
+    // numbered iteration directories do
+    val root = java.nio.file.Files.createTempDirectory("gw6")
+    val paths = Seq("it9", "it10").map(it => s"$root/$it/triples")
+    paths.foreach(p => GraphWriter.writeTriples(manyTriples, p))
+    def bytes(dir: String): Long = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try files.filter(java.nio.file.Files.isRegularFile(_)).mapToLong(java.nio.file.Files.size(_)).sum()
+      finally files.close()
+    }
+    val Seq(a, b) = paths
+    assert(bytes(a) > 0 && bytes(a) == bytes(b), "part files")
+    assert(bytes(s"$a.lineage") == bytes(s"$b.lineage"), "lineage files")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val manifests = paths.map(p => json.readTree(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(p).resolveSibling("_MANIFEST_triples.json")))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
+    assert(manifests.map(_.get("path").asText) == paths)
+    manifests.foreach(_.remove("path"))
+    assert(manifests(0) == manifests(1))
+  }
+
   test("stage() resumes from manifest without recompute") {
     val dir = java.nio.file.Files.createTempDirectory("gw2").toString
     var computes = 0
