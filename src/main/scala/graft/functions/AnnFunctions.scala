@@ -263,7 +263,8 @@ object AnnFunctions {
     * runs once instead of once per subspace. Codebooks are bit-identical
     * to independent per-slice [[trainCodebook]] runs (`IvfSpec` pins it):
     * per-(subspace, cell) sums accumulate over the same rows in the same
-    * partition order either way.
+    * partition order either way — so only while the input partitioning
+    * stays stable ([[trainCodebook]]'s floating-point caveat).
     */
   def trainPqCodebooks(df: DataFrame, idCol: String, embCol: String,
                        m: Int, k: Int, iters: Int): Array[Array[Array[Double]]] = {
@@ -310,8 +311,8 @@ object AnnFunctions {
     * aggregate buffers cost more per round than the scan it saved
     * (measured: s4 1.5 s → 7.4 s). Sums accumulate the same slice values
     * in the same partition order as the per-slice form, so codebooks stay
-    * bit-identical (`IvfSpec` pins parity); an empty cell has no output
-    * row and keeps its previous centroid, exactly as [[trainRound]].
+    * bit-identical on stable input partitioning (`IvfSpec` pins parity);
+    * an empty cell emits no row and keeps its previous centroid, as [[trainRound]].
     */
   private[graft] def trainPqRound(df: DataFrame, embCol: String,
       codebooks: Array[Array[Array[Double]]]): DataFrame = {
@@ -357,9 +358,9 @@ object AnnFunctions {
     * so an unbounded query set degrades to an extra exchange instead of a
     * driver OOM.
     *
-    * `k` is effectively `min(k, candidates)`: the ADC stage caps the pool
-    * at `candidates` rows per query, so asking for more than `candidates`
-    * neighbors returns `candidates` rows (enforced — see the require).
+    * The ADC stage caps the pool at `candidates` rows per query, so
+    * asking for more than `candidates` neighbors (`k > candidates`) throws
+    * `IllegalArgumentException` rather than return a short list.
     */
   def pqRerankTopK(queries: DataFrame, corpus: DataFrame,
                    qId: String, cId: String, embCol: String, k: Int,

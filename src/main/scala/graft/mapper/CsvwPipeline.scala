@@ -1,7 +1,7 @@
 package graft.mapper
 
 import graft.model._
-import graft.validate.Validations
+import graft.validate.{ValidateGate, Validations}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -48,29 +48,15 @@ object CsvwPipeline {
       fkViolations: Map[String, DataFrame],
       metadata: CsvwValidate.Report = CsvwValidate.Report.empty) {
 
-    /** Per-severity counts — the reference's `log_statistics[:error]` gate
-      * (`reader.rb:440-443`). Triggers a count job on the error side-output.
+    /** Validate-mode gate over the metadata report, cell errors and both
+      * violation maps, each counted once — key-integrity failures are errors
+      * (reader.rb:287, 665-673, 708-721). Callers run `validation.gate()`.
       */
-    // lazy val: each violation count is a Spark job re-running the full
-    // validation join — raiseOnErrors + a metrics sink must not pay twice
-    lazy val severityCounts: Map[String, Long] = Map(
-      "metadata_warning" -> metadata.warnings.size.toLong,
-      "metadata_error" -> metadata.errors.size.toLong,
-      "cell_error" -> cellErrors.count(),
-      // key-integrity failures are errors in validate mode: the reference
-      // logs "has duplicate primary key"/"ignoring foreign key integrity"
-      // and validate! raises (reader.rb:287, 665-673, 708-721)
-      "pk_violation_error" -> pkViolations.values.map(_.count()).sum,
-      "fk_violation_error" -> fkViolations.values.map(_.count()).sum)
-
-    /** Validate-mode exit gate: raise if any error-severity count is
-      * non-zero, as `raise Error, "Errors found during processing"` does.
-      */
-    def raiseOnErrors(): Unit = {
-      val bad = severityCounts.filter { case (k, v) => k.endsWith("_error") && v > 0 }
-      if (bad.nonEmpty)
-        throw new IllegalStateException(
-          s"Errors found during processing: $bad; metadata errors: ${metadata.errors}")
+    lazy val validation: ValidateGate = {
+      val gate = new ValidateGate(cellErrors.sparkSession, metadata)
+      gate.countCellErrors(cellErrors)
+      gate.countKeyViolations(pkViolations.values, fkViolations.values)
+      gate
     }
   }
 

@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Graph materialization + checkpoint/resume (north_rule: "graph
-  * materialization as sorted, deduplicated (subj, pred, obj) tables …
-  * resumable from checkpoint with per-partition lineage + metrics").
+/** Graph materialization (north_rule: "graph materialization as sorted,
+  * deduplicated (subj, pred, obj) tables … resumable from checkpoint with
+  * per-partition lineage + metrics"). The lineage and metrics ship; resume
+  * does not yet — it needs an input fingerprint and an atomic write first.
   *
   * The container ships no Iceberg runtime, so the snapshot layer is
   * parquet-backed with an explicit stage manifest (documented divergence,
@@ -59,7 +60,7 @@ object GraphWriter {
     * null bounds, never a guessed one.
     */
   private def writeLineage(spark: SparkSession, path: String,
-                           metrics: Map[String, Long] = Map.empty): Unit = {
+                           metrics: Map[String, Long]): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val dir = new HPath(path)
     val parts = dir.getFileSystem(conf).listStatus(dir)
@@ -71,8 +72,8 @@ object GraphWriter {
     val total = lineage.map(_.rows).sum
     val manifest = json.createObjectNode()
       .put("path", path).put("rows", total).put("stage_complete", true)
-    // run metrics (e.g. ValidateGate severity counts) ride in the manifest so
-    // a resume can see whether the producing run was clean
+    // run metrics (e.g. ValidateGate error counts) ride in the manifest so
+    // a reader can see whether the producing run was clean
     if (metrics.nonEmpty) {
       val m = manifest.putObject("metrics")
       metrics.toSeq.sortBy(_._1).foreach { case (k, v) => m.put(k, v) }
@@ -106,20 +107,6 @@ object GraphWriter {
 
   private def dirOf(p: String) = Option(Paths.get(p).getParent).map(_.toString).getOrElse(".")
   private def nameOf(p: String) = Paths.get(p).getFileName.toString
-
-  /** Checkpoint-or-compute: if `path`'s manifest exists, resume by reading
-    * it back; else compute, materialize with lineage, and return the
-    * re-read (so downstream stages cut lineage at the stage boundary).
-    */
-  def stage(spark: SparkSession, path: String)(compute: => DataFrame): DataFrame = {
-    val manifest = Paths.get(s"${dirOf(path)}/_MANIFEST_${nameOf(path)}.json")
-    if (Files.exists(manifest)) spark.read.parquet(path)
-    else {
-      compute.write.mode(SaveMode.Overwrite).parquet(path)
-      writeLineage(spark, path)
-      spark.read.parquet(path)
-    }
-  }
 
   /** Render triples as canonical N-Triples lines (for golden-file diffs).
     * Escapes the full N-Triples string-literal set: backslash, quote, LF,

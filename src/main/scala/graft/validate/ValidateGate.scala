@@ -5,20 +5,20 @@ import graft.model.CsvwValidate.Report
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.util.LongAccumulator
 
+import scala.collection.immutable.ListMap
+
 /** Validation failed: the run saw errors (`reader.rb:265-267` — the
   * reference raises `RDF::ReaderError, "Errors found during processing"`
   * when validate mode counted any error-severity problem).
   */
 final class GraftValidationException(msg: String) extends RuntimeException(msg)
 
-/** Per-run, per-severity error statistics + validate-mode gate (A5 second
-  * half). Cell-level problems are counted into `LongAccumulator`s as the
-  * error side-output flows through its action — a single distributed pass,
-  * no driver-side collect — and combined with the driver-side metadata
-  * [[Report]] (warnings + errors from metadata validation). `gate()` then
-  * fails the run exactly like the reference's validate mode, and
-  * [[manifestMetrics]] surfaces the counts in the stage manifest
-  * (`GraphWriter.writeTriples(..., metrics = gate.manifestMetrics)`).
+/** The one validate-mode gate (A5 second half): what counts as an error
+  * and when the run fails. Cell errors are counted into `LongAccumulator`s
+  * in one distributed pass over the error side-output, key violations by
+  * one count per frame; both join the metadata [[Report]]. `gate()` fails
+  * the run like the reference's validate mode, and [[manifestMetrics]]
+  * feeds `GraphWriter.writeTriples(..., metrics = gate.manifestMetrics)`.
   */
 final class ValidateGate(spark: SparkSession,
                          metadataReport: Report = Report.empty) {
@@ -44,19 +44,43 @@ final class ValidateGate(spark: SparkSession,
     }
   }
 
-  def errors: Long = cellErrorAcc.value + metadataReport.errors.size
+  // (pk, fk) violation rows; None until countKeyViolations runs, so a gate
+  // that never counts keys writes the manifest it always wrote
+  private var keyViolations: Option[(Long, Long)] = None
+
+  /** One error per row of a `Validations.pkDuplicates` frame (a duplicated
+    * key) and of a `Validations.fkViolations` frame (an unresolved
+    * reference); one count job per frame.
+    */
+  def countKeyViolations(pk: Iterable[DataFrame], fk: Iterable[DataFrame]): Unit = {
+    val (p, f) = keyViolations.getOrElse((0L, 0L))
+    keyViolations = Some((p + pk.iterator.map(_.count()).sum, f + fk.iterator.map(_.count()).sum))
+  }
+
+  /** Error count per kind, in the order `gate()` names them. */
+  def errorCounts: ListMap[String, Long] = ListMap(
+    "cell_error" -> cellErrorAcc.value,
+    "pk_violation_error" -> keyViolations.fold(0L)(_._1),
+    "fk_violation_error" -> keyViolations.fold(0L)(_._2),
+    "metadata_error" -> metadataReport.errors.size.toLong)
+
+  def errors: Long = errorCounts.values.sum
   def warnings: Long = metadataReport.warnings.size.toLong
 
-  def manifestMetrics: Map[String, Long] = Map(
+  def manifestMetrics: Map[String, Long] = Map[String, Long](
     "errors" -> errors,
     "warnings" -> warnings,
-    "rows_with_errors" -> rowAcc.value)
+    "rows_with_errors" -> rowAcc.value) ++ keyViolations.toList.flatMap {
+      case (p, f) => List("pk_violations" -> p, "fk_violations" -> f) }
 
-  /** The validate-mode exit gate: no-op when clean, raise when any
-    * error-severity problem was counted.
+  /** The validate-mode exit gate: no-op when clean; otherwise raise, naming
+    * each error kind with its count and every metadata error text.
     */
   def gate(): Unit =
-    if (errors > 0)
+    if (errors > 0) {
+      val kinds = errorCounts.collect { case (k, n) if n > 0 => s"$k=$n" }.mkString(", ")
+      val meta = metadataReport.errors.map("; metadata error: " + _).mkString
       throw new GraftValidationException(
-        s"Errors found during processing (${errors} errors, ${warnings} warnings)")
+        s"Errors found during processing ($errors errors, $warnings warnings): $kinds$meta")
+    }
 }

@@ -1,5 +1,7 @@
 package graft.mapper
 
+import graft.validate.GraftValidationException
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
@@ -120,9 +122,9 @@ class SuiteGoldenSpec extends AnyFunSuite {
     // both rows carry PK value "1" — one duplicated key group
     val pk = opened.result.pkViolations.values.head.collect()
     assert(pk.map(_.getString(0)).toSeq == Seq("1"), pk.toSeq)
-    assert(opened.result.severityCounts("pk_violation_error") == 1L)
+    assert(opened.result.validation.errorCounts("pk_violation_error") == 1L)
     // "Errors found during processing" (reader.rb:265-267)
-    intercept[IllegalStateException] { opened.result.raiseOnErrors() }
+    intercept[GraftValidationException] { opened.result.validation.gate() }
   }
 
   test("tree-ops.tsv: tab dialect by extension, embedded-only metadata") {
@@ -174,6 +176,6 @@ class SuiteGoldenSpec extends AnyFunSuite {
       minimal = true, validate = true)
     assert(opened.result.fkViolations.values.forall(_.count() == 0))
     assert(opened.result.pkViolations.values.forall(_.count() == 0))
-    opened.result.raiseOnErrors() // must not throw
+    opened.result.validation.gate() // must not throw
   }
 }

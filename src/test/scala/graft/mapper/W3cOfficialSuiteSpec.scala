@@ -92,10 +92,10 @@ object W3cOfficialSuite {
     if (validation) {
       if (negative)
         intercept[Exception] {
-          opened(minimal = true, validate = true).result.raiseOnErrors()
+          opened(minimal = true, validate = true).result.validation.gate()
         }
       else
-        opened(minimal = true, validate = true).result.raiseOnErrors()
+        opened(minimal = true, validate = true).result.validation.gate()
     } else if (negative) {
       intercept[Exception] {
         if (json) CsvwReader.jsonDocument(opened(e.minimal), e.minimal)

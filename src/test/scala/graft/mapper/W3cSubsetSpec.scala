@@ -1,5 +1,7 @@
 package graft.mapper
 
+import graft.validate.GraftValidationException
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Path, Paths}
@@ -72,12 +74,12 @@ class W3cSubsetSpec extends AnyFunSuite {
             s"\n=== $id ===\ngot:  $got\nwant: $want")
 
         case "PositiveValidationTest" =>
-          try open(action, minimal = true, validate = true).result.raiseOnErrors()
+          try open(action, minimal = true, validate = true).result.validation.gate()
           catch { case ex: Exception => fail(s"expected clean validation: $ex") }
 
         case "NegativeValidationTest" =>
-          val ex = intercept[Exception] {
-            open(action, minimal = true, validate = true).result.raiseOnErrors()
+          val ex = intercept[GraftValidationException] {
+            open(action, minimal = true, validate = true).result.validation.gate()
           }
           assert(ex.getMessage.contains("Errors found during processing"), ex.getMessage)
           // the raise must be for the entry's documented reason (e.g. a

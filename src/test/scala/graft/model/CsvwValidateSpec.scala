@@ -230,8 +230,8 @@ class CsvwValidateSpec extends AnyFunSuite {
           List(ColumnMeta(titles = List("und" -> "mismatch"))))))
     assert(res.metadata.warnings.exists(_.contains("bogus")))
     assert(res.metadata.errors.exists(_.contains("unique names")))
-    assert(res.severityCounts("metadata_error") >= 1)
-    intercept[IllegalStateException] { res.raiseOnErrors() }
+    assert(res.validation.errorCounts("metadata_error") >= 1)
+    intercept[graft.validate.GraftValidationException] { res.validation.gate() }
   }
 
   test("language-mapped titles drive the column name (und first, then column lang)") {

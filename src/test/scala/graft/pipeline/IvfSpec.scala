@@ -221,6 +221,16 @@ class IvfSpec extends AnyFunSuite {
     assert(got == (0L until 10L).map(q => (q, 1000L + q)).toSet)
   }
 
+  test("pqRerankTopK: k above the candidate pool throws instead of a short list") {
+    val cbs = AnnFunctions.trainPqCodebooks(base, "vec_id", "embedding",
+      m = 2, k = 4, iters = 1)
+    val ex = intercept[IllegalArgumentException] {
+      AnnFunctions.pqRerankTopK(base.limit(1), corpus, "vec_id", "vec_id",
+        "embedding", k = 5, cbs, candidates = 4)
+    }
+    assert(ex.getMessage.contains("k=5 exceeds the ADC candidate pool (4)"), ex.getMessage)
+  }
+
   test("pqTopK on the sf-style corpus: every query's top-1 SCORE equals its planted copy's") {
     // PQ resolution is the product cell: vectors sharing the query's codes
     // tie at the maximal ADC and the id tie-break picks the lowest — so

@@ -203,16 +203,6 @@ class GraphWriterSpec extends AnyFunSuite {
     assert(manifests(0) == manifests(1))
   }
 
-  test("stage() resumes from manifest without recompute") {
-    val dir = java.nio.file.Files.createTempDirectory("gw2").toString
-    var computes = 0
-    def compute = { computes += 1; triples }
-    val p = s"$dir/stage1"
-    GraphWriter.stage(spark, p)(compute)
-    GraphWriter.stage(spark, p)(compute)
-    assert(computes == 1)
-  }
-
   test("N-Triples rendering") {
     val nt = GraphWriter.toNTriples(Seq(
       graft.mapper.Triple("http://s", "http://p", "http://o", obj_iri = true, null, null),

@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.mapper.TripleMapper
 import graft.model.CsvwJson
 import graft.model.CsvwValidate.Report
-import graft.validate.{GraftValidationException, ValidateGate}
+import graft.validate.{GraftValidationException, ValidateGate, Validations}
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -55,6 +55,28 @@ class ValidateGateSpec extends AnyFunSuite {
     val gate = new ValidateGate(spark, Report(Nil, List("Table missing required keys: url")))
     val ex = intercept[GraftValidationException](gate.gate())
     assert(ex.getMessage.contains("1 errors"))
+  }
+
+  test("key violations count as errors, name their kinds and reach the manifest") {
+    val people = Seq(("p1", "c1"), ("p1", "c2"), ("p2", "c9")).toDF("pid", "city")
+    val cities = Seq("c1", "c2").toDF("cid")
+    val gate = new ValidateGate(spark, Report(Nil, List("bad metadata")))
+    gate.countCellErrors(cellErrors(Seq(("r1", "1"))))
+    // p1 is one duplicated key; c9 is one unresolved reference
+    gate.countKeyViolations(
+      Seq(Validations.pkDuplicates(people, Seq("pid"))),
+      Seq(Validations.fkViolations(people, Seq("city"), cities, Seq("cid"))))
+    assert(gate.errors == 3, s"errors=${gate.errors}")
+    assert(gate.errorCounts == Map("cell_error" -> 0L, "pk_violation_error" -> 1L,
+      "fk_violation_error" -> 1L, "metadata_error" -> 1L))
+    val ex = intercept[GraftValidationException](gate.gate())
+    Seq("(3 errors, 0 warnings)", "pk_violation_error=1", "fk_violation_error=1",
+      "metadata_error=1", "bad metadata").foreach { frag =>
+      assert(ex.getMessage.contains(frag), ex.getMessage)
+    }
+    assert(!ex.getMessage.contains("cell_error"), ex.getMessage)
+    assert(gate.manifestMetrics == Map("errors" -> 3L, "warnings" -> 0L,
+      "rows_with_errors" -> 0L, "pk_violations" -> 1L, "fk_violations" -> 1L))
   }
 
   test("stage manifest surfaces the severity counts") {
