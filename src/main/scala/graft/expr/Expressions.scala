@@ -1,6 +1,6 @@
 package graft.expr
 
-import graft.core.{Iri, UriTemplate}
+import graft.core.{Iri, UriTemplate, Xsd}
 import graft.model.ResolvedColumn
 
 import org.apache.spark.sql.Column
@@ -174,50 +174,85 @@ case class UriTemplateExpandExpr(
     copy(children = newChildren)
 }
 
-/** Plan-time-constant emission config for one fused literal column:
-  * predicate IRI, optional language tag, optional datatype IRI, and whether
-  * the base type is `string` (strings keep their language tag and never a
-  * datatype; non-strings carry the datatype when the lexical form validated
-  * and fall back to the language tag when it did not — `metadata.rb:2091-2096`).
+/** Emission config for one cell-valued part of [[LitTriplesExpr]]: the
+  * column's language tag (null for `und`), its expanded datatype IRI (null
+  * for `xsd:string`) and, for an ordered list, the column name its cons
+  * bnodes carry (null otherwise). The plain-literal carve-out keys on the
+  * EXPANDED datatype: a custom `@id` over base "string" emits a typed
+  * literal with that IRI (`metadata.rb:2090`, `:2270`).
   */
-final case class LitTripleSpec(
-    pred: String, lang: String, dtypeIri: String, isString: Boolean)
+final case class LitTripleSpec(lang: String, dtypeIri: String, listColumn: String)
 
-/** Helper bound into codegen for [[LitTriplesExpr]]: builds the whole
-  * per-row `array<triple>` for a group of plain-literal columns in one call,
-  * replacing k `transform` lambdas + `flatten` (k intermediate arrays and
-  * the per-element struct expression trees) with a single preallocated
-  * array fill.
+object LitTripleSpec {
+  private val XsdString = Xsd.expandedIri("string")
+
+  /** `c`'s values as plain literals, or as an rdf:List when `list`. */
+  def apply(c: ResolvedColumn, list: Boolean): LitTripleSpec = LitTripleSpec(
+    lang = if (c.lang != "und") c.lang else null,
+    dtypeIri = if (c.datatypeIri == XsdString) null else c.datatypeIri,
+    listColumn = if (list) c.name else null)
+}
+
+/** Helper bound into codegen for [[LitTriplesExpr]]: builds the row's whole
+  * `array<triple>` of cell-valued triples in one preallocated array fill.
+  *
+  * This is the one place a cell value becomes a literal
+  * (`metadata.rb:2091-2096`, `:2263-2276`): a string keeps the column's
+  * language tag and never takes a datatype; any other type carries its
+  * datatype when the lexical form validated and falls back to the language
+  * tag when it did not. An ordered-list part chains its values as an
+  * rdf:List (`reader.rb:332-338`) with deterministic cons bnodes
+  * `_:l<skolem>.<column>.<pos>`; an empty list is `rdf:nil`.
   */
 final class TripleArrayEvaluator(val specs: Array[LitTripleSpec]) extends Serializable {
-  private val preds = specs.map(s => UTF8String.fromString(s.pred))
-  private val langs =
-    specs.map(s => if (s.lang == null) null else UTF8String.fromString(s.lang))
-  private val dtypes =
-    specs.map(s => if (s.dtypeIri == null) null else UTF8String.fromString(s.dtypeIri))
+  private def utf8(s: String) = if (s == null) null else UTF8String.fromString(s)
+  private val langs = specs.map(s => utf8(s.lang))
+  private val dtypes = specs.map(s => utf8(s.dtypeIri))
+  private val listMids = specs.map(s => utf8(if (s.listColumn == null) null else s".${s.listColumn}."))
+  private val bnodePrefix = utf8("_:l")
+  private val first = utf8(graft.mapper.Vocab.RdfFirst)
+  private val rest = utf8(graft.mapper.Vocab.RdfRest)
+  private val nil = utf8(graft.mapper.Vocab.RdfNil)
 
-  /** about: the shared subject; cells: one `array<struct<lex,ok>>` per spec. */
-  def eval(about: UTF8String, cells: Array[AnyRef]): ArrayData = {
+  private def bnode(skolem: UTF8String, i: Int, pos: Int): UTF8String =
+    UTF8String.concat(bnodePrefix, skolem, listMids(i), UTF8String.fromString(pos.toString))
+
+  /** parts: subject, predicate and cell `vals` (`array<struct<lex,ok>>`)
+    * per spec, in spec order. */
+  def eval(skolem: UTF8String, parts: Array[AnyRef]): ArrayData = {
     var total = 0
     var i = 0
-    while (i < cells.length) {
-      total += cells(i).asInstanceOf[ArrayData].numElements(); i += 1
+    while (i < specs.length) {
+      val n = parts(3 * i + 2).asInstanceOf[ArrayData].numElements()
+      total += (if (listMids(i) == null) n else 1 + 2 * n)
+      i += 1
     }
     val out = new Array[Any](total)
     var k = 0
     i = 0
-    while (i < cells.length) {
-      val vals = cells(i).asInstanceOf[ArrayData]
-      val isString = specs(i).isString
+    while (i < specs.length) {
+      val subj = parts(3 * i).asInstanceOf[UTF8String]
+      val pred = parts(3 * i + 1).asInstanceOf[UTF8String]
+      val vals = parts(3 * i + 2).asInstanceOf[ArrayData]
       val n = vals.numElements()
+      val list = listMids(i) != null
+      var node = if (!list) subj else if (n == 0) nil else bnode(skolem, i, 0)
+      if (list) { out(k) = InternalRow(subj, pred, node, true, null, null); k += 1 }
       var j = 0
       while (j < n) {
         val v = vals.getStruct(j, 2)
         val ok = v.getBoolean(1)
-        val lang = if (isString || !ok) langs(i) else null
-        val dtype = if (!isString && ok) dtypes(i) else null
-        out(k) = InternalRow(about, preds(i), v.getUTF8String(0), false, lang, dtype)
-        k += 1; j += 1
+        val lang = if (dtypes(i) == null || !ok) langs(i) else null
+        val dtype = if (ok) dtypes(i) else null
+        out(k) = InternalRow(node, if (list) first else pred, v.getUTF8String(0), false, lang, dtype)
+        k += 1
+        if (list) {
+          val next = if (j == n - 1) nil else bnode(skolem, i, j + 1)
+          out(k) = InternalRow(node, rest, next, true, null, null)
+          k += 1
+          node = next
+        }
+        j += 1
       }
       i += 1
     }
@@ -225,16 +260,18 @@ final class TripleArrayEvaluator(val specs: Array[LitTripleSpec]) extends Serial
   }
 }
 
-/** Fused construction of the per-row triple array for all plain-literal
-  * columns sharing one subject (the dominant shape of a transcript mapping:
-  * every column same hoisted aboutUrl, constant predicate/lang/datatype).
-  * Children: the shared subject followed by one cell-vals array per spec.
+/** Every triple of a row whose object is a cell value, as one fused codegen
+  * call: plain-literal columns under any `aboutUrl`/`propertyUrl`, ordered
+  * lists and standard mode's `csvw:title`. Children: the row's `__skolem`
+  * (for list bnodes), then subject, predicate and cell `vals` per spec.
+  * Constant predicates reach it as literals once Catalyst has folded their
+  * templates.
   */
 case class LitTriplesExpr(children: Seq[Expression], specs: Seq[LitTripleSpec])
     extends Expression {
 
-  require(children.length == specs.length + 1,
-    s"expected 1 subject + ${specs.length} cell arrays, got ${children.length}")
+  require(children.length == 1 + 3 * specs.length,
+    s"expected 1 skolem + 3 x ${specs.length} parts, got ${children.length}")
   private lazy val evaluator = new TripleArrayEvaluator(specs.toArray)
 
   override def dataType: DataType = ArrayType(StructType(Seq(
@@ -251,20 +288,20 @@ case class LitTriplesExpr(children: Seq[Expression], specs: Seq[LitTripleSpec])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("tripleEval", evaluator, classOf[TripleArrayEvaluator].getName)
-    val aboutGen = children.head.genCode(ctx)
-    val cellGens = children.tail.map(_.genCode(ctx))
-    val arr = ctx.freshName("cellArgs")
-    val fills = cellGens.zipWithIndex.map { case (g, i) =>
+    val skolemGen = children.head.genCode(ctx)
+    val partGens = children.tail.map(_.genCode(ctx))
+    val arr = ctx.freshName("parts")
+    val fills = partGens.zipWithIndex.map { case (g, i) =>
       s"$arr[$i] = ${g.isNull} ? null : (Object) ${g.value};"
     }.mkString("\n")
     ev.copy(
       code = code"""
-        ${aboutGen.code}
-        ${cellGens.map(_.code).reduceOption(_ + _).getOrElse(code"")}
-        Object[] $arr = new Object[${cellGens.length}];
+        ${skolemGen.code}
+        ${partGens.map(_.code).reduceOption(_ + _).getOrElse(code"")}
+        Object[] $arr = new Object[${partGens.length}];
         $fills
         org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          $ref.eval(${aboutGen.isNull} ? null : ${aboutGen.value}, $arr);
+          $ref.eval(${skolemGen.isNull} ? null : ${skolemGen.value}, $arr);
         boolean ${ev.isNull} = false;
       """)
   }
@@ -771,9 +808,11 @@ object CsvwFunctions {
     GraftBridge.column(UriTemplateExpandExpr(
       vars.map(v => GraftBridge.expression(v._2)), vars.map(_._1), template, base, decodeUri))
 
-  def litTriples(about: Column, cells: Seq[Column], specs: Seq[LitTripleSpec]): Column =
+  /** parts: (subject, predicate, cell `vals`) per spec. */
+  def litTriples(skolem: Column, parts: Seq[(Column, Column, Column)],
+                 specs: Seq[LitTripleSpec]): Column =
     GraftBridge.column(LitTriplesExpr(
-      (about +: cells).map(GraftBridge.expression), specs))
+      (skolem +: parts.flatMap(p => Seq(p._1, p._2, p._3))).map(GraftBridge.expression), specs))
 
   def simhash64(tokens: Column): Column =
     GraftBridge.column(SimHash64Expr(GraftBridge.expression(tokens)))
@@ -799,24 +838,4 @@ object CsvwFunctions {
 
   def assembleLines(posLines: Column): Column =
     GraftBridge.column(AssembleLinesExpr(GraftBridge.expression(posLines)))
-
-  /** Plan-time expansion of a template whose variables are all known
-    * constants (used to bake constant predicates into [[LitTripleSpec]]s) —
-    * the Column→Expression bridge wraps literals in lazy ColumnNode
-    * expressions that never report foldable, so constness is decided here
-    * from the template's variable set instead.
-    */
-  def constTemplate(template: UriTemplate.Compiled, base: String,
-                    vars: Map[String, String]): Option[String] = {
-    val used = template.parts.collect {
-      case UriTemplate.Expr(_, vs) => vs.map(_.name)
-    }.flatten.toSet
-    if (!used.subsetOf(vars.keySet)) None
-    else {
-      val names = used.toArray
-      val ev = new TemplateEvaluator(template, base, names, decodeUri = false)
-      Some(ev.eval(names.map(n =>
-        UTF8String.fromString(vars(n)).asInstanceOf[AnyRef])).toString)
-    }
-  }
 }

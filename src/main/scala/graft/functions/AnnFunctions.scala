@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an `array<float>` embedding
@@ -103,6 +103,43 @@ object AnnFunctions {
   def ivfCells(emb: Column, centroids: Array[Array[Double]], nprobe: Int): Column =
     graft.expr.CsvwFunctions.ivfCells(emb, centroids, nprobe)
 
+  /** The `k` lowest-id embeddings in id order: the init of a Lloyd
+    * training. The same job guards the whole corpus (the top-k sort reads
+    * every row) with an observation, checked before any init row is read:
+    * no null embedding and one length. [[trainRound]]'s per-cell mean
+    * divides primitive `sum(element_at(emb, i))` columns by `count(*)`, so a
+    * null or short embedding would count without summing and silently
+    * deflate centroids; it fails with an `IllegalArgumentException` instead.
+    */
+  private def initRows(df: DataFrame, idCol: String, embCol: String,
+                       k: Int): Array[Array[Double]] = {
+    val guard = new Observation()
+    val emb = col(embCol)
+    val rows = df.observe(guard, count_if(emb.isNull).as("nulls"),
+        min(size(emb)).as("min_len"), max(size(emb)).as("max_len"))
+      .orderBy(col(idCol)).limit(k).select(emb).collect()
+    val g = guard.get
+    val (nulls, lo, hi) = (g("nulls"), g("min_len"), g("max_len"))
+    require(nulls == 0L && lo == hi, s"embeddings must be non-null and of one length: " +
+      s"$nulls null, lengths $lo to $hi — clean the corpus before training")
+    rows.map(_.getSeq[Double](0).toArray)
+  }
+
+  /** One Lloyd round's aggregate plan: (cell, n, s0..s(dim-1)) — exposed so
+    * the spec can pin the physical shape (no Generate, one exchange of
+    * ~k×partitions partial rows).
+    */
+  private[graft] def trainRound(df: DataFrame, embCol: String,
+                                centroids: Array[Array[Double]]): DataFrame = {
+    val dim = centroids(0).length
+    val sums = (0 until dim).map(i =>
+      sum(element_at(col("x"), i + 1)).as(s"s$i"))
+    df.select(element_at(ivfCells(col(embCol), centroids, 1), 1).as("cell"),
+        col(embCol).as("x"))
+      .groupBy("cell")
+      .agg(count(lit(1)).as("n"), sums: _*)
+  }
+
   /** Deterministic Lloyd (k-means) training for the IVF codebook, as the
     * batch job the 100 TB deployment runs offline. Everything is part of
     * the query contract so an oracle can replicate it: init = the `k`
@@ -124,35 +161,11 @@ object AnnFunctions {
     * assignments are stable as long as centroid margins exceed ~1e-12,
     * which holds for any non-degenerate corpus.
     */
-  /** One Lloyd round's aggregate plan: (cell, n, s0..s(dim-1)) — exposed so
-    * the spec can pin the physical shape (no Generate, one exchange of
-    * ~k×partitions partial rows).
-    */
-  private[graft] def trainRound(df: DataFrame, embCol: String,
-                                centroids: Array[Array[Double]]): DataFrame = {
-    val dim = centroids(0).length
-    val sums = (0 until dim).map(i =>
-      sum(element_at(col("x"), i + 1)).as(s"s$i"))
-    df.select(element_at(ivfCells(col(embCol), centroids, 1), 1).as("cell"),
-        col(embCol).as("x"))
-      .groupBy("cell")
-      .agg(count(lit(1)).as("n"), sums: _*)
-  }
-
   def trainCodebook(df: DataFrame, idCol: String, embCol: String,
                     k: Int, iters: Int): Array[Array[Double]] = {
-    var centroids: Array[Array[Double]] = df.orderBy(col(idCol)).limit(k)
-      .select(embCol).collect().map(_.getSeq[Double](0).toArray)
+    var centroids: Array[Array[Double]] = initRows(df, idCol, embCol, k)
     require(centroids.length == k, s"corpus smaller than codebook: ${centroids.length} < $k")
     val dim = centroids(0).length
-    // ragged/null guard: trainRound's per-cell mean divides primitive
-    // `sum(element_at(emb, i))` columns by `count(*)` — a null or short
-    // embedding would contribute to the count but not the sums, silently
-    // deflating centroids. Training is a one-off batch job, so one up-front
-    // validation pass is the right trade: fail loudly, never skew.
-    val ragged = df.filter(col(embCol).isNull || size(col(embCol)) =!= dim).count()
-    require(ragged == 0,
-      s"$ragged embeddings are null or not length $dim — clean the corpus before training")
     for (_ <- 0 until iters) {
       val next = centroids.map(_.clone())
       trainRound(df, embCol, centroids).collect()
@@ -259,8 +272,8 @@ object AnnFunctions {
     * one FileScan in the plan), where the round-8 form re-scanned the
     * corpus per subspace (m scans per round plus m dimension/validity
     * probes — at dim=768/m=96 that is 96× the training IO). The init
-    * collect doubles as the dimension probe, and the ragged-input guard
-    * runs once instead of once per subspace. Codebooks are bit-identical
+    * collect doubles as the dimension probe and the ragged/null guard, run
+    * once instead of once per subspace. Codebooks are bit-identical
     * to independent per-slice [[trainCodebook]] runs (`IvfSpec` pins it):
     * per-(subspace, cell) sums accumulate over the same rows in the same
     * partition order either way — so only while the input partitioning
@@ -269,22 +282,16 @@ object AnnFunctions {
   def trainPqCodebooks(df: DataFrame, idCol: String, embCol: String,
                        m: Int, k: Int, iters: Int): Array[Array[Array[Double]]] = {
     // init = the k lowest-id vectors (full-dim — each subspace slices its
-    // window), ONE collect that also yields the dimension
-    val initRows = df.orderBy(col(idCol)).limit(k)
-      .select(embCol).collect().map(_.getSeq[Double](0).toArray)
-    require(initRows.nonEmpty, "trainPqCodebooks: empty input — nothing to train on")
-    require(initRows.length == k,
-      s"corpus smaller than codebook: ${initRows.length} < $k")
-    val dim = initRows(0).length
+    // window), ONE guarded collect that also yields the dimension
+    val init = initRows(df, idCol, embCol, k)
+    require(init.nonEmpty, "trainPqCodebooks: empty input — nothing to train on")
+    require(init.length == k,
+      s"corpus smaller than codebook: ${init.length} < $k")
+    val dim = init(0).length
     require(m >= 1 && dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val sub = dim / m
     var codebooks: Array[Array[Array[Double]]] =
-      (0 until m).toArray.map(j => initRows.map(_.slice(j * sub, (j + 1) * sub)))
-    // one ragged/null pass for ALL subspaces (same loud-failure contract as
-    // trainCodebook — see its scaladoc for why this is a separate action)
-    val ragged = df.filter(col(embCol).isNull || size(col(embCol)) =!= dim).count()
-    require(ragged == 0,
-      s"$ragged embeddings are null or not length $dim — clean the corpus before training")
+      (0 until m).toArray.map(j => init.map(_.slice(j * sub, (j + 1) * sub)))
     for (_ <- 0 until iters) {
       val next = codebooks.map(_.map(_.clone()))
       trainPqRound(df, embCol, codebooks).collect().foreach { r =>

@@ -288,8 +288,9 @@ object Multimodal {
     * round-robin repartitioned to the cluster's parallelism BEFORE
     * payloads exist — the cheapest possible placement of the exchange
     * (move small rows, then generate the heavy bytes; guide §8): m4
-    * measured 1.39 s → 0.39 s at sf0.1. A data-scale input already
-    * arrives with ≥ cores partitions and skips the exchange. The audio
+    * measured 1.39 s → 0.39 s at sf0.1. The exchange runs whatever the
+    * input's partitioning: it moves only the ids, and deciding to skip it
+    * would cost a plan-time RDD conversion of the input. The audio
     * and header-only legs deliberately stay un-spread — measured SLOWER
     * parallelized at fixture scale (m5/m6/m7 0.24/0.31/0.29 s → 0.53/
     * 0.64/0.63 s: `javax.sound` provider lookup serializes across tasks
@@ -302,9 +303,8 @@ object Multimodal {
                            realSamples: Boolean = false): Dataset[MediaRow] = {
     import df.sparkSession.implicits._
     val ids = df.select(col(idCol).cast("long").as("doc_id"))
-    val par = df.sparkSession.sparkContext.defaultParallelism
     val spread =
-      if (realPixels && ids.rdd.getNumPartitions < par) ids.repartition(par)
+      if (realPixels) ids.repartition(df.sparkSession.sparkContext.defaultParallelism)
       else ids
     spread.as[Long].map { id =>
       val payload = (id % 3) match {

@@ -1,7 +1,7 @@
 package graft.mapper
 
-import graft.core.{Iri, Xsd}
-import graft.expr.CsvwFunctions
+import graft.core.Iri
+import graft.expr.{CsvwFunctions, LitTripleSpec}
 import graft.model.{ResolvedColumn, ResolvedTable}
 
 import org.apache.spark.sql.{Column, DataFrame}
@@ -33,9 +33,14 @@ object Vocab {
   *
   * Design (SURVEY.md §2.7): everything stays in expression land —
   * per-column [[graft.expr.CsvwCellExpr]] structs, URI-template expressions,
-  * per-column `array<triple>` construction, one `flatten` + `explode`.
-  * No Scala closures in the hot path, so the whole mapper is a single
-  * WholeStageCodegen stage over the scan. Blank nodes are deterministically
+  * one `flatten` + `explode`. Every triple whose object is a cell value
+  * (plain literals under any subject or predicate template, ordered lists,
+  * standard mode's `csvw:title`) is built by ONE
+  * [[graft.expr.LitTriplesExpr]] call per row, the only place a cell value
+  * becomes a literal; a predicate template that names no row variable
+  * reaches it as a literal once Catalyst folds it. The IRI-object triples
+  * (`valueUrl`, `csvw:describes`, the row triples) are composed Column
+  * expressions. Blank nodes are deterministically
   * skolemized from the caller-supplied per-row key (north rule: derived from
   * `(conv_id, turn_idx)` for transcripts), unlike the reference's fresh
   * process-local bnodes (`reader.rb:301-302`), so output is reproducible and
@@ -96,9 +101,8 @@ object TripleMapper {
     val defaultSubject = concat(lit("_:d"), col("__skolem"))
 
     // Hoist each distinct aboutUrl template into ONE staged column: the
-    // expansion would otherwise be re-evaluated inside every per-column
-    // triple lambda (visible as N copies of uritemplateexpandexpr in the
-    // Generate node — lambda scopes defeat common-subexpression elimination).
+    // expansion would otherwise be re-evaluated for every column it is the
+    // subject of (N copies of uritemplateexpandexpr in the Generate node).
     // only templates without per-cell variables (_name/_column/_sourceColumn)
     // are hoistable — those expand identically for every column
     // staged-column names keyed by position in the deduplicated template
@@ -123,50 +127,14 @@ object TripleMapper {
       c.propertyUrl.map(cells.expand(_, c))
         .getOrElse(lit(Iri.recompose(Iri.parse(base).copy(fragment = Some(c.name)))))
 
-    // literal lang/dtype rendering per element (metadata.rb:2091-2096, 2263-2276).
-    // The plain-literal carve-out keys on the EXPANDED datatype, not the base:
-    // a custom `@id` over base "string" emits a typed literal with that IRI
-    // (`metadata.rb:2090` expanded_dt = datatype.id || expand(base), :2270).
-    def litTr(c: ResolvedColumn, subj: Column, pred: Column, v: Column): Column = {
-      val ok = v.getField("ok")
-      val langLit = if (c.lang != "und") lit(c.lang) else nullS
-      val (langC, dtypeC) =
-        if (c.datatypeIri == Xsd.expandedIri("string")) (langLit, nullS)
-        else (when(!ok, langLit).otherwise(nullS),
-              when(ok, lit(c.datatypeIri)).otherwise(nullS))
-      tr(subj, pred, v.getField("lex"), lit(false), langC, dtypeC)
-    }
-
-    // triples for one column
-    def columnTriples(c: ResolvedColumn): Option[Column] = {
-      if (c.suppressOutput) return None
-      val about = aboutOf(c)
-      val pred = predOf(c)
-      val entity: Column = c.valueUrl match {
-        case Some(vu) =>
-          // valueUrl skipped when cell null and column non-virtual
-          // (metadata.rb:1960-1961)
-          val cond = if (c.virtual) lit(true) else !cells.isNull(c)
-          when(cond, array(iriTr(about, pred, cells.expand(vu, c)))).otherwise(emptyTriples)
-        case None if c.ordered && c.separator.isDefined =>
-          // rdf:List emission (reader.rb:332-338): deterministic cons bnodes
-          val n = size(vals(c))
-          val bn: Column => Column = pos =>
-            concat(lit("_:l"), col("__skolem"), lit("." + c.name + "."), pos.cast("string"))
-          val head = when(n === 0, array(iriTr(about, pred, lit(Vocab.RdfNil))))
-            .otherwise(array(iriTr(about, pred, bn(lit(0)))))
-          val conses = flatten(zip_with(
-            vals(c), sequence(lit(0), n - 1),
-            (v, pos) => array(
-              litTr(c, bn(pos), lit(Vocab.RdfFirst), v),
-              iriTr(bn(pos), lit(Vocab.RdfRest),
-                when(pos === n - 1, lit(Vocab.RdfNil)).otherwise(bn(pos + 1))))))
-          concat(head, when(n > 0, conses).otherwise(emptyTriples))
-        case None =>
-          transform(vals(c), v => litTr(c, about, pred, v)).cast(tripleArray)
+    // valueUrl triples: IRI objects, skipped when the cell is null and the
+    // column non-virtual (metadata.rb:1960-1961)
+    val valueUrlTriples: Seq[Column] =
+      cols.filter(c => !c.suppressOutput && c.valueUrl.isDefined).map { c =>
+        val cond = if (c.virtual) lit(true) else !cells.isNull(c)
+        when(cond, array(iriTr(aboutOf(c), predOf(c), cells.expand(c.valueUrl.get, c))))
+          .otherwise(emptyTriples)
       }
-      Some(entity)
-    }
 
     // standard mode: one csvw:describes per *distinct* cell subject
     // (the reference emits one per cell, reader.rb:328, but RDF graph set
@@ -189,64 +157,30 @@ object TripleMapper {
         // fragment table's rows live at <doc>#row=N, not <doc>#frag#row=N)
         val rowUrl = concat(lit(base.takeWhile(_ != '#') + "#row="),
           col("__srcnum").cast("string"))
-        val titleTrs = table.rowTitles.flatMap { tn =>
-          cols.find(_.name == tn).map { c =>
-            transform(vals(c), v => litTr(c, rowRes, lit(Vocab.Csvw + "title"), v))
-              .cast(tripleArray)
-          }
-        }
-        val fixed = array(
+        Some(array(
           iriTr(lit(tableResource), lit(Vocab.Csvw + "row"), rowRes),
           tr(rowRes, lit(Vocab.Csvw + "rownum"), col("__rownum").cast("string"),
             lit(false), nullS, lit(Vocab.XsdInteger)),
           iriTr(rowRes, lit(Vocab.RdfType), lit(Vocab.Csvw + "Row")),
-          iriTr(rowRes, lit(Vocab.Csvw + "url"), rowUrl))
-        Some(titleTrs.foldLeft(fixed)((acc, t) => concat(acc, t)))
+          iriTr(rowRes, lit(Vocab.Csvw + "url"), rowUrl)))
       }
 
-    // Fused fast path: plain-literal columns (no valueUrl, no list emission)
-    // whose predicate folds to a plan-time constant and whose subject is
-    // either the default skolem or a hoisted aboutUrl column emit through
-    // ONE LitTriplesExpr per subject group — a single preallocated array
-    // fill per row instead of k transform lambdas + flatten intermediates.
-    def staticPred(c: ResolvedColumn): Option[String] = c.propertyUrl match {
-      case None => Some(Iri.recompose(Iri.parse(base).copy(fragment = Some(c.name))))
-      case Some(t) => CsvwFunctions.constTemplate(t, base, RowCells.cellVars(c).toMap)
+    // every triple whose object is a cell value, in one LitTriplesExpr:
+    // standard mode's csvw:title per row title column, then each output
+    // column without a valueUrl (an ordered list as an rdf:List)
+    val titleParts =
+      if (minimal) Nil
+      else table.rowTitles.flatMap(tn => cols.find(_.name == tn)).map { c =>
+        ((rowRes, lit(Vocab.Csvw + "title"), vals(c)), LitTripleSpec(c, list = false))
+      }
+    val cellParts = cols.filter(c => !c.suppressOutput && c.valueUrl.isEmpty).map { c =>
+      ((aboutOf(c), predOf(c), vals(c)), LitTripleSpec(c, list = c.ordered && c.separator.isDefined))
     }
-    val fusedCandidates: Seq[(String, ResolvedColumn, String)] =
-      cols.filterNot(_.suppressOutput).flatMap { c =>
-        val plainLit = c.valueUrl.isEmpty && !(c.ordered && c.separator.isDefined)
-        val aboutKey: Option[String] = c.aboutUrl match {
-          case None => Some("__default__")
-          case Some(t) => aboutTemplates.get(t.template) // hoisted = row-constant
-        }
-        if (!plainLit) None
-        else for {
-          key <- aboutKey
-          p <- staticPred(c)
-        } yield (key, c, p)
-      }
-    val fusedNames = fusedCandidates.map(_._2.name).toSet
-    val fusedParts: Seq[Column] = fusedCandidates.groupBy(_._1).toSeq
-      .sortBy(_._1).map { case (key, entries) =>
-        val about = if (key == "__default__") defaultSubject else col(key)
-        graft.expr.CsvwFunctions.litTriples(
-          about,
-          entries.map { case (_, c, _) => vals(c) },
-          entries.map { case (_, c, p) =>
-            graft.expr.LitTripleSpec(
-              pred = p,
-              lang = if (c.lang != "und") c.lang else null,
-              dtypeIri = if (c.datatypeIri == Xsd.expandedIri("string")) null
-                         else c.datatypeIri,
-              isString = c.datatypeIri == Xsd.expandedIri("string"))
-          }).cast(tripleArray)
-      }
+    val (parts, specs) = (titleParts ++ cellParts).unzip
+    val litTriples = CsvwFunctions.litTriples(col("__skolem"), parts, specs).cast(tripleArray)
 
-    val allParts: Seq[Column] =
-      rowTriples.toSeq ++ describesTriples.toSeq ++ fusedParts ++
-        cols.filterNot(c => fusedNames.contains(c.name)).flatMap(columnTriples)
-    val all = flatten(array(allParts: _*))
+    val all = flatten(array(rowTriples.toSeq ++ describesTriples.toSeq ++
+      (litTriples +: valueUrlTriples): _*))
 
     // `carry` threads input columns (e.g. an event-time timestamp for
     // streaming-state TTL) through the explode unchanged

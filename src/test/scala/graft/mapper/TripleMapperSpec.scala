@@ -240,4 +240,108 @@ class TripleMapperSpec extends AnyFunSuite {
       .filter(_.get("role").asText() == "user").map(_.get("@id").asText())
     assert(ids.toSeq == subject.toSeq)
   }
+  // Parity cases for the shapes whose literal triples are built by the one
+  // literal emitter: each pins the exact triple set.
+  private val R = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+  private val C = "http://www.w3.org/ns/csvw#"
+  private val X = "http://www.w3.org/2001/XMLSchema#"
+  private def lit3(s: String, p: String, o: String, lang: String = null, dtype: String = null) =
+    Triple(s, p, o, obj_iri = false, lang, dtype)
+  private def iri3(s: String, p: String, o: String) = Triple(s, p, o, obj_iri = true, null, null)
+  private def mapped(json: String, df: org.apache.spark.sql.DataFrame,
+                     minimal: Boolean = true): Set[Triple] = {
+    val t = graft.model.Resolve.group(CsvwJson.parseTableGroup(json)).head
+    TripleMapper.triples(df, t, t.nonVirtual.map(c => c.name -> col(c.name)).toMap,
+      col("rn"), col("rn"), col("rn"), minimal = minimal).as[Triple].collect().toSet
+  }
+
+  test("literal columns under a per-column aboutUrl ({#_name})") {
+    val json = """{
+      "url": "http://example.org/t",
+      "tableSchema": {
+        "aboutUrl": "{#_name}",
+        "columns": [
+          {"name": "label", "datatype": "string", "lang": "en"},
+          {"name": "n", "datatype": "integer"}
+        ]
+      }
+    }"""
+    val df = Seq(("a", "1", 1), ("b", "x", 2)).toDF("label", "n", "rn")
+    val T = "http://example.org/t"
+    assert(mapped(json, df) == Set(
+      lit3(T + "#label", T + "#label", "a", lang = "en"),
+      lit3(T + "#label", T + "#label", "b", lang = "en"),
+      lit3(T + "#n", T + "#n", "1", dtype = X + "integer"),
+      lit3(T + "#n", T + "#n", "x")))
+  }
+
+  test("a literal column under a row-varying propertyUrl") {
+    val json = """{
+      "url": "http://example.org/t",
+      "tableSchema": {
+        "aboutUrl": "urn:row:{_row}",
+        "columns": [
+          {"name": "kind", "datatype": "string", "suppressOutput": true},
+          {"name": "v", "datatype": "integer", "propertyUrl": "http://example.org/p/{kind}"}
+        ]
+      }
+    }"""
+    val df = Seq(("size", "3", 1), ("weight", "4", 2), ("", "5", 3)).toDF("kind", "v", "rn")
+    assert(mapped(json, df) == Set(
+      lit3("urn:row:1", "http://example.org/p/size", "3", dtype = X + "integer"),
+      lit3("urn:row:2", "http://example.org/p/weight", "4", dtype = X + "integer"),
+      lit3("urn:row:3", "http://example.org/p/", "5", dtype = X + "integer")))
+  }
+
+  test("an ordered integer list with a language: 0, 1 and 3 values, one unparseable") {
+    val json = """{
+      "url": "http://example.org/t",
+      "tableSchema": {
+        "aboutUrl": "urn:row:{_row}",
+        "columns": [
+          {"name": "nums", "separator": " ", "ordered": true, "datatype": "integer",
+           "lang": "de"}
+        ]
+      }
+    }"""
+    val df = Seq(("", 1), ("7", 2), ("1 x 3", 3)).toDF("nums", "rn")
+    val P = "http://example.org/t#nums"
+    assert(mapped(json, df) == Set(
+      iri3("urn:row:1", P, R + "nil"),
+      iri3("urn:row:2", P, "_:l2.nums.0"),
+      lit3("_:l2.nums.0", R + "first", "7", dtype = X + "integer"),
+      iri3("_:l2.nums.0", R + "rest", R + "nil"),
+      iri3("urn:row:3", P, "_:l3.nums.0"),
+      lit3("_:l3.nums.0", R + "first", "1", dtype = X + "integer"),
+      iri3("_:l3.nums.0", R + "rest", "_:l3.nums.1"),
+      // unparseable: the language tag stands in for the datatype
+      lit3("_:l3.nums.1", R + "first", "x", lang = "de"),
+      iri3("_:l3.nums.1", R + "rest", "_:l3.nums.2"),
+      lit3("_:l3.nums.2", R + "first", "3", dtype = X + "integer"),
+      iri3("_:l3.nums.2", R + "rest", R + "nil")))
+  }
+
+  test("rowTitles on a non-string column with an invalid value, standard mode") {
+    val json = """{
+      "url": "http://example.org/t",
+      "tableSchema": {
+        "aboutUrl": "urn:row:{_row}",
+        "rowTitles": ["n"],
+        "columns": [{"name": "n", "datatype": "integer", "lang": "en"}]
+      }
+    }"""
+    val df = Seq(("5", 1), ("bad", 2)).toDF("n", "rn")
+    def row(i: Int, cell: Triple): Set[Triple] = Set(
+      iri3("_:table1", C + "row", s"_:r$i"),
+      lit3(s"_:r$i", C + "rownum", i.toString, dtype = X + "integer"),
+      iri3(s"_:r$i", R + "type", C + "Row"),
+      iri3(s"_:r$i", C + "url", s"http://example.org/t#row=$i"),
+      iri3(s"_:r$i", C + "describes", s"urn:row:$i"),
+      cell.copy(subj = s"_:r$i", pred = C + "title"),
+      cell)
+    val P = "http://example.org/t#n"
+    assert(mapped(json, df, minimal = false) ==
+      row(1, lit3("urn:row:1", P, "5", dtype = X + "integer")) ++
+      row(2, lit3("urn:row:2", P, "bad", lang = "en")))
+  }
 }

@@ -155,6 +155,28 @@ class IvfSpec extends AnyFunSuite {
     assert(got == Map(1L -> Seq(0, 1), 2L -> Seq(1, 0)))
   }
 
+  /** `base` with a null embedding at `nullId` and a 3-long one at `shortId`. */
+  private def ragged(nullId: Long, shortId: Long) = base.withColumn("embedding",
+    when(col("vec_id") === nullId, lit(null))
+      .when(col("vec_id") === shortId, slice(col("embedding"), 1, 3))
+      .otherwise(col("embedding")))
+
+  test("trainCodebook: a null init row and a short row beyond the init fail by name") {
+    val ex = intercept[IllegalArgumentException] {
+      AnnFunctions.trainCodebook(ragged(nullId = 2, shortId = 50), "vec_id", "embedding",
+        k = 8, iters = 1)
+    }
+    assert(ex.getMessage.contains(s"1 null, lengths 3 to $Dim"), ex.getMessage)
+  }
+
+  test("trainPqCodebooks: a null init row and a short row beyond the init fail by name") {
+    val ex = intercept[IllegalArgumentException] {
+      AnnFunctions.trainPqCodebooks(ragged(nullId = 1, shortId = 40), "vec_id", "embedding",
+        m = 2, k = 4, iters = 1)
+    }
+    assert(ex.getMessage.contains(s"1 null, lengths 3 to $Dim"), ex.getMessage)
+  }
+
   test("trainPqCodebooks == independent trainCodebook per subvector slice") {
     val cbs = AnnFunctions.trainPqCodebooks(base, "vec_id", "embedding",
       m = 2, k = 4, iters = 2)

@@ -67,6 +67,53 @@ class PlanShapeSpec extends AnyFunSuite {
     assert("Generate".r.findAllMatchIn(plan).length == 1, plan)
   }
 
+  /** Every expression in `df`'s optimized plan, descendants included. */
+  private def optimizedExprs(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.optimizedPlan.collect { case n => n.expressions }.flatten
+      .flatMap(_.collect { case e => e })
+
+  test("transcript mapping: one LitTriplesExpr, folded predicates, no lambda") {
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, Literal}
+    import graft.expr.{LitTriplesExpr, UriTemplateExpandExpr}
+    // a range source: the optimizer would evaluate the whole mapping over a
+    // LocalRelation at plan time and leave no expression to inspect
+    val tr = spark.range(0, 4, 1, 2).selectExpr("'c1' AS conv_id",
+      "CAST(id AS INT) AS turn_idx", "'user' AS role", "'hello' AS text", "'' AS tool",
+      "TIMESTAMP'2024-01-01 00:00:00' AS ts")
+    val table = graft.SparkEntry.transcriptTable
+    val exprs = optimizedExprs(graft.streaming.TranscriptStream.triples(tr, table))
+    val lits = exprs.collect { case e: LitTriplesExpr => e }
+    assert(lits.length == 1, exprs.mkString("\n"))
+    // the hoisted aboutUrl is the only template left to expand per row
+    assert(exprs.count(_.isInstanceOf[UriTemplateExpandExpr]) == 1, exprs.mkString("\n"))
+    // children: the skolem, then (subject, predicate, vals) per column; every
+    // `{_name}` predicate arrives folded to its IRI
+    val preds = lits.head.children.tail.grouped(3).map(_(1)).toSeq
+    assert(preds.map {
+      case l: Literal => l.value.toString
+      case other => fail(s"predicate not folded: $other")
+    } == table.columns.map(c => "https://example.org/transcript#" + c.name))
+    assert(!exprs.exists(_.isInstanceOf[LambdaFunction]), exprs.mkString("\n"))
+  }
+
+  test("standard-mode ordered list: built by LitTriplesExpr, no zip_with") {
+    import org.apache.spark.sql.catalyst.expressions.ZipWith
+    import graft.expr.LitTriplesExpr
+    val json = """{
+      "url": "http://example.org/t",
+      "tableSchema": {
+        "aboutUrl": "urn:row:{_row}",
+        "columns": [{"name": "tags", "separator": ";", "ordered": true}]
+      }
+    }"""
+    val t = graft.model.Resolve.group(graft.model.CsvwJson.parseTableGroup(json)).head
+    val df = spark.range(1, 3, 1, 2).selectExpr("'a;b' AS tags", "id AS rn")
+    val exprs = optimizedExprs(graft.mapper.TripleMapper.triples(df, t,
+      Map("tags" -> col("tags")), col("rn"), col("rn"), col("rn"), minimal = false))
+    assert(exprs.count(_.isInstanceOf[LitTriplesExpr]) == 1, exprs.mkString("\n"))
+    assert(!exprs.exists(_.isInstanceOf[ZipWith]), exprs.mkString("\n"))
+  }
+
   test("stratified sampling: deterministic, rate-accurate, exchange-free") {
     import graft.functions.Sampling
     val docs = spark.range(0, 100000, 1, 8).selectExpr(
