@@ -93,7 +93,7 @@ object Bench {
     val cp = System.getProperty("java.class.path")
     val cmd = Seq(java, "-Xmx8g", "-Dspark.ui.enabled=false",
       "-Dspark.sql.session.timeZone=UTC") ++ addOpens ++
-      Seq("-cp", cp, "graft.BenchWorker", cores.toString, corpus, "full")
+      Seq("-cp", cp, "graft.BenchWorker", cores.toString, corpus)
     val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
     // local-cluster executors are launched through the standalone Worker,
     // which resolves the Spark distribution from SPARK_HOME

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One isolated scaling measurement: fresh JVM per (cores) configuration so
   * successive runs don't inherit GC/code-cache state from each other —
   * measured order effects in a shared JVM distorted same-input runs by >2×.
-  * Spawned by [[Bench]] as `BenchWorker <cores> <corpus> [full|map]`;
+  * Spawned by [[Bench]] as `BenchWorker <cores> <corpus>`;
   * prints one `WORKER_RESULT <triples> <seconds>` line.
   */
 object BenchWorker {
@@ -62,30 +62,19 @@ object BenchWorker {
       .count()
   }
 
-  /** Map-only variant (no dedup shuffle) for bottleneck attribution. */
-  def mapOnlyCount(spark: SparkSession, inputPath: String): Long = {
-    val tr = spark.read.parquet(inputPath)
-    graft.streaming.TranscriptStream.triples(tr, SparkEntry.transcriptTable).count()
-  }
-
   def main(args: Array[String]): Unit = {
     val cores = args(0).toInt
     val corpus = args(1)
-    val run: SparkSession => Long = (if (args.length > 2) args(2) else "full") match {
-      case "full" => kgPipelineCount(_, corpus)
-      case "map" => mapOnlyCount(_, corpus)
-      case other => sys.error(s"unknown mode $other (full|map)")
-    }
     val spark = session(cores)
     // warm JIT/codegen on identical work, then report the best of two
     // measurements — the steady state a long job amortizes to; host noise
     // is one-sided, so in-worker best-of-2 tightens the estimator
     // (single measurements drifted the efficiency estimate by ±0.15
     // across windows)
-    run(spark)
+    kgPipelineCount(spark, corpus)
     val (n, dt) = (1 to 2).map { _ =>
       val t0 = System.nanoTime()
-      val n = run(spark)
+      val n = kgPipelineCount(spark, corpus)
       (n, (System.nanoTime() - t0) / 1e9)
     }.minBy(_._2)
     println(f"WORKER_RESULT $n $dt%.3f")

@@ -535,7 +535,9 @@ object SparkEntry {
       val docs = t(s, d, "documents").filter(col("doc_id") < 60)
       val m = EntityLink.mentions(docs, dict, "doc_id", "text")
         .select(col("doc_id").cast("string").as("doc_id"), col("entity_id"))
-      val edges = EntityLink.candidateEdges(m, "doc_id")
+      // the oracle links every pair of co-mentioning docs, so it checks
+      // that star edges give the same components as all pairs
+      val edges = EntityLink.starEdges(m, "doc_id")
       // tiny graph: size CC's shuffles (the edge dedup, and the rounds of
       // a graph too big for the driver) to the component count, not the
       // batch default (same sizing note as the streaming state partitions)
@@ -1071,7 +1073,7 @@ object SparkEntry {
     // payload's (0,0) blue channel — a value that exists only if real
     // pixels round-tripped the codec
     QueryDef("m4_resize_reencode", (s, d) =>
-      Multimodal.resizeImagesWithCorner(
+      Multimodal.resizeImages(
         Multimodal.withSyntheticPayload(
           t(s, d, "documents").filter(col("doc_id") < 300), "doc_id",
           realPixels = true),

@@ -14,16 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object DedupFunctions {
 
-  /** Exact duplicate groups by normalized-content fingerprint: one hash
-    * shuffle with map-side partial aggregation.
-    */
-  def exactDupGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol), TextFunctions.fingerprint(col(textCol)).as("fp"))
-      .groupBy("fp")
-      .agg(count(lit(1)).as("dup_count"),
-           sort_array(collect_list(col(idCol))).as("ids"))
-      .filter(col("dup_count") > 1)
-
   /** MinHash signature: k independent permutations approximated by seeded
     * xxhash64; sig[k] = min over shingles of hash(shingle, k). Fused codegen
     * ([[graft.expr.MinHashSigExpr]]): each shingle's string hashes once and

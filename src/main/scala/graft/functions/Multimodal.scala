@@ -356,7 +356,7 @@ object Multimodal {
                                     out_bytes: Int)
 
   /** Stride-decimation resample over REAL decoded samples with WAV
-    * re-encode — the audio counterpart of [[resizeImagesWithCorner]]: PCM16
+    * re-encode — the audio counterpart of [[resizeImages]]: PCM16
     * decode through the JDK codec, keep every `stride`-th frame (all its
     * channels), re-encode a complete RIFF/WAVE payload at the decimated
     * rate, then decode the EMITTED payload again in the same partition pass
@@ -491,8 +491,8 @@ object Multimodal {
     * smaller images pass through. The target-dimension math is pure
     * codegen'd Columns (one map stage — no shuffle, no UDF); dims stay well
     * inside double precision, so `floor(a*m/l)` is exact and an external
-    * oracle replicates it bit-for-bit. [[reencode]] carries the byte-level
-    * leg where a real pixel codec would drop into the partition loop.
+    * oracle replicates it bit-for-bit. [[resizeImages]] is the byte-level
+    * leg, where the real pixel codec runs in the partition loop.
     */
   def resizePlan(decoded: Dataset[DecodedRow], maxSide: Int): DataFrame = {
     require(maxSide >= 1, s"maxSide must be >= 1: $maxSide")
@@ -508,46 +508,28 @@ object Multimodal {
   }
 
   final case class ResizedRow(doc_id: Long, out_width: Int, out_height: Int,
-    payload: Array[Byte])
-
-  /** Byte-level re-encode of a [[resizePlan]] output. When the input
-    * carries a `payload` column with decodable rasters, pixels are REALLY
-    * resampled ([[resamplePng]]: ImageIO decode → bilinear `Graphics2D` →
-    * PNG encode); header-only container prefixes (metadata corpora) fall
-    * back to a container-level PNG at the target dims — and each fallback
-    * counts on `fallbacks` when provided, so a 100 TB run's stage metrics
-    * distinguish "all real pixels" from "all fell back" (the cell-error
-    * accumulator pattern). Partition-batched: one map stage, no shuffle —
-    * codec state amortizes per partition.
-    */
-  def reencode(plan: DataFrame,
-               fallbacks: Option[org.apache.spark.util.LongAccumulator] = None
-              ): Dataset[ResizedRow] = {
-    import plan.sparkSession.implicits._
-    if (plan.columns.contains("payload"))
-      plan.select(col("doc_id").cast("long"), col("out_width").cast("int"),
-          col("out_height").cast("int"), col("payload")).as[(Long, Int, Int, Array[Byte])]
-        .mapPartitions { it =>
-          it.map { case (id, ow, oh, payload) =>
-            ResizedRow(id, ow, oh,
-              resamplePng(payload, ow, oh).getOrElse {
-                fallbacks.foreach(_.add(1)); pngBytes(ow, oh)
-              })
-          }
-        }
-    else
-      plan.select(col("doc_id").cast("long"), col("out_width").cast("int"),
-          col("out_height").cast("int")).as[(Long, Int, Int)]
-        .mapPartitions { it =>
-          it.map { case (id, ow, oh) => ResizedRow(id, ow, oh, pngBytes(ow, oh)) }
-        }
-  }
+    payload: Array[Byte], corner_b: Option[Int])
 
   /** End-to-end byte leg: image payloads → header dims → aspect-preserving
     * fit (the same floor-scaled rational [[resizePlan]] plans, in exact
-    * integer math) → real pixel resample + PNG re-encode. ONE map stage —
-    * dims, resample, and encode all happen in the same partition pass, no
-    * shuffle, payloads never ship twice.
+    * integer math) → real pixel resample ([[resamplePng]]: ImageIO decode →
+    * bilinear `Graphics2D` → PNG encode). Payloads whose rasters do not
+    * decode (header-only container prefixes) fall back to a container-level
+    * PNG at the target dims, and each fallback counts on `fallbacks` when
+    * provided, so a run's stage metrics distinguish "all real pixels" from
+    * "all fell back".
+    *
+    * `corner_b` is a pixel-derived verification column: for IDENTITY
+    * resamples (out dims == in dims, where the bilinear pass is pixel-exact
+    * — spec-pinned) it carries the blue channel of the EMITTED payload's
+    * (0,0) pixel, which the gradient formula predicts as `(seed·31) & 0xff`;
+    * scaled rows carry None (interpolated corners aren't oracle-replicable
+    * in integer math). It lets an external oracle's hash cover a value that
+    * only exists if real pixels round-tripped the codec.
+    *
+    * ONE map stage — dims, resample, encode and the corner decode of the
+    * just-encoded bytes all happen in the same partition pass, no shuffle,
+    * payloads never ship twice.
     */
   def resizeImages(media: Dataset[MediaRow], maxSide: Int,
                    fallbacks: Option[org.apache.spark.util.LongAccumulator] = None
@@ -565,44 +547,9 @@ object Multimodal {
               if (long <= maxSide) s
               else math.max((s.toLong * maxSide / long).toInt, 1)
             val (ow, oh) = (fit(w), fit(h))
-            Some(ResizedRow(m.doc_id, ow, oh,
-              resamplePng(m.payload, ow, oh).getOrElse {
-                fallbacks.foreach(_.add(1)); pngBytes(ow, oh)
-              }))
-          }
-        }
-      }
-  }
-
-  final case class ResizedCornerRow(doc_id: Long, out_width: Int,
-    out_height: Int, corner_b: Option[Int])
-
-  /** [[resizeImages]] plus a pixel-derived verification column: for
-    * IDENTITY resamples (out dims == in dims, where the bilinear pass is
-    * pixel-exact — spec-pinned), `corner_b` carries the blue channel of the
-    * EMITTED payload's (0,0) pixel, which the gradient formula predicts as
-    * `(seed·31) & 0xff`; scaled rows emit null (interpolated corners aren't
-    * oracle-replicable in integer math). Lets the external oracle's hash
-    * cover a value that only exists if real pixels round-tripped the codec.
-    * Still ONE map stage — the corner decode reads the just-encoded bytes
-    * in the same partition pass.
-    */
-  def resizeImagesWithCorner(media: Dataset[MediaRow], maxSide: Int
-                            ): Dataset[ResizedCornerRow] = {
-    require(maxSide >= 1, s"maxSide must be >= 1: $maxSide")
-    import media.sparkSession.implicits._
-    media.filter(col("media_type") === "image").as[MediaRow]
-      .mapPartitions { it =>
-        it.flatMap { m =>
-          val (kind, w, h, _) = decodeHeader(m.payload)
-          if (kind != "image" || w <= 0 || h <= 0) None
-          else {
-            val long = math.max(w, h)
-            def fit(s: Int): Int =
-              if (long <= maxSide) s
-              else math.max((s.toLong * maxSide / long).toInt, 1)
-            val (ow, oh) = (fit(w), fit(h))
-            val emitted = resamplePng(m.payload, ow, oh).getOrElse(pngBytes(ow, oh))
+            val emitted = resamplePng(m.payload, ow, oh).getOrElse {
+              fallbacks.foreach(_.add(1)); pngBytes(ow, oh)
+            }
             // identity ⇔ the INPUT already fit maxSide (ow==w, oh==h);
             // the emitted header always matches (ow, oh) by construction,
             // so the input dims are the only valid identity witness
@@ -613,7 +560,7 @@ object Multimodal {
                   if (img == null) None else Some(img.getRGB(0, 0) & 0xff)
                 } catch { case _: Exception => None }
               else None
-            Some(ResizedCornerRow(m.doc_id, ow, oh, corner))
+            Some(ResizedRow(m.doc_id, ow, oh, emitted, corner))
           }
         }
       }

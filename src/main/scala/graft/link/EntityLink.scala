@@ -37,28 +37,16 @@ object EntityLink {
         (length(col("tok")) / lit(20.0)).as("score"))
   }
 
-  /** Candidate-match edges between rows that share a linked entity —
-    * input to [[ConnectedComponents]] for canonicalization.
-    * Self-joins on entity_id with pair ordering to halve the edge set.
-    */
-  def candidateEdges(mentionsDf: DataFrame, keyCol: String): DataFrame = {
-    val a = mentionsDf.select(col("entity_id"), col(keyCol).as("src")).dropDuplicates()
-    val b = mentionsDf.select(col("entity_id"), col(keyCol).as("dst")).dropDuplicates()
-    a.join(b, Seq("entity_id"))
-      .filter(col("src") < col("dst"))
-      .select(col("src"), col("dst"))
-      .dropDuplicates()
-  }
-
-  /** [[candidateEdges]] in STAR topology — the 100 TB form: per entity,
-    * every member links to the MIN member (the hub) instead of to every
-    * other member. Connectivity (and therefore the connected components)
-    * is identical, but the edge count is Σk instead of Σk² — a hot entity
-    * with 10⁶ co-mentions makes the all-pairs form a 10¹²-row join output
-    * (the job-killer the north-star's "hot entities" clause names) while
-    * the star stays at 10⁶. One hash aggregate (map-side combinable min)
-    * plus one entity-keyed join; no hints, AQE handles the hot-entity
-    * skew on the join key.
+  /** Candidate-match edges between rows that share a linked entity, in
+    * star topology — input to [[ConnectedComponents]] for
+    * canonicalization. Per entity, every member links to the MIN member
+    * (the hub), so the rows of one entity are connected with Σk edges; an
+    * all-pairs edge set connects the same nodes into the same components
+    * with Σk², and a hot entity with 10⁶ co-mentions would make that a
+    * 10¹²-row join output (the job-killer the north-star's "hot entities"
+    * clause names). One hash aggregate (map-side combinable min) plus one
+    * entity-keyed join; no hints, AQE handles the hot-entity skew on the
+    * join key.
     */
   def starEdges(mentionsDf: DataFrame, keyCol: String): DataFrame = {
     val nodes = mentionsDf.select(col("entity_id"), col(keyCol).as("member"))

@@ -28,7 +28,7 @@ private[mapper] final class RowCells private (val staged: DataFrame, table: Reso
   // columns), then the row numbers
   private val rowVars: Seq[(String, Column)] =
     table.columns.map { c =>
-      c.name -> (if (c.separator.isDefined) transform(vals(c), x => x.getField("lex"))
+      c.name -> (if (c.separator.isDefined) vals(c).getField("lex")
                  else coalesce(RowCells.firstLex(vals(c)), lit("")))
     } ++ Seq(
       "_row" -> col("__rownum").cast("string"),

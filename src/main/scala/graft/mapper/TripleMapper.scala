@@ -142,10 +142,11 @@ object TripleMapper {
     val describesTriples: Option[Column] =
       if (minimal) None
       else {
-        val subjects = array_distinct(array(
-          cols.filterNot(_.suppressOutput).map(c => aboutOf(c).cast("string")): _*))
-        Some(transform(subjects,
-          a => iriTr(rowRes, lit(Vocab.Csvw + "describes"), a)).cast(tripleArray))
+        // row and predicate are constant per row, so distinct triples are
+        // distinct subjects; no lambda, which would take the Generate out
+        // of whole-stage codegen
+        Some(array_distinct(array(cols.filterNot(_.suppressOutput).map(c =>
+          iriTr(rowRes, lit(Vocab.Csvw + "describes"), aboutOf(c))): _*)).cast(tripleArray))
       }
 
     // standard-mode row-level triples (reader.rb:301-311)
@@ -213,12 +214,12 @@ object TripleMapper {
       skolem: Column): DataFrame = {
     // error rows are keyed by the skolem alone: no row numbers
     val cells = RowCells(df, table, inputs, skolem, lit(null), lit(null))
-    val errCols = table.columns.map { c =>
-      transform(cells.cell(c).getField("errs"),
-        e => struct(lit(c.name).as("column"), e.as("error")))
-    }
+    // one (column, errs) struct per column, then one row per error: two
+    // codegen'd Generates, no lambda
+    val perColumn = array(table.columns.map(c =>
+      struct(lit(c.name).as("column"), cells.cell(c).getField("errs").as("errs"))): _*)
     cells.staged
-      .select(col("__skolem").as("row_key"), explode(flatten(array(errCols: _*))).as("e"))
-      .select(col("row_key"), col("e.column").as("column"), col("e.error").as("error"))
+      .select(col("__skolem").as("row_key"), inline(perColumn))
+      .select(col("row_key"), col("column"), explode(col("errs")).as("error"))
   }
 }

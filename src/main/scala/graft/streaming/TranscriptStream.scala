@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.link.EntityLink
 import graft.model.ResolvedTable
 import graft.mapper.TripleMapper
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -78,26 +79,17 @@ object TranscriptStream {
       .agg(count(lit(1)).as("turns"))
 
   /** Streaming mention detection + per-entity windowed counts: the batch
-    * entity-link plan ([[graft.link.EntityLink.mentions]]) lifts onto the
+    * entity-link plan ([[EntityLink.mentions]]) lifts onto the
     * stream unchanged — a stateless broadcast-dictionary hash join
     * composes with the watermark and a windowed aggregate, so the only
     * streaming state is the window aggregate's (bounded by the watermark
     * horizon × live entities, never by the corpus). The dictionary hint
     * is a true dictionary — bounded by construction, not by corpus size.
     */
-  def mentionCounts(stream: DataFrame, dictionary: DataFrame): DataFrame = {
-    val toks = stream
-      .withWatermark("ts", "10 minutes")
-      .select(col("ts"),
-        posexplode(split(lower(col("text")), "[^a-z0-9]+")).as(Seq("pos", "tok")))
-      .filter(length(col("tok")) > 1)
-    val dict = dictionary
-      .select(col("entity_id"), lower(col("surface")).as("tok"))
-      .dropDuplicates("tok", "entity_id")
-    toks.join(broadcast(dict), Seq("tok"))
+  def mentionCounts(stream: DataFrame, dictionary: DataFrame): DataFrame =
+    EntityLink.mentions(stream.withWatermark("ts", "10 minutes"), dictionary, "ts", "text")
       .groupBy(window(col("ts"), "1 minute"), col("entity_id"))
       .agg(count(lit(1)).as("mentions"))
-  }
 
   /** Native bounded-state streaming dedup via Spark's
     * `dropDuplicatesWithinWatermark` — the built-in counterpart of

@@ -344,4 +344,25 @@ class TripleMapperSpec extends AnyFunSuite {
       row(1, lit3("urn:row:1", P, "5", dtype = X + "integer")) ++
       row(2, lit3("urn:row:2", P, "bad", lang = "en")))
   }
+
+  test("a list column named in aboutUrl and valueUrl templates expands every value") {
+    val json = """{
+      "url": "http://example.org/t",
+      "tableSchema": {
+        "aboutUrl": "urn:row:{_row}{?tags}",
+        "columns": [
+          {"name": "tags", "separator": ";", "suppressOutput": true},
+          {"name": "link", "virtual": true, "propertyUrl": "http://example.org/link",
+           "valueUrl": "urn:tag{/tags*}"}
+        ]
+      }
+    }"""
+    val df = Seq(("a;b;c", 1), ("x", 2), ("", 3)).toDF("tags", "rn")
+    val L = "http://example.org/link"
+    assert(mapped(json, df) == Set(
+      iri3("urn:row:1?tags=a,b,c", L, "urn:tag/a/b/c"),
+      iri3("urn:row:2?tags=x", L, "urn:tag/x"),
+      // a null cell binds the empty list
+      iri3("urn:row:3", L, "urn:tag")))
+  }
 }

@@ -10,6 +10,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * silent fallback into a thrown error, so this spec drives a
   * representative batch query set end-to-end with fallback forbidden.
   *
+  * It catches failed compiles only. A `CodegenFallback` expression (a
+  * higher-order function's lambda, say) takes its operator out of
+  * whole-stage codegen at planning time, and no compile fails, so it
+  * passes here: t3 did while its triple `Generate` ran interpreted.
+  * `PlanShapeSpec` pins whole-stage codegen per operator (the mapper's and
+  * `cellErrors`' `Generate`s, the fused text and embedding projections).
+  *
   * Streaming queries are excluded (their state-store projections are
   * exercised by `StreamTtlSpec`); queries whose plans are identical in
   * expression content to a covered one (facet variants) are sampled.

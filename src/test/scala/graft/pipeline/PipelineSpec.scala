@@ -63,19 +63,15 @@ class EntityLinkSpec extends AnyFunSuite {
 
   test("starEdges: linear edge count, same components as all-pairs edges") {
     // entity A spans {n1,n2,n3}, entity B spans {n3,n4}: n3 bridges them,
-    // so both edge constructions must yield ONE component labelled n1 —
-    // the star form with 3 edges (Σk), the all-pairs form with 4 (Σk²/2)
+    // so the all-pairs edges (4, Σk²/2) make ONE component labelled n1;
+    // the star form must give the same with 3 edges (Σk)
     val m = Seq(("A", "n1"), ("A", "n2"), ("A", "n3"), ("B", "n3"), ("B", "n4"))
       .toDF("entity_id", "k")
     val star = EntityLink.starEdges(m, "k")
-      .as[(String, String)].collect().toSet
-    assert(star == Set(("n1", "n2"), ("n1", "n3"), ("n3", "n4")))
-    val allPairs = EntityLink.candidateEdges(m, "k")
-    val c1 = ConnectedComponents.run(spark, EntityLink.starEdges(m, "k"))
-      .as[(String, String)].collect().toMap
-    val c2 = ConnectedComponents.run(spark, allPairs)
-      .as[(String, String)].collect().toMap
-    assert(c1 == c2 && c1.values.toSet == Set("n1"), s"$c1 vs $c2")
+    assert(star.as[(String, String)].collect().toSet ==
+      Set(("n1", "n2"), ("n1", "n3"), ("n3", "n4")))
+    val cc = ConnectedComponents.run(spark, star).as[(String, String)].collect().toMap
+    assert(cc == Map("n1" -> "n1", "n2" -> "n1", "n3" -> "n1", "n4" -> "n1"), cc)
   }
 
   test("canonicalizeSubjects: linked subjects merge onto the canonical, shared legs dedup") {
@@ -593,12 +589,6 @@ class FunctionsSpec extends AnyFunSuite {
     assert(s == Seq("a b c", "b c d"))
   }
 
-  test("exact dedup groups") {
-    val df = Seq((1L, "same text"), (2L, "Same  TEXT"), (3L, "other")).toDF("id", "text")
-    val g = DedupFunctions.exactDupGroups(df, "id", "text").collect()
-    assert(g.length == 1 && g(0).getSeq[Long](g(0).fieldIndex("ids")) == Seq(1L, 2L))
-  }
-
   test("minhash pairs: exact dup found, unrelated not; near-dup via high overlap") {
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3
     val near = base + "omega"                                 // ~95% shingle overlap
@@ -898,17 +888,6 @@ class FunctionsSpec extends AnyFunSuite {
     }
   }
 
-  test("reencode: resized PNG container round-trips the target dims") {
-    val df = (0 until 30).map(_.toLong).toDF("doc_id")
-    val plan = Multimodal.resizePlan(
-      Multimodal.decode(Multimodal.withSyntheticPayload(df, "doc_id")), maxSide = 64)
-    val rows = Multimodal.reencode(plan).collect()
-    assert(rows.length == 10)
-    rows.foreach { r =>
-      assert(Multimodal.decodeHeader(r.payload) == (("image", r.out_width, r.out_height, 1)))
-    }
-  }
-
   test("resizeImages: REAL pixels resample through the JDK codec end-to-end") {
     import javax.imageio.ImageIO
     // complete decodable PNGs (x/y gradient rasters), one over and one
@@ -958,20 +937,6 @@ class FunctionsSpec extends AnyFunSuite {
     assert(javax.imageio.ImageIO.getUseCache)
   }
 
-  test("reencode uses real pixels when the plan carries payloads") {
-    val payload = Multimodal.pngBytesReal(64, 64, seed = 3)
-    val plan = Seq((5L, 16, 16, payload))
-      .toDF("doc_id", "out_width", "out_height", "payload")
-    val r = Multimodal.reencode(plan).collect().head
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.payload))
-    assert(img != null && img.getWidth == 16 && img.getHeight == 16)
-    // header-only payloads still fall back to the container-level encode
-    val fallback = Seq((6L, 8, 8, Multimodal.pngBytes(64, 64)))
-      .toDF("doc_id", "out_width", "out_height", "payload")
-    val fb = Multimodal.reencode(fallback).collect().head
-    assert(Multimodal.decodeHeader(fb.payload) == (("image", 8, 8, 1)))
-  }
-
   test("pixel-leg fallback accumulator: real pixels report 0, header-only reports N") {
     // a 100 TB run must be able to tell "all real pixels" from "all fell
     // back" in its stage metrics (round-5 verdict nit): the counter is the
@@ -987,14 +952,13 @@ class FunctionsSpec extends AnyFunSuite {
       Multimodal.MediaRow(3L, "image", Multimodal.pngBytes(40, 20)),
       Multimodal.MediaRow(4L, "image", Multimodal.pngBytes(96, 48)),
       Multimodal.MediaRow(5L, "image", Multimodal.pngBytes(8, 8))).toDS()
-    assert(Multimodal.resizeImages(hdr, maxSide = 32, Some(hdrAcc)).collect().length == 3)
+    val hdrRows = Multimodal.resizeImages(hdr, maxSide = 32, Some(hdrAcc)).collect()
+    assert(hdrRows.length == 3)
     assert(hdrAcc.value == 3L, s"every header-only payload falls back: ${hdrAcc.value}")
-    // reencode's payload path counts through the same parameter
-    val reAcc = spark.sparkContext.longAccumulator("pixel_fallbacks_re")
-    val plan = Seq((6L, 8, 8, Multimodal.pngBytes(64, 64)))
-      .toDF("doc_id", "out_width", "out_height", "payload")
-    Multimodal.reencode(plan, Some(reAcc)).collect()
-    assert(reAcc.value == 1L)
+    // a fallback still emits a container-level PNG at the target dims
+    hdrRows.foreach { r =>
+      assert(Multimodal.decodeHeader(r.payload) == (("image", r.out_width, r.out_height, 1)))
+    }
   }
 
   test("wavBytesReal -> JDK codec decode round-trips the planted PCM16 samples") {
@@ -1084,13 +1048,13 @@ class FunctionsSpec extends AnyFunSuite {
     assert(acc.value == 0L, s"unexpected decode fallbacks: ${acc.value}")
   }
 
-  test("resizeImagesWithCorner: identity rows carry the emitted corner pixel") {
+  test("resizeImages: identity rows carry the emitted corner pixel") {
     val media = Seq(
       // identity: 20x10 fits maxSide 32 -> corner_b = (9*31) & 0xff
       Multimodal.MediaRow(2L, "image", Multimodal.pngBytesReal(20, 10, seed = 9)),
       // scaled: interpolated corners aren't oracle-replicable -> null
       Multimodal.MediaRow(1L, "image", Multimodal.pngBytesReal(96, 48, seed = 7))).toDS()
-    val rows = Multimodal.resizeImagesWithCorner(media, maxSide = 32)
+    val rows = Multimodal.resizeImages(media, maxSide = 32)
       .collect().sortBy(_.doc_id)
     assert(rows(0).corner_b.isEmpty, "scaled row must emit null corner")
     assert(rows(1).corner_b.contains((9 * 31) & 0xff),

@@ -114,6 +114,53 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!exprs.exists(_.isInstanceOf[ZipWith]), exprs.mkString("\n"))
   }
 
+  // standard mode over every column kind whose triples or errors the mapper
+  // builds: a rowTitles literal, an integer with one invalid cell, an
+  // ordered list, a valueUrl column and a virtual column whose valueUrl
+  // names the list
+  private lazy val wideTable = graft.model.Resolve.group(graft.model.CsvwJson.parseTableGroup("""{
+    "url": "http://example.org/t",
+    "tableSchema": {
+      "aboutUrl": "urn:row:{_row}",
+      "rowTitles": ["name"],
+      "columns": [
+        {"name": "name", "datatype": "string"},
+        {"name": "n", "datatype": "integer"},
+        {"name": "tags", "separator": ";", "ordered": true},
+        {"name": "ref", "valueUrl": "urn:ref:{ref}"},
+        {"name": "link", "virtual": true, "propertyUrl": "http://example.org/link",
+         "valueUrl": "urn:tag{/tags*}"}
+      ]
+    }
+  }""")).head
+  private def wideRows = spark.range(1, 5, 1, 2).selectExpr("concat('n', id) AS name",
+    "CASE WHEN id = 2 THEN 'x' ELSE CAST(id AS STRING) END AS n", "concat('a;', id) AS tags",
+    "CAST(id AS STRING) AS ref", "id AS rn")
+  private def wideInputs = wideTable.nonVirtual.map(c => c.name -> col(c.name)).toMap
+
+  /** Every `Generate` of `df`'s executed plan carries a whole-stage codegen
+    * `*(n)` marker, and its optimized plan holds no lambda. */
+  private def assertCodegenGenerates(df: org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    val plan = df.queryExecution.executedPlan.toString
+    val generates = plan.linesIterator.filter(_.contains("Generate ")).toSeq
+    assert(generates.nonEmpty &&
+      generates.forall(l => """^[\s+:|-]*\*\(\d+\) Generate """.r.findFirstIn(l).isDefined), plan)
+    val exprs = optimizedExprs(df)
+    assert(!exprs.exists(_.isInstanceOf[LambdaFunction]), exprs.mkString("\n"))
+  }
+
+  test("standard-mode mapping: the triple Generate stays in whole-stage codegen") {
+    assertCodegenGenerates(graft.mapper.TripleMapper.triples(wideRows, wideTable,
+      wideInputs, col("rn"), col("rn"), col("rn"), minimal = false))
+  }
+
+  test("cellErrors: its Generates stay in whole-stage codegen") {
+    val errs = graft.mapper.TripleMapper.cellErrors(wideRows, wideTable, wideInputs, col("rn"))
+    assertCodegenGenerates(errs)
+    assert(errs.collect().map(r => (r.getString(0), r.getString(1))).toSeq == Seq(("2", "n")))
+  }
+
   test("stratified sampling: deterministic, rate-accurate, exchange-free") {
     import graft.functions.Sampling
     val docs = spark.range(0, 100000, 1, 8).selectExpr(
