@@ -46,20 +46,13 @@ object BenchWorker {
     s
   }
 
-  /** Flagship pipeline: transcripts → CSVW triple mapper → two-stage dedup.
-    * The dedup is a group-only hash aggregate over the projected key: the
-    * partial (map-side) aggregate dedups before the exchange, so the
-    * shuffle carries ~distinct rows, not every duplicate (round 1 forced an
-    * explicit repartition first, which shipped every duplicate across the
-    * wire and blocked the partial).
+  /** Flagship pipeline: transcripts → CSVW triple mapper → the graph
+    * sink's dedup ([[graft.materialize.GraphWriter.sink]]), counted.
     */
   def kgPipelineCount(spark: SparkSession, inputPath: String): Long = {
     val tr = spark.read.parquet(inputPath)
     val triples = graft.streaming.TranscriptStream.triples(tr, SparkEntry.transcriptTable)
-    triples
-      .select("subj", "pred", "obj")
-      .dropDuplicates()
-      .count()
+    graft.materialize.GraphWriter.sink(triples).count()
   }
 
   def main(args: Array[String]): Unit = {

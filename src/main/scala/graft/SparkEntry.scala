@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{AnnFunctions, DedupFunctions, Mixing, Multimodal, Packing, Sampling, TextFunctions}
 import graft.link.{ConnectedComponents, EntityLink}
+import graft.materialize.GraphWriter
 import graft.mapper.{TripleMapper, Vocab}
 import graft.model.{CsvwJson, Resolve, ResolvedTable}
 import graft.sources.TranscriptGen
@@ -396,24 +397,20 @@ object SparkEntry {
          |SELECT '_:table1', '${C}url', 'http://example.org/transcripts', TRUE, NULL, NULL""".stripMargin
     }),
 
-    // ---- graph stages (materialize, canonicalize)
-    // full-row distinct plans as a group-only hash aggregate: map-side
-    // partial dedup before the exchange, no first()-carrier sort aggregate
+    // ---- graph stages (materialize, canonicalize), both through the sink rule
     QueryDef("g1_graph_materialize", (s, d) =>
-      transcriptTriples(s, d, minimal = true)
-        .dropDuplicates()
-        .sortWithinPartitions("subj", "pred", "obj"),
+      GraphWriter.sink(transcriptTriples(s, d, minimal = true)),
       s"$trCte SELECT DISTINCT * FROM (\n$minimalTriplesSelect\n)"),
 
     // the north-star composition end-to-end: transcript triples → mention
     // detection (broadcast dict) → STAR candidate edges (Σk, not Σk² — hot
     // entities stay linear) → connected components → subjects
     // rewritten to their component's canonical (lexicographic-min) URN →
-    // re-dedup. Each transcript text '{"k": N}' holds exactly ONE number
-    // token, so a turn links to at most one entity and the components are
-    // exactly the per-surface mention groups — which is what lets the
-    // oracle state the canonical map in closed form (min URN per surface)
-    // while the Spark side still runs the generic ConnectedComponents
+    // the sink's one dedup. Each transcript text '{"k": N}' holds exactly
+    // ONE number token, so a turn links to at most one entity and the
+    // components are exactly the per-surface mention groups — which is what
+    // lets the oracle state the canonical map in closed form (min URN per
+    // surface) while the Spark side still runs the generic ConnectedComponents
     QueryDef("g2_graph_canonicalize", (s, d) => {
       import s.implicits._
       val dict = Seq(("e_13", "13"), ("e_42", "42"), ("e_87", "87"),
@@ -424,7 +421,8 @@ object SparkEntry {
       val m = EntityLink.mentions(tr, dict, "subj_key", "text")
       val edges = EntityLink.starEdges(m, "subj_key")
       val comp = withStatePartitions(s, 8) { ConnectedComponents.run(s, edges) }
-      EntityLink.canonicalizeSubjects(transcriptTriples(s, d, minimal = true), comp)
+      GraphWriter.sink(
+        EntityLink.canonicalizeSubjects(transcriptTriples(s, d, minimal = true), comp))
     },
       // closed-form canonical map: each transcript text '{"k": N}' holds one
       // number token, so a turn mentions at most one dict surface and the

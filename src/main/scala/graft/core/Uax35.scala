@@ -13,7 +13,6 @@ import java.util.regex.{Matcher, Pattern}
   * (`uax35.rb:196`).
   */
 object Uax35 {
-  final case class Uax35Error(message: String) extends RuntimeException(message)
   /** Shared precompiled whitespace-run pattern (hot-path: one use per
     * parsed number; `String.replaceAll` would recompile it per call). */
   private[core] val WsRun = java.util.regex.Pattern.compile("\\s+")

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines: language
-  * ID (n-gram/stopword heuristic), quality scoring, token counting, document
-  * fingerprinting. All pure `org.apache.spark.sql.functions` compositions —
+  * ID (n-gram/stopword heuristic), quality scoring, token counting, shingles,
+  * PII redaction. All pure `org.apache.spark.sql.functions` compositions —
   * fully codegen'd, no UDFs, safe at 100 TB.
   */
 object TextFunctions {
@@ -88,12 +88,6 @@ object TextFunctions {
     round(lenScore * 0.25 + least(alphaRatio * 1.25, lit(1.0)) * 0.25 +
       least(stopRatio * 4, lit(1.0)) * 0.2 + wordLenScore * 0.15 + repPenalty * 0.15, 4)
   }
-
-  /** 64-bit content fingerprint over normalized text (whitespace-collapsed,
-    * lowercased) — the exact-dedup key.
-    */
-  def fingerprint(text: Column): Column =
-    xxhash64(regexp_replace(lower(trim(text)), "\\s+", " "))
 
   /** Word n-gram shingles. Fused codegen ([[graft.expr.ShinglesExpr]]): the
     * HOF formulation's lambda referenced the token array from outside the

@@ -61,15 +61,16 @@ object EntityLink {
   /** Canonicalize a triple table through a component labelling: every
     * subject that belongs to a component is rewritten to the component's
     * canonical id (its lexicographic-min member — [[ConnectedComponents]]'
-    * label), then the merged graph re-deduplicates, because co-referent
-    * subjects can carry identical (pred, obj) legs. Subjects outside any
-    * component pass through unchanged (left join + coalesce).
+    * label). Subjects outside any component pass through unchanged (left
+    * join + coalesce). This only rewrites: co-referent subjects can carry
+    * identical (pred, obj) legs, and the graph sink
+    * ([[graft.materialize.GraphWriter.sink]]) removes those duplicates with
+    * the rest, in the graph's one dedup.
     *
     * Scale shape: the canonical map is corpus-sized at web scale (one row
     * per linked subject), so the rewrite is a subj-keyed equi-join with NO
     * broadcast hint — AQE broadcasts it at fixture scale and shuffle-joins
-    * at data scale; the re-dedup is the same group-only hash aggregate as
-    * the g1 sink (map-side partial dedup before the exchange).
+    * at data scale.
     */
   def canonicalizeSubjects(triples: DataFrame, components: DataFrame): DataFrame =
     triples.join(
@@ -77,7 +78,6 @@ object EntityLink {
         Seq("subj"), "left")
       .select(coalesce(col("canon"), col("subj")).as("subj"), col("pred"),
         col("obj"), col("obj_iri"), col("lang"), col("dtype"))
-      .dropDuplicates()
 }
 
 /** Connected components over an edge DataFrame — hand-rolled (no GraphX),

@@ -26,27 +26,29 @@ import scala.jdk.CollectionConverters._
   */
 object GraphWriter {
 
-  /** Two-stage dedup + sort + write (SURVEY.md §2.8): `dropDuplicates` over
-    * ALL columns plans as a group-only hash aggregate — the partial
-    * (map-side) stage dedups before its own exchange, so the shuffle
-    * carries ~distinct rows. (Round 1 repartitioned explicitly first — the
-    * user exchange shipped every duplicate AND blocked the partial — and
-    * deduped on (s,p,o) only, which forced first()-carrier SortAggregates
-    * for the remaining columns; full-row distinct is also the RDF-correct
-    * key, since identical (s,p,o) strings with different lang/datatype are
-    * different statements.) `sortWithinPartitions` then sorts the
-    * agg-partitioned output per file — the ordering guarantee Iceberg
-    * sorted writes give at scale; no global orderBy range exchange.
+  /** The graph sink's one rule (SURVEY.md §2.8): a full-row
+    * `dropDuplicates`, then `sortWithinPartitions(subj, pred, obj)`. The
+    * dedup plans as a group-only hash aggregate whose partial (map-side)
+    * stage runs before its exchange, so the shuffle carries ~distinct rows.
+    * The key is the full row because identical (s,p,o) strings with a
+    * different lang, datatype or IRI flag are different statements. The
+    * sort orders each aggregate partition, one part file each: the ordering
+    * a sorted table write gives, with no global range exchange. Every
+    * triple dedup goes through here, so the optimizer sees one aggregate
+    * per graph whatever its producer rewrote before it.
     */
-  def writeTriples(triples: DataFrame, path: String, partitions: Int = 0,
+  private[graft] def sink(triples: DataFrame): DataFrame =
+    triples.dropDuplicates().sortWithinPartitions("subj", "pred", "obj")
+
+  /** Write `triples` through [[sink]] as parquet at `path`, then its
+    * per-file lineage and stage manifest. The part files follow
+    * `spark.sql.shuffle.partitions` (after AQE coalescing), the dedup
+    * exchange's partition count.
+    */
+  def writeTriples(triples: DataFrame, path: String,
                    metrics: Map[String, Long] = Map.empty): Unit = {
-    val spark = triples.sparkSession
-    val deduped0 = triples.dropDuplicates()
-    val deduped =
-      (if (partitions > 0) deduped0.repartition(partitions) else deduped0)
-        .sortWithinPartitions("subj", "pred", "obj")
-    deduped.write.mode(SaveMode.Overwrite).parquet(path)
-    writeLineage(spark, path, metrics)
+    sink(triples).write.mode(SaveMode.Overwrite).parquet(path)
+    writeLineage(triples.sparkSession, path, metrics)
   }
 
   private val json = new ObjectMapper()

@@ -57,20 +57,6 @@ object TranscriptStream {
       minimal = minimal,
       carry = if (carryEventTime) Seq("ts") else Nil)
 
-  /** Stateless text enrichment on the ingest stream: language id, quality
-    * score, PII redaction. Pure codegen'd projections — the batch
-    * functions lift onto streaming frames unchanged (no state, no
-    * watermark), so a 100 TB ingest can score and scrub documents inside
-    * the stream before they ever land. Batch↔stream equality is
-    * spec-pinned (`StreamTtlSpec`).
-    */
-  def enriched(stream: DataFrame): DataFrame =
-    stream.select(
-      col("conv_id"), col("turn_idx"),
-      graft.functions.TextFunctions.langId(col("text")).as("lang_pred"),
-      graft.functions.TextFunctions.qualityScore(col("text")).as("quality"),
-      graft.functions.TextFunctions.piiRedact(col("text")).as("redacted"))
-
   /** Watermarked per-conversation turn counts in 1-minute windows. */
   def turnCounts(stream: DataFrame): DataFrame =
     stream

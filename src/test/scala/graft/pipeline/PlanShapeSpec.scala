@@ -44,17 +44,37 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("sink dedup: partial+final hash aggregate, no sort aggregate, one exchange") {
-    val plan = tripleDf.dropDuplicates().queryExecution.executedPlan.toString
+    val plan = graft.materialize.GraphWriter.sink(tripleDf).queryExecution.executedPlan.toString
     assert(plan.contains("HashAggregate"), plan)
     assert(!plan.contains("SortAggregate"), plan)
     assert("Exchange".r.findAllMatchIn(plan).length == 1, plan)
+    assert("""Sort \[""".r.findAllMatchIn(plan).length == 1, plan)
   }
 
-  test("bench flagship dedup keyset: hash aggregate only, one exchange") {
-    val plan = tripleDf.select("subj", "pred", "obj").dropDuplicates()
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("HashAggregate") && !plan.contains("SortAggregate"), plan)
-    assert("Exchange".r.findAllMatchIn(plan).length == 1, plan)
+  private def aggregates(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.optimizedPlan.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+    }
+
+  test("kg composition: the sink holds the only dedup after canonicalize") {
+    import graft.link.{ConnectedComponents, EntityLink}
+    // transcripts -> triples, and mentions -> star edges -> components over
+    // an in-memory dictionary: the pipeline's composition at spec scale
+    val turns = spark.range(0, 8, 1, 2).selectExpr("concat('c', id % 2) AS conv_id",
+      "CAST(id AS INT) AS turn_idx", "'user' AS role", "concat('spark k', id % 3) AS text",
+      "'' AS tool", "TIMESTAMP'2024-01-01 00:00:00' AS ts")
+    val dict = Seq(("e1", "spark"), ("e2", "k1")).toDF("entity_id", "surface")
+    val keyed = turns.withColumn("subj_key", concat(lit("urn:conv:"), col("conv_id"),
+      lit("/turn/"), col("turn_idx").cast("string")))
+    val comp = ConnectedComponents.run(spark,
+      EntityLink.starEdges(EntityLink.mentions(keyed, dict, "subj_key", "text"), "subj_key"))
+    val triples = graft.streaming.TranscriptStream.triples(turns, graft.SparkEntry.transcriptTable)
+    val canon = EntityLink.canonicalizeSubjects(triples, comp)
+    assert(aggregates(canon).isEmpty, canon.queryExecution.optimizedPlan)
+    val sunk = graft.materialize.GraphWriter.sink(canon)
+    assert(aggregates(sunk).length == 1, sunk.queryExecution.optimizedPlan)
+    val g2 = graft.SparkEntry.queries("g2_graph_canonicalize")(spark, "/root/testdata/sf0.001")
+    assert(aggregates(g2).length == 1, g2.queryExecution.optimizedPlan)
   }
 
   test("triple mapper is exchange-free over its input (single narrow stage)") {

@@ -68,32 +68,4 @@ class StreamTtlSpec extends AnyFunSuite {
     assert(counts("s:y") == 1, s"Y seen once, emitted once: $counts")
     assert(counts("s:w") == 1, s"W re-sent within ttl must stay deduped: $counts")
   }
-
-  test("stateless text enrichment lifts batch->stream with identical output") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_enrich").toString
-    Seq(
-      ("c1", 0, "user", "the cat and the dog are in the house mail bob@x.io", "2024-01-01 00:00:00"),
-      ("c1", 1, "assistant", "der Hund ist nicht mit der Katze von 10.1.2.3", "2024-01-01 00:00:01"),
-      ("c2", 0, "user", "call +1 555 0101 now", "2024-01-01 00:00:02"))
-      .toDF("conv_id", "turn_idx", "role", "text", "ts_s")
-      .select($"conv_id", $"turn_idx", $"role", $"text",
-        to_timestamp($"ts_s").as("ts"))
-      .coalesce(1).write.mode("append").parquet(dir)
-
-    val batchDf = spark.read.parquet(dir)
-    val want = TranscriptStream.enriched(batchDf)
-      .collect().map(_.toSeq).toSet
-    assert(want.exists(_.toString.contains("<EMAIL>")))   // redaction actually fired
-
-    val q = TranscriptStream.enriched(
-        spark.readStream.schema(batchDf.schema).parquet(dir))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("enrich_out").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("enrich_out").collect().map(_.toSeq).toSet
-      assert(got == want)
-    } finally q.stop()
-  }
 }
