@@ -7,8 +7,12 @@ import graft.sources.CsvDialectSource
 import graft.validate.Validations
 import graft.model.DialectMeta
 
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 class ValidationsSpec extends AnyFunSuite {
   lazy val spark = graft.mapper.TestSpark.spark
@@ -217,8 +221,58 @@ class GraphWriterSpec extends AnyFunSuite {
     assert(manifests(0) == manifests(1))
   }
 
+  test("every column chunk of the part files and the lineage file is zstd") {
+    val dir = java.nio.file.Files.createTempDirectory("gw7").toString
+    val path = s"$dir/graph"
+    withPartitions(3)(GraphWriter.writeTriples(manyTriples, path))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = Seq(path, s"$path.lineage").map { p =>
+      val out = new org.apache.hadoop.fs.Path(p)
+      out.getFileSystem(conf).listStatus(out).filter(_.getPath.getName.endsWith(".parquet")).toSeq
+    }
+    assert(files.map(_.length) == Seq(3, 1))
+    val codecs = files.flatten.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec))
+      finally reader.close()
+    }
+    // six triple columns per part file, four lineage columns
+    assert(codecs.length == 3 * 6 + 4)
+    assert(codecs.toSet == Set(CompressionCodecName.ZSTD))
+  }
+
+  test("writeTriples runs no more Spark jobs than the sink's own write") {
+    val dir = java.nio.file.Files.createTempDirectory("gw8").toString
+    val Seq(sinkOnly, written) = withPartitions(3)(Seq(
+      graft.mapper.TestSpark.jobsDuring(GraphWriter.sink(manyTriples).write.parquet(s"$dir/sink")),
+      graft.mapper.TestSpark.jobsDuring(GraphWriter.writeTriples(manyTriples, s"$dir/graph"))))
+    assert(sinkOnly >= 1)
+    assert(written <= sinkOnly, s"writeTriples ran $written jobs, the sink's write $sinkOnly")
+  }
+
+  /** Render triples as canonical N-Triples lines, for golden-file diffs.
+    * Escapes the full N-Triples string-literal set: backslash, quote, LF,
+    * CR and TAB. */
+  private def toNTriples(triples: org.apache.spark.sql.DataFrame) = {
+    def esc(c: org.apache.spark.sql.Column) =
+      regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(c,
+        lit("\\\\"), lit("\\\\\\\\")), lit("\""), lit("\\\\\"")), lit("\n"), lit("\\\\n")),
+        lit("\r"), lit("\\\\r")), lit("\t"), lit("\\\\t"))
+    val term = (c: org.apache.spark.sql.Column) =>
+      when(c.startsWith("_:"), c).otherwise(concat(lit("<"), c, lit(">")))
+    val objTerm =
+      when(col("obj_iri"), term(col("obj")))
+        .otherwise(concat(
+          lit("\""), esc(col("obj")), lit("\""),
+          when(col("lang").isNotNull, concat(lit("@"), col("lang")))
+            .when(col("dtype").isNotNull, concat(lit("^^<"), col("dtype"), lit(">")))
+            .otherwise(lit(""))))
+    triples.select(concat(
+      term(col("subj")), lit(" "), term(col("pred")), lit(" "), objTerm, lit(" .")).as("ntriple"))
+  }
+
   test("N-Triples rendering") {
-    val nt = GraphWriter.toNTriples(Seq(
+    val nt = toNTriples(Seq(
       graft.mapper.Triple("http://s", "http://p", "http://o", obj_iri = true, null, null),
       graft.mapper.Triple("_:b0", "http://p", "hi \"x\"", obj_iri = false, "en", null),
       graft.mapper.Triple("http://s", "http://p", "42", obj_iri = false, null,
