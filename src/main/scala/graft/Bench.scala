@@ -1,34 +1,41 @@
 package graft
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{IntNode, ObjectNode}
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.launcher.JavaModuleOptions
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
+import java.nio.file.{Files, Paths, StandardOpenOption}
+import scala.util.control.NonFatal
 
-/** Benchmark main. Two parts:
+/** The query tool. Usage:
   *
-  * 1. Headline per-query timings on `SPARK_GRAFT_SF_DIR` at
-  *    `local[SPARK_GRAFT_CPUS]` (driver contract: one JSON line).
-  * 2. Scaling run: the flagship transcript→triples→dedup pipeline over a
-  *    deterministic synthetic corpus, executed at N and 4N cores on the
-  *    *same* materialized input in interleaved lo/hi pairs; reports every
-  *    pair's walls and efficiency = (tp_4N / tp_N) / 4, plus their median
-  *    and quartiles. It needs a host with at least 4N cores: on a smaller
-  *    host the 4N leg is oversubscribed, so the block only records
-  *    `measurable: false` with the host's core count.
+  *   sbt "runMain graft.Bench time [query...]"
+  *   sbt "runMain graft.Bench explain <dir> <tag> <query...>"
+  *   sbt "runMain graft.Bench explain - <query...>"
+  *   sbt "runMain graft.Bench scaling"
   *
-  * Each run writes its own document to `BENCH/RESULT.json` and never reads
-  * an earlier `RESULT.json` or `HISTORY.jsonl`; a measured scaling run also
-  * appends its block to `BENCH/HISTORY.jsonl`.
+  * `time` runs each named query (all when none named) twice against the
+  * noop sink — every column of every row computed, no sink cost — and
+  * prints one `name cold=… min=…` line per query, or `name FAILED message`
+  * for a query whose build or write throws; the rest still run and the
+  * main exits 1. `explain` writes `<dir>/<name>_<tag>.txt` per query, or
+  * prints the formatted plans when the dir is `-`. Building a streaming
+  * (str*) query runs its stream, so explaining one also executes it.
   *
-  * The whole main runs under a wall-clock budget (`GRAFT_BENCH_BUDGET_SECS`,
-  * default 900): headline reps degrade to 1 and then stop when the budget
-  * tightens, the scaling block runs only as many interleaved pairs as fit,
-  * and a watchdog thread guarantees the contract JSON line (with whatever
-  * completed) is printed and the process exits 0 even if a query hangs —
-  * a partial result beats a timeout with no result.
+  * `scaling` runs the flagship transcript→triples→sink pipeline over a
+  * deterministic synthetic corpus at N and 4N cores on the *same*
+  * materialized input, in interleaved lo/hi pairs, and reports every
+  * pair's walls and efficiency = (tp_4N / tp_N) / 4 plus their median and
+  * quartiles. It needs a host with at least 4N cores: on a smaller host
+  * the 4N leg is oversubscribed, so the block only records
+  * `measurable: false` with the host's core count. The block is printed;
+  * a measured one is also appended to `BENCH/HISTORY.jsonl`, which is
+  * never read back.
+  *
+  * Reads `SPARK_GRAFT_SF_DIR` (the query data), `SPARK_GRAFT_CPUS` (the
+  * `local[n]` session) and, for the scaling workers, `SPARK_HOME`.
   */
 object Bench {
 
@@ -38,7 +45,7 @@ object Bench {
   private val LoCores = 4
   private val HiCores = 16
   private val ScalingPairs = 6
-  private val HeadlineReps = 2
+  private val Reps = 2
 
   /** Corpus cache key: the persistent scaling corpus is reused only while
     * this stamp and [[Turns]] match. BUMP THIS whenever
@@ -48,51 +55,108 @@ object Bench {
 
   private val json = new ObjectMapper()
 
-  /** JDK 17 module opens Spark needs outside spark-submit (build.sbt's
-    * list), for the worker JVMs and their executors. */
-  private[graft] val addOpens: Seq[String] = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar"
-  ).map(p => s"--add-opens=$p=ALL-UNNAMED")
+  private val usage =
+    "usage: graft.Bench time [query...] | explain <dir> <tag> <query...> | " +
+      "explain - <query...> | scaling"
 
-  /** tmpfs shuffle dir when available: local-mode shuffles are disk-bound
-    * otherwise and the timings measure the disk, not the engine. */
-  private[graft] def tmpfsLocalDir(name: String): Option[String] = {
-    val shm = Paths.get("/dev/shm")
-    if (Files.isWritable(shm)) Some(Files.createDirectories(shm.resolve(name)).toString)
-    else None
+  private[graft] sealed trait Command
+  private[graft] final case class Time(queries: Seq[SparkEntry.QueryDef]) extends Command
+  /** `dir` is `-` for stdout, where `tag` is unused. */
+  private[graft] final case class Explain(dir: String, tag: String,
+                                          queries: Seq[SparkEntry.QueryDef]) extends Command
+  private[graft] case object Scaling extends Command
+
+  /** The command `args` name, or a usage error. `known` is the query list
+    * names resolve against, in the order `time` with no names runs it. */
+  private[graft] def command(args: Seq[String],
+                             known: Seq[SparkEntry.QueryDef]): Either[String, Command] = {
+    def resolve(names: Seq[String]): Either[String, Seq[SparkEntry.QueryDef]] = {
+      val unknown = names.filterNot(n => known.exists(_.name == n))
+      if (unknown.nonEmpty) Left(s"unknown queries: ${unknown.mkString(", ")}")
+      else Right(names.flatMap(n => known.find(_.name == n)))
+    }
+    args match {
+      case Seq("time") => Right(Time(known))
+      case "time" +: names => resolve(names).map(Time)
+      case "explain" +: "-" +: names if names.nonEmpty => resolve(names).map(Explain("-", "", _))
+      case "explain" +: dir +: tag +: names if dir != "-" && names.nonEmpty =>
+        resolve(names).map(Explain(dir, tag, _))
+      case "explain" +: _ => Left("explain needs a target and at least one query")
+      case Seq("scaling") => Right(Scaling)
+      case Seq() => Left("no mode given")
+      case mode +: _ => Left(s"unknown mode $mode")
+    }
   }
 
-  private[graft] def session(cores: Int): SparkSession = {
+  /** The session every tool measures on: `master` with AQE on, UTC, no UI,
+    * 2×`cores` shuffle partitions and a tmpfs `spark.local.dir`, plus
+    * `extra` settings (the scaling worker's). */
+  private[graft] def session(cores: Int, master: String,
+                             extra: (String, String)*): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val b = SparkSession.builder()
-      .master(s"local[$cores]")
+      .master(master)
       .appName(s"graft-bench-$cores")
       .config("spark.sql.shuffle.partitions", cores * 2)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    tmpfsLocalDir("graft_spark_local").foreach(d => b.config("spark.local.dir", d))
+    // tmpfs shuffle dir when available: local-mode shuffles are disk-bound
+    // otherwise and the timings measure the disk, not the engine
+    val shm = Paths.get("/dev/shm")
+    if (Files.isWritable(shm))
+      b.config("spark.local.dir", Files.createDirectories(shm.resolve("graft_spark_local")).toString)
+    extra.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
 
+  /** Times each query's noop write [[Reps]] times and prints one line per
+    * query; returns how many failed. The cold first rep is printed beside
+    * the min: host noise is one-sided, so the min is the engine's time. */
+  private[graft] def time(spark: SparkSession, sfDir: String,
+                          queries: Seq[SparkEntry.QueryDef]): Int =
+    queries.count { q =>
+      try {
+        val times = (1 to Reps).map { i =>
+          spark.sparkContext.setJobDescription(s"bench:${q.name} rep$i")
+          val s0 = System.nanoTime()
+          q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - s0) / 1e9
+        }
+        println(f"${q.name}%-28s cold=${times.head}%8.3f min=${times.min}%8.3f")
+        false
+      } catch { case NonFatal(e) =>
+        println(s"${q.name} FAILED ${e.getMessage}")
+        true
+      } finally spark.sparkContext.setJobDescription(null)
+    }
+
+  private def explain(spark: SparkSession, sfDir: String, cmd: Explain): Unit = {
+    if (cmd.dir != "-") Files.createDirectories(Paths.get(cmd.dir))
+    cmd.queries.foreach { q =>
+      val plan = q.build(spark, sfDir).queryExecution.explainString(FormattedMode)
+      if (cmd.dir == "-") println(s"\n========== ${q.name} ==========\n$plan")
+      else {
+        val file = Paths.get(cmd.dir, s"${q.name}_${cmd.tag}.txt")
+        Files.writeString(file, plan)
+        println(s"EXPLAIN wrote $file")
+      }
+    }
+  }
+
   /** Run one isolated scaling measurement in a fresh child JVM (same-JVM
     * back-to-back sessions showed >2× order effects from GC/code-cache
-    * state; separate processes mirror separate cluster applications).
+    * state; separate processes mirror separate cluster applications). The
+    * child takes Spark's own module options, the list `spark-submit`
+    * injects; its executors get the same list from `SparkContext`.
     */
   private def spawnWorker(cores: Int, corpus: String): (Long, Double) = {
     val java = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
-    val cmd = Seq(java, "-Xmx8g", "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC") ++ addOpens ++
+    val cmd = Seq(java, "-Xmx8g") ++ JavaModuleOptions.defaultModuleOptionArray() ++
       Seq("-cp", cp, "graft.BenchWorker", cores.toString, corpus)
     val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
     // local-cluster executors are launched through the standalone Worker,
@@ -100,9 +164,6 @@ object Bench {
     pb.environment().put("SPARK_HOME",
       sys.env.getOrElse("SPARK_HOME", "/opt/spark"))
     pb.environment().put("SPARK_LOCAL_IP", "127.0.0.1")
-    // the executor command builder needs the Scala suffix when not launched
-    // through the distribution's env scripts
-    pb.environment().put("SPARK_SCALA_VERSION", "2.13")
     val proc = pb.start()
     val out = new String(proc.getInputStream.readAllBytes())
     proc.waitFor()
@@ -124,8 +185,7 @@ object Bench {
     if (i + 1 < s.size) s(i) + (h - i) * (s(i + 1) - s(i)) else s(i)
   }
 
-  /** The scaling block for a host that cannot run the 4N leg unshared, or
-    * a run whose budget left no room for a pair. */
+  /** The scaling block for a host that cannot run the 4N leg unshared. */
   private[graft] def unmeasurable(nproc: Int): ObjectNode = {
     val b = json.createObjectNode()
     b.put("measurable", false)
@@ -167,226 +227,70 @@ object Bench {
     b
   }
 
-  /** Compact truncation-proof contract line (< ~400 bytes): the full
-    * document with 60 queries is ~3.3 KB and a stdout tail capture
-    * truncated it mid-key two rounds running. Derived from the full
-    * document so the watchdog path needs no extra state.
-    */
-  private[graft] def compactLine(doc: JsonNode): String = {
-    val line = json.createObjectNode()
-    line.put("metric", "total")
-    val value = doc.path("value")
-    line.set[JsonNode]("value", if (value.isNumber) value else IntNode.valueOf(0))
-    line.put("unit", "sec")
-    line.put("n_queries", doc.path("queries").size)
-    line.put("sf", doc.path("sf").asText("?"))
-    line.put("watchdog_fired", doc.path("watchdog_fired").asBoolean(false))
-    val scaling = doc.path("scaling")
-    if (scaling.path("measurable").asBoolean(false))
-      line.set[JsonNode]("scaling_efficiency", scaling.get("efficiency"))
-    line.put("full", "BENCH/RESULT.json")
-    json.writeValueAsString(line)
-  }
-
-  /** Owns one run's files under `dir`: every snapshot overwrites
-    * `RESULT.json`, `emit` prints the latest snapshot and then the compact
-    * line exactly once, and `history` appends a measured scaling block to
-    * `HISTORY.jsonl`. Neither file is ever read.
-    */
-  private[graft] final class Report(dir: Path, sfDir: String) {
-    private val latest = new AtomicReference[ObjectNode]({
-      val d = json.createObjectNode()
-      d.put("metric", "total").put("value", 0.0).put("unit", "sec")
-      d.putObject("queries")
-      d.put("sf", sfDir)
-      d
-    })
-    private val printed = new AtomicBoolean(false)
-
-    private def write(doc: JsonNode): Unit = {
-      Files.createDirectories(dir)
-      Files.writeString(dir.resolve("RESULT.json"), json.writeValueAsString(doc) + "\n")
+  /** The scaling block of this host: measured in [[ScalingPairs]] lo/hi
+    * worker pairs over the cached corpus, written first with a
+    * `local[cpus]` session when no complete copy exists. */
+  private def scaling(cpus: Int): ObjectNode = {
+    val nproc = Runtime.getRuntime.availableProcessors
+    if (nproc < HiCores) {
+      System.err.println(s"[bench] scaling not measurable: the $HiCores-core " +
+        s"leg needs $HiCores cores, this host has $nproc")
+      return unmeasurable(nproc)
     }
-
-    def snapshot(doc: ObjectNode): Unit = { latest.set(doc); write(doc) }
-
-    /** Watchdog truncation is machine-readable: a consumer of RESULT.json
-      * must be able to tell a clean run from one the watchdog cut short. */
-    def emit(watchdogFired: Boolean): Unit = if (printed.compareAndSet(false, true)) {
-      val doc =
-        if (!watchdogFired) latest.get
-        else json.createObjectNode().put("watchdog_fired", true).setAll[ObjectNode](latest.get)
-      write(doc)
-      println(json.writeValueAsString(doc))
-      // compact line LAST: the full document is ~3.3 KB and tail-capture
-      // truncation made it unparseable two rounds running
-      println(compactLine(doc))
-      System.out.flush()
+    // the deterministic corpus write is a ~180 s burn; a complete earlier
+    // write (Spark's _SUCCESS marker) of the same corpus key is reused
+    val corpus = s"/tmp/graft_corpus/turns_${Turns}_$pipelineVersion"
+    if (Files.exists(Paths.get(corpus, "_SUCCESS")))
+      System.err.println(s"[bench] reusing corpus at $corpus")
+    else {
+      val spark = session(cpus, s"local[$cpus]")
+      // 256 output files: parquet splits can't go below a row group, so
+      // the file count caps scan parallelism
+      try graft.sources.TranscriptGen.transcripts(spark, Turns)
+        .repartition(256)
+        .write.mode("overwrite").parquet(corpus)
+      finally spark.stop()
     }
-
-    def history(scaling: ObjectNode): Unit = {
-      val line = json.createObjectNode().put("ts_ms", System.currentTimeMillis())
-        .setAll[ObjectNode](scaling)
-      Files.createDirectories(dir)
-      Files.writeString(dir.resolve("HISTORY.jsonl"), json.writeValueAsString(line) + "\n",
-        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-    }
+    // 1 executor × 4 cores vs 4 executors × 4 cores (BenchWorker), each
+    // executor its own JVM and heap; lo/hi interleaved so each pair shares
+    // one host-noise window
+    val runs = (1 to ScalingPairs).map(_ => (spawnWorker(LoCores, corpus), spawnWorker(HiCores, corpus)))
+    val counts = runs.flatMap { case ((nLo, _), (nHi, _)) => Seq(nLo, nHi) }.distinct
+    require(counts.size == 1, s"scaling runs disagree on the triple count: ${counts.mkString(", ")}")
+    val block = scalingBlock(nproc, counts.head, runs.map { case ((_, lo), (_, hi)) => (lo, hi) })
+    val line = json.createObjectNode().put("ts_ms", System.currentTimeMillis())
+      .setAll[ObjectNode](block)
+    Files.createDirectories(Paths.get("BENCH"))
+    Files.writeString(Paths.get("BENCH", "HISTORY.jsonl"), json.writeValueAsString(line) + "\n",
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    block
   }
 
   def main(args: Array[String]): Unit = {
-    val t0 = System.nanoTime()
-    def elapsed: Double = (System.nanoTime() - t0) / 1e9
-    // ambient load sampled FIRST — after the headline suite or the corpus
-    // burst the 1-min average would report our own CPU burn
-    val loadBefore =
-      try Files.readString(Paths.get("/proc/loadavg")).split("\\s+")(0).toDouble
-      catch { case _: Exception => -1.0 }
+    val cmd = command(args.toSeq, SparkEntry.registry) match {
+      case Right(c) => c
+      case Left(err) =>
+        System.err.println(err)
+        System.err.println(usage)
+        sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val budget = math.max(120,
-      sys.env.getOrElse("GRAFT_BENCH_BUDGET_SECS", "900").toInt)
-    def remaining: Double = budget - elapsed
-    val report = new Report(Paths.get("BENCH"), sfDir)
-
-    // Watchdog: if anything hangs past budget + grace, print what we have
-    // and hard-exit 0 — the round-3 driver run timed out (rc 124) with a
-    // fully-computed headline that was never printed. halt() skips Spark's
-    // shutdown hooks deliberately: a wedged streaming query would block a
-    // clean stop() and we are exiting anyway.
-    val grace = 60
-    val watchdog = new Thread(() => {
-      try Thread.sleep((budget + grace) * 1000L)
-      catch { case _: InterruptedException => return }
-      System.err.println(
-        f"[bench] watchdog: budget ${budget}s + ${grace}s grace exceeded " +
-          f"(elapsed $elapsed%.0fs) — emitting partial result")
-      report.emit(watchdogFired = true)
-      Runtime.getRuntime.halt(0)
-    }, "bench-watchdog")
-    watchdog.setDaemon(true)
-    watchdog.start()
-
-    // ---- part 1: headline queries --------------------------------------
-    var results = Vector.empty[(String, Double, Double)]
-    var skippedForBudget = Vector.empty[String]
-    // queries the budget degraded to ONE (cold) rep: recorded so a reader
-    // can tell a cold single-rep number from a true warm regression
-    var singleRepQs = Vector.empty[String]
-
-    def document(scaling: Option[ObjectNode]): ObjectNode = {
-      val d = json.createObjectNode()
-      d.put("metric", "total")
-      d.put("value", dec(results.map(_._2).filter(_ >= 0).sum))
-      d.put("unit", "sec")
-      val qs = d.putObject("queries")
-      val cold = d.putObject("queries_cold")
-      results.foreach { case (k, best, first) => qs.put(k, dec(best)); cold.put(k, dec(first)) }
-      d.put("reps", HeadlineReps)
-      val single = d.putArray("single_rep")
-      singleRepQs.foreach(single.add(_))
-      d.put("budget_secs", budget)
-      d.put("elapsed_secs", dec(elapsed, 1))
-      d.put("ambient_load_before", dec(loadBefore, 2))
-      if (skippedForBudget.nonEmpty) {
-        val a = d.putArray("skipped_for_budget")
-        skippedForBudget.foreach(a.add(_))
-      }
-      d.put("sf", sfDir)
-      scaling.foreach(d.set[JsonNode]("scaling", _))
-      d
+    cmd match {
+      case Scaling => println(json.writeValueAsString(scaling(cpus)))
+      case Time(queries) =>
+        val spark = session(cpus, s"local[$cpus]")
+        val failed =
+          try {
+            // pre-materialize the streaming fixture so str* time the
+            // stream, not the one-off input rewrite
+            SparkEntry.streamFixture(spark, sfDir)
+            time(spark, sfDir, queries)
+          } finally spark.stop()
+        if (failed > 0) sys.exit(1)
+      case e: Explain =>
+        val spark = session(cpus, s"local[$cpus]")
+        try explain(spark, sfDir, e) finally spark.stop()
     }
-
-    var spark = session(cpus)
-    // pre-materialize the streaming fixture so str1 times the stream,
-    // not the one-off input rewrite
-    SparkEntry.streamFixture(spark, sfDir)
-    // registry order puts the cheap tail last for the budget to trim
-    SparkEntry.registry.foreach { q =>
-      // budget gates: don't start a query with <30s left (the watchdog
-      // still guarantees emission if one hangs); rep 2+ only while
-      // comfortably inside budget
-      if (remaining < 30) {
-        skippedForBudget :+= q.name
-      } else {
-        val reps = if (remaining < 90) 1 else HeadlineReps
-        if (reps < HeadlineReps) singleRepQs :+= q.name
-        // per-query MIN over reps: the VM host's noise is one-sided
-        // (steal/IO-wait spikes only ever slow a query down), so the min
-        // is the engine's time; the COLD first rep is reported alongside
-        // for cross-round comparability
-        val times = (1 to reps).map { _ =>
-          val s0 = System.nanoTime()
-          val ok = try { q.build(spark, sfDir).count(); true }
-                   catch { case _: Throwable => false }
-          if (ok) (System.nanoTime() - s0) / 1e9 else -1.0
-        }
-        val best = if (times.contains(-1.0)) -1.0 else times.min
-        results :+= ((q.name, best, times.head))
-        report.snapshot(document(None))
-      }
-    }
-    if (skippedForBudget.nonEmpty)
-      System.err.println(s"[bench] budget trimmed ${skippedForBudget.size} " +
-        s"headline queries: ${skippedForBudget.mkString(", ")}")
-    report.snapshot(document(None))
-
-    // ---- part 2: scaling evidence (N vs 4N cores, same input) ----------
-    val nproc = Runtime.getRuntime.availableProcessors
-    // The deterministic corpus write is a ~180 s burn; a complete earlier
-    // write (Spark's _SUCCESS marker) of the same corpus key is reused.
-    val corpus = s"/tmp/graft_corpus/turns_${Turns}_$pipelineVersion"
-    val corpusReusable = Files.exists(Paths.get(corpus, "_SUCCESS"))
-    // estimated costs (measured round 3): corpus write ~180 s, one
-    // interleaved lo+hi pair ~300 s; the first pair's measured cost
-    // replaces the estimate for the rest
-    var pairEstimate = 300.0
-    val scalingNeed = (if (corpusReusable) 5.0 else 180.0) + pairEstimate * 1.25 + 30
-    val scaling =
-      if (nproc < HiCores) {
-        System.err.println(s"[bench] scaling not measurable: the ${HiCores}-core " +
-          s"leg needs $HiCores cores, this host has $nproc")
-        unmeasurable(nproc)
-      } else if (remaining <= scalingNeed) {
-        System.err.println(f"[bench] budget too tight for scaling " +
-          f"($remaining%.0fs left, need ~$scalingNeed%.0f)")
-        unmeasurable(nproc)
-      } else {
-        if (corpusReusable) System.err.println(s"[bench] reusing corpus at $corpus")
-        else {
-          // 256 output files: parquet splits can't go below a row group, so
-          // the file count caps scan parallelism
-          graft.sources.TranscriptGen.transcripts(spark, Turns)
-            .repartition(256)
-            .write.mode("overwrite").parquet(corpus)
-        }
-        spark.stop(); spark = null
-        // 1 executor × 4 cores vs 4 executors × 4 cores (BenchWorker), each
-        // executor its own JVM and heap; lo/hi interleaved so each pair
-        // shares one host-noise window
-        var pairs = Vector.empty[(Double, Double)]
-        var counts = Vector.empty[Long]
-        while (pairs.size < ScalingPairs && remaining > pairEstimate * 1.25 + 30) {
-          val p0 = elapsed
-          val (nLo, lo) = spawnWorker(LoCores, corpus)
-          val (nHi, hi) = spawnWorker(HiCores, corpus)
-          counts ++= Seq(nLo, nHi)
-          pairs :+= ((lo, hi))
-          pairEstimate = math.max(elapsed - p0, 60.0)
-        }
-        if (pairs.size < ScalingPairs)
-          System.err.println(s"[bench] budget trimmed scaling to ${pairs.size}/$ScalingPairs pairs")
-        if (pairs.isEmpty) unmeasurable(nproc)
-        else {
-          require(counts.distinct.size == 1,
-            s"scaling runs disagree on the triple count: ${counts.mkString(", ")}")
-          val block = scalingBlock(nproc, counts.head, pairs)
-          report.history(block)
-          block
-        }
-      }
-    report.snapshot(document(Some(scaling)))
-
-    if (spark != null) spark.stop()
-    report.emit(watchdogFired = false)
   }
 }

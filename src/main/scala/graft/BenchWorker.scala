@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.count
 
 /** One isolated scaling measurement: fresh JVM per (cores) configuration so
   * successive runs don't inherit GC/code-cache state from each other —
   * measured order effects in a shared JVM distorted same-input runs by >2×.
-  * Spawned by [[Bench]] as `BenchWorker <cores> <corpus>`;
+  * Spawned by `Bench scaling` as `BenchWorker <cores> <corpus>`;
   * prints one `WORKER_RESULT <triples> <seconds>` line.
   */
 object BenchWorker {
@@ -17,43 +18,42 @@ object BenchWorker {
     * own heap each — the faithful N vs 4N proxy (a real cluster scales
     * memory and GC capacity with executor count; a single fixed-heap JVM
     * starves per-core memory at the high end and under-reports scaling
-    * efficiency).
+    * efficiency). `SparkContext` gives the executors Spark's module options.
     */
   def session(cores: Int): SparkSession = {
     val executors = math.max(cores / CoresPerExecutor, 1)
-    val b = SparkSession.builder()
-      .master(s"local-cluster[$executors,$CoresPerExecutor,$ExecMemMb]")
-      .appName(s"graft-bench-worker-$cores")
-      .config("spark.sql.shuffle.partitions", cores * 2)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    Bench.session(cores, s"local-cluster[$executors,$CoresPerExecutor,$ExecMemMb]",
       // the bench corpus compresses to ~70 MB: the 128 MB default split size
       // puts the ENTIRE scan in one task for every thread count, making the
       // scaling comparison measure the split planner, not the engine. Small
       // splits give both configs enough scan tasks (a real warehouse table
       // has millions of splits; config identical for both runs).
-      .config("spark.sql.files.maxPartitionBytes", (1024 * 1024).toString)
-      .config("spark.sql.files.openCostInBytes", (1024 * 1024).toString)
+      "spark.sql.files.maxPartitionBytes" -> (1024 * 1024).toString,
+      "spark.sql.files.openCostInBytes" -> (1024 * 1024).toString,
       // executor JVMs need the library classes (custom Catalyst expressions)
-      // and the JDK17 module opens the driver gets from build.sbt
-      .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-      .config("spark.executor.extraJavaOptions", Bench.addOpens.mkString(" "))
-    // executors inherit spark.local.dir through the worker
-    Bench.tmpfsLocalDir("graft_spark_worker").foreach(d => b.config("spark.local.dir", d))
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
+      "spark.executor.extraClassPath" -> System.getProperty("java.class.path"),
+      // the executor command builder needs the Scala suffix when not
+      // launched through the distribution's env scripts
+      "spark.executorEnv.SPARK_SCALA_VERSION" -> "2.13")
   }
 
-  /** Flagship pipeline: transcripts → CSVW triple mapper → the graph
-    * sink's dedup ([[graft.materialize.GraphWriter.sink]]), counted.
+  /** Writes the graph sink's output over `triples`
+    * ([[graft.materialize.GraphWriter.sink]]'s dedup and sort) to the noop
+    * sink and returns its row count, observed on that write: no extra job,
+    * and the sort stays in the plan, which a `count()` would let the
+    * optimizer drop.
     */
-  def kgPipelineCount(spark: SparkSession, inputPath: String): Long = {
-    val tr = spark.read.parquet(inputPath)
-    val triples = graft.streaming.TranscriptStream.triples(tr, SparkEntry.transcriptTable)
-    graft.materialize.GraphWriter.sink(triples).count()
+  private[graft] def sinkCount(triples: DataFrame): Long = {
+    val rows = Observation()
+    graft.materialize.GraphWriter.sink(triples).observe(rows, count("*").as("rows"))
+      .write.format("noop").mode("overwrite").save()
+    rows.get("rows").asInstanceOf[Long]
   }
+
+  /** Flagship pipeline: transcripts → CSVW triple mapper → the graph sink. */
+  def kgPipelineCount(spark: SparkSession, inputPath: String): Long =
+    sinkCount(graft.streaming.TranscriptStream.triples(
+      spark.read.parquet(inputPath), SparkEntry.transcriptTable))
 
   def main(args: Array[String]): Unit = {
     val cores = args(0).toInt

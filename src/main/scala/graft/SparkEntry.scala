@@ -317,8 +317,7 @@ object SparkEntry {
       oracleSql: String)
 
   /** Every suite query, slowest/most-important families first and the
-    * (window-sensitive, slowest) streaming queries last, so a tight
-    * [[Bench]] budget trims from the cheap tail, not the flagship. Lazy:
+    * (window-sensitive, slowest) streaming queries last. Lazy:
     * the oracle strings read `trCte`, `minimalTriplesSelect` and
     * `pqChainCtes`.
     */

@@ -1,92 +1,82 @@
 package graft.pipeline
 
-import graft.{Bench, SparkEntry}
+import graft.{Bench, BenchWorker, SparkEntry}
+import graft.mapper.TestSpark
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.io.ByteArrayOutputStream
-import java.nio.file.Files
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import scala.jdk.CollectionConverters._
 
-/** Executable checks for the bench harness's report plumbing — the scaling
-  * block, the truncation-proof compact contract line, and the rule that a
-  * run's document describes that run only. These are the pieces a consumer
-  * of the bench output reads; a regression here silently corrupts the
-  * reported evidence even when every query is green.
+/** Executable checks for the query tool: its argument handling, the `time`
+  * mode's failure accounting, the scaling block, and the plan the scaling
+  * worker times. These are the pieces a reader of the tool's output relies
+  * on; a regression here silently corrupts the reported evidence even when
+  * every query is green.
   */
-class BenchHarnessSpec extends AnyFunSuite {
+class BenchHarnessSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private val mapper = new ObjectMapper()
 
-  /** The compact line's keys when the document carries no measured scaling. */
-  private val scalingFreeKeys =
-    Set("metric", "value", "unit", "n_queries", "sf", "watchdog_fired", "full")
+  // ---- argument handling ------------------------------------------------
 
-  private def keys(json: String): Set[String] =
-    mapper.readTree(json).fieldNames().asScala.toSet
+  private val known = SparkEntry.registry.filter(q => Set("q1_agg", "q3_window")(q.name))
 
-  // ---- compactLine: truncation-proof contract --------------------------
-
-  test("compact line stays small and carries the headline fields") {
-    // representative full document: 60 queries + cold map + a measured
-    // six-pair scaling block, several KB — the size that defeated the
-    // stdout tail capture twice
-    val queries = (1 to 60).map(i => s""""q${i}_some_operator_name":${i / 10.0}""")
-      .mkString("{", ",", "}")
-    val pairs = Seq.fill(6)((83.65, 25.53))
-    val scaling = Bench.scalingBlock(32, 62403979L, pairs)
-    val full =
-      s"""{"metric":"total","value":35.184,"unit":"sec","queries":$queries,""" +
-        s""""queries_cold":$queries,"reps":2,"budget_secs":900,"elapsed_secs":99.8,""" +
-        s""""ambient_load_before":0.42,"sf":"/root/testdata/sf0.1",""" +
-        s""""scaling":${mapper.writeValueAsString(scaling)}}"""
-    assert(full.length > 2500, s"fixture not representative: ${full.length}")
-    val compact = Bench.compactLine(mapper.readTree(full))
-    assert(compact.length < 400, s"compact line too long (${compact.length}): $compact")
-    val n = mapper.readTree(compact)
-    assert(n.get("metric").asText == "total")
-    assert(math.abs(n.get("value").asDouble - 35.184) < 1e-9)
-    assert(n.get("n_queries").asInt == 60)
-    assert(n.get("sf").asText == "/root/testdata/sf0.1")
-    // (83.65 / 25.53) / 4 = 0.8191...
-    assert(math.abs(n.get("scaling_efficiency").asDouble - 0.819) < 1e-9)
-    assert(keys(compact) == scalingFreeKeys + "scaling_efficiency")
-    assert(!n.get("watchdog_fired").asBoolean)
-    assert(n.get("full").asText == "BENCH/RESULT.json")
+  test("command: an unknown or missing mode is a usage error") {
+    assert(Bench.command(Seq("headline"), known) == Left("unknown mode headline"))
+    assert(Bench.command(Seq(), known).isLeft)
+    assert(Bench.command(Seq("scaling", "q1_agg"), known).isLeft)
   }
 
-  test("compact line survives a watchdog-truncated / scaling-free document") {
-    val partial =
-      """{"watchdog_fired":true,"metric":"total","value":12.5,"unit":"sec","queries":{"a":1.0,"b":2.0},"sf":"/x"}"""
-    val compact = Bench.compactLine(mapper.readTree(partial))
-    val n = mapper.readTree(compact)
-    assert(n.get("watchdog_fired").asBoolean)
-    assert(n.get("n_queries").asInt == 2)
-    assert(n.get("scaling_efficiency") == null)
-    assert(keys(compact) == scalingFreeKeys)
-    // pathological: empty queries, no value
-    val n2 = mapper.readTree(Bench.compactLine(mapper.readTree("""{"queries":{}}""")))
-    assert(n2.get("n_queries").asInt == 0)
-    assert(n2.get("value").asInt == 0)
+  test("command: every unknown query is named") {
+    assert(Bench.command(Seq("time", "q1_agg", "nope", "q3_window", "gone"), known) ==
+      Left("unknown queries: nope, gone"))
+    assert(Bench.command(Seq("explain", "-", "nope"), known) == Left("unknown queries: nope"))
+  }
+
+  test("command: explain needs a target and a query") {
+    val err = Left("explain needs a target and at least one query")
+    assert(Bench.command(Seq("explain"), known) == err)
+    assert(Bench.command(Seq("explain", "-"), known) == err)
+    assert(Bench.command(Seq("explain", "plans", "before"), known) == err)
+  }
+
+  test("command: modes resolve their queries in the order named") {
+    val Seq(q1, q3) = known
+    assert(Bench.command(Seq("time"), known) == Right(Bench.Time(known)))
+    assert(Bench.command(Seq("time", "q3_window", "q1_agg"), known) == Right(Bench.Time(Seq(q3, q1))))
+    assert(Bench.command(Seq("explain", "-", "q3_window"), known) ==
+      Right(Bench.Explain("-", "", Seq(q3))))
+    assert(Bench.command(Seq("explain", "plans", "before", "q1_agg"), known) ==
+      Right(Bench.Explain("plans", "before", Seq(q1))))
+    assert(Bench.command(Seq("scaling"), known) == Right(Bench.Scaling))
+  }
+
+  // ---- time ---------------------------------------------------------------
+
+  test("time: a query that throws is one failure and the rest are timed") {
+    val spark = TestSpark.spark
+    val broken = SparkEntry.QueryDef("broken", (_, _) => sys.error("no such table"), "")
+    val queries = Seq(known.head, broken, known.last)
+    val out = new ByteArrayOutputStream()
+    val failed = Console.withOut(out)(Bench.time(spark, "/root/testdata/sf0.001", queries))
+    val lines = out.toString("UTF-8").linesIterator.toSeq
+    assert(failed == 1, lines)
+    assert(lines.map(_.split("\\s+").head) == Seq("q1_agg", "broken", "q3_window"), lines)
+    assert(lines(1) == "broken FAILED no such table")
+    Seq(lines.head, lines(2)).foreach(l => assert(l.matches("""\S+\s+cold=\s*[\d.]+ min=\s*[\d.]+"""), l))
   }
 
   // ---- scaling block ----------------------------------------------------
 
-  test("scaling: a 4-core host is not measurable and keeps the compact line scaling-free") {
-    val block = Bench.unmeasurable(4)
-    assert(mapper.writeValueAsString(block) ==
+  test("scaling: a 4-core host is not measurable") {
+    assert(mapper.writeValueAsString(Bench.unmeasurable(4)) ==
       """{"measurable":false,"nproc":4,"cores_needed":16}""")
-    val doc = mapper.createObjectNode()
-    doc.put("metric", "total").put("value", 3.5).put("unit", "sec")
-    doc.putObject("queries").put("q1_agg", 3.5)
-    doc.put("sf", "/x")
-    doc.set[com.fasterxml.jackson.databind.JsonNode]("scaling", block)
-    val compact = Bench.compactLine(doc)
-    assert(keys(compact) == scalingFreeKeys, compact)
-    val n = mapper.readTree(compact)
-    assert(n.get("value").asDouble == 3.5 && n.get("n_queries").asInt == 1)
-    assert(!n.get("watchdog_fired").asBoolean)
   }
 
   test("scaling: pair summary gives per-pair efficiency, median and quartiles") {
@@ -110,35 +100,32 @@ class BenchHarnessSpec extends AnyFunSuite {
     assert(b.get("cores_lo").asInt == 4 && b.get("cores_hi").asInt == 16)
   }
 
-  test("report: a stale RESULT.json's scaling block is not carried into a new document") {
-    val dir = Files.createTempDirectory("graft_bench_report")
-    try {
-      // an earlier run's document with a pooled 32-core scaling block
-      Files.writeString(dir.resolve("RESULT.json"),
-        """{"metric":"total","value":49.044,"unit":"sec","queries":{"q1_agg":0.242},""" +
-          """"sf":"/old","scaling":{"triples":62399680,"efficiency":0.847,""" +
-          """"quiet_pool":6,"window_quality":"ok"}}""" + "\n")
-      val report = new Bench.Report(dir, "/new")
-      val out = new ByteArrayOutputStream()
-      // a watchdog firing before the first query finished emits the run's
-      // own empty document, not the stale one
-      Console.withOut(out)(report.emit(watchdogFired = true))
-      val printed = out.toString("UTF-8").linesIterator.toSeq
-      assert(printed.size == 2, printed)
-      val doc = mapper.readTree(Files.readString(dir.resolve("RESULT.json")))
-      assert(doc == mapper.readTree(printed.head))
-      assert(doc.get("scaling") == null, doc)
-      assert(doc.get("sf").asText == "/new")
-      assert(doc.get("queries").size == 0)
-      assert(doc.get("watchdog_fired").asBoolean)
-      assert(keys(printed(1)) == scalingFreeKeys, printed(1))
-      // emission happens once
-      Console.withOut(out)(report.emit(watchdogFired = false))
-      assert(out.toString("UTF-8").linesIterator.size == 2)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  // ---- the scaling worker ------------------------------------------------
+
+  test("worker: the sink write keeps its sort and counts what it writes") {
+    val spark = TestSpark.spark
+    val triples = graft.streaming.TranscriptStream.triples(
+      graft.sources.TranscriptGen.transcripts(spark, 2000L), SparkEntry.transcriptTable)
+    val plans = new LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.put(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val n = try BenchWorker.sinkCount(triples) finally spark.listenerManager.unregister(listener)
+    // the sink's sort on (subj, pred, obj) is in a plan that ran; the
+    // transcript window's own sort on (conv_id, gid) does not count
+    val sinkOrder = Seq("subj", "pred", "obj")
+    val sorted = Iterator.continually(plans.poll(60, TimeUnit.SECONDS)).takeWhile(_ != null)
+      .exists(qe => collect(qe.executedPlan) {
+        case s: SortExec if s.sortOrder.flatMap(_.references.map(_.name)) == sinkOrder => s
+      }.nonEmpty)
+    assert(sorted, "no plan with the sink's sort ran")
+    assert(n > 0 && n == graft.materialize.GraphWriter.sink(triples).count())
   }
 
-  // ---- the query registry Bench, Verify and BenchExtra iterate ---------
+  // ---- the query registry Bench and Verify iterate ----------------------
 
   test("registry: 80 queries, unique names, every one with oracle SQL") {
     val names = SparkEntry.registry.map(_.name)
