@@ -30,6 +30,9 @@ object BenchWorker {
       // has millions of splits; config identical for both runs).
       "spark.sql.files.maxPartitionBytes" -> (1024 * 1024).toString,
       "spark.sql.files.openCostInBytes" -> (1024 * 1024).toString,
+      // the local-cluster triple sizes each worker; an executor's heap
+      // stays at spark.executor.memory (default 1g) unless set
+      "spark.executor.memory" -> s"${ExecMemMb}m",
       // executor JVMs need the library classes (custom Catalyst expressions)
       "spark.executor.extraClassPath" -> System.getProperty("java.class.path"),
       // the executor command builder needs the Scala suffix when not

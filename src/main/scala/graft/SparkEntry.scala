@@ -300,12 +300,6 @@ object SparkEntry {
           |  WHERE l.query_id <> c.vec_id
           |  GROUP BY l.query_id, c.vec_id)""".stripMargin
 
-  // ------------------------------------------------------------------ entry
-
-  /** Flagship: the full KG construction slice on sf0.001. */
-  def entry(spark: SparkSession): DataFrame =
-    transcriptTriples(spark, "/root/testdata/sf0.001", minimal = true)
-
   // ---------------------------------------------------------------- queries
 
   /** One suite query: its name, its Spark build over an sf dir, and the

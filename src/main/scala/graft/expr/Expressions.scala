@@ -94,8 +94,7 @@ case class CsvwCellExpr(child: Expression, col: ResolvedColumn) extends UnaryExp
 final class TemplateEvaluator(
     val template: UriTemplate.Compiled,
     val base: String,
-    val varNames: Array[String],
-    val decodeUri: Boolean) extends Serializable {
+    val varNames: Array[String]) extends Serializable {
 
   // plan-time fast path: a template whose literal head already carries a
   // URI scheme expands to an absolute IRI for every row — document-relative
@@ -122,8 +121,7 @@ final class TemplateEvaluator(
       }
       i += 1
     }
-    var expanded = template.expand(m)
-    if (decodeUri) expanded = Iri.pctDecode(expanded)
+    val expanded = template.expand(m)
     UTF8String.fromString(
       if (alwaysAbsolute) expanded else Iri.expand(base, expanded))
   }
@@ -138,12 +136,11 @@ case class UriTemplateExpandExpr(
     children: Seq[Expression],
     varNames: Seq[String],
     template: UriTemplate.Compiled,
-    base: String,
-    decodeUri: Boolean = false) extends Expression {
+    base: String) extends Expression {
 
   require(children.length == varNames.length)
   private lazy val evaluator =
-    new TemplateEvaluator(template, base, varNames.toArray, decodeUri)
+    new TemplateEvaluator(template, base, varNames.toArray)
 
   override def dataType: DataType = StringType
   override def nullable: Boolean = false
@@ -804,9 +801,9 @@ object CsvwFunctions {
     GraftBridge.column(CsvwCellExpr(GraftBridge.expression(c), col))
 
   def uriTemplate(template: UriTemplate.Compiled, base: String,
-                  vars: Seq[(String, Column)], decodeUri: Boolean = false): Column =
+                  vars: Seq[(String, Column)]): Column =
     GraftBridge.column(UriTemplateExpandExpr(
-      vars.map(v => GraftBridge.expression(v._2)), vars.map(_._1), template, base, decodeUri))
+      vars.map(v => GraftBridge.expression(v._2)), vars.map(_._1), template, base))
 
   /** parts: (subject, predicate, cell `vals`) per spec. */
   def litTriples(skolem: Column, parts: Seq[(Column, Column, Column)],

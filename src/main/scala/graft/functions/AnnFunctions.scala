@@ -11,12 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object AnnFunctions {
 
-  /** Codegen'd dot product via zip_with + aggregate. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, v) => acc + v)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity. Fused codegen ([[graft.expr.CosineExpr]]): one pass
     * with three scalar accumulators — the HOF composition
     * `dot/(norm*norm)` walked both arrays three times allocating a product

@@ -14,6 +14,10 @@ import org.apache.spark.sql.functions._
   */
 object CsvwPipeline {
 
+  /** Run options. The metadata document's warnings and errors are not an
+    * option: they ride on the group ([[TableGroupMeta.report]]), whichever
+    * loader produced it.
+    */
   final case class Options(
       minimal: Boolean = false,
       validate: Boolean = true,
@@ -21,9 +25,6 @@ object CsvwPipeline {
       provStartedAt: String = "1970-01-01T00:00:00Z",
       provEndedAt: String = "1970-01-01T00:00:00Z",
       metadataFiles: Seq[String] = Nil,
-      /** raw metadata JSON for document validation (`validate!`,
-        * `metadata.rb:570-830`) */
-      metadataJson: Option[String] = None,
       /** embedded (header-derived) columns per table url for the
         * declared↔embedded compatibility check (`verify_compatible!`,
         * `metadata.rb:1004-1087`) */
@@ -155,17 +156,13 @@ object CsvwPipeline {
     }.reduceOption(_ unionByName _)
       .getOrElse(spark.emptyDataFrame)
 
-    // metadata-document validation + declared↔embedded compatibility: the
-    // reference runs validate! before any row flows (reader.rb:465) and
-    // verify_compatible! when embedded headers exist (reader.rb:120)
-    val metaReport = {
-      val doc = opts.metadataJson.map(CsvwValidate.validate)
-        .getOrElse(CsvwValidate.Report.empty)
-      val compat = opts.embeddedColumns.toList.map { case (url, cols) =>
-        CsvwValidate.verifyCompatible(group, url, cols, strict = opts.validate)
-      }.foldLeft(CsvwValidate.Report.empty)(_ ++ _)
-      doc ++ compat
-    }
+    // the metadata document's report (the reference runs validate! before
+    // any row flows, reader.rb:465; CsvwJson left it on the group) +
+    // declared↔embedded compatibility when embedded headers exist
+    // (verify_compatible!, reader.rb:120)
+    val metaReport = opts.embeddedColumns.toList.map { case (url, cols) =>
+      CsvwValidate.verifyCompatible(group, url, cols, strict = opts.validate)
+    }.foldLeft(group.report)(_ ++ _)
 
     Result(allTriples, errors, pkViolations, fkViolations, metaReport)
   }

@@ -78,16 +78,15 @@ object CsvwReader {
     val lower = path.toLowerCase
     if (lower.endsWith(".json")) {
       // entry 1: a metadata document names its tables (reader.rb:127-141)
-      val json = new String(Files.readAllBytes(p), "UTF-8")
-      val raw = CsvwJson.parseTableGroup(json)
+      val raw = CsvwJson.parseTableGroup(readString(p))
       openGroup(spark, raw.rebase(baseUrl), metaDir, baseUrl, minimal,
-        validate, metadataJson = Some(json), fragments = Map.empty)
+        validate, fragments = Map.empty)
     } else if (lower.endsWith(".html") || lower.endsWith(".htm")) {
       // entry 2: an HTML document carries csvm+json script metadata; tables
       // are either fragments of the document or external CSV references
       val doc = HtmlTableSource.readDocument(spark, path, baseUrl)
       openGroup(spark, doc.group, metaDir, baseUrl, minimal,
-        validate, metadataJson = None, fragments = doc.fragmentTables)
+        validate, fragments = doc.fragmentTables)
     } else {
       // entry 3: a tabular file; metadata found by discovery precedence or
       // synthesized (reader.rb via metadata.rb:180-251 for_input)
@@ -101,9 +100,11 @@ object CsvwReader {
       val dflt =
         if (lower.endsWith(".tsv")) DialectMeta(delimiter = "\t") else DialectMeta()
       openGroup(spark, grp.rebase(baseUrl), metaDir, baseUrl, minimal,
-        validate, metadataJson = None, fragments = Map.empty, defaultDialect = dflt)
+        validate, fragments = Map.empty, defaultDialect = dflt)
     }
   }
+
+  private def readString(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
 
   /** Map a (rebased, absolute) table url back to the local file it is served
     * from: strip the base directory prefix and resolve the remainder under
@@ -124,7 +125,6 @@ object CsvwReader {
   private def openGroup(spark: SparkSession, group0: TableGroupMeta,
                         metaDir: Path, baseUrl: String,
                         minimal: Boolean, validate: Boolean,
-                        metadataJson: Option[String],
                         fragments: Map[String, CsvDialectSource.ExactResult],
                         defaultDialect: DialectMeta = DialectMeta()): Opened = {
     val baseDir = baseUrl.substring(0, baseUrl.lastIndexOf('/') + 1)
@@ -132,19 +132,9 @@ object CsvwReader {
 
     // `"tableSchema": "<url>"` indirection: fetch the schema document from
     // its sibling file; its relative FK resources resolve like the parent's
-    val withSchemas = group0.copy(tables = group0.tables.map { t =>
-      t.schemaRef match {
-        case Some(ref) if t.tableSchema.isEmpty =>
-          val local = localFor(metaDir, baseDir, ref)
-          val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
-            new String(Files.readAllBytes(local), "UTF-8"))
-          // the fetched schema document carries its own JSON-LD context;
-          // its @language tags the bare titles it declares
-          t.copy(tableSchema = Some(CsvwJson.schemaFrom(node,
-            CsvwJson.contextLanguage(node).getOrElse("und"))))
-        case _ => t
-      }
-    }).rebase(baseUrl) // re-resolve FK resources the fetched schemas added
+    val withSchemas = CsvwJson.withFetchedSchemas(group0, baseUrl)(ref =>
+      readString(localFor(metaDir, baseDir, ref)))
+      .rebase(baseUrl) // re-resolve FK resources the fetched schemas added
 
     // read every table; fill schema-less tables from embedded header titles
     val reads: List[(TableMeta, CsvDialectSource.ExactResult, List[ColumnMeta])] =
@@ -162,29 +152,7 @@ object CsvwReader {
         // common property (metadata.rb:893 data-region rows, :1860 skipped
         // lines) — they ride the existing common-property machinery into
         // standard-mode RDF and JSON output
-        val t2 =
-          if (exact.comments.isEmpty) t1
-          else {
-            // merged into any user-declared rdfs:comment rather than added
-            // as a second pair: JSON output stores common properties by key,
-            // so a duplicate key would overwrite the declared value, while
-            // the reference coerces-and-appends (metadata.rb:1860
-            // `(metadata["rdfs:comment"] ||= []) << value`). RDF emission is
-            // unchanged — an array value emits one triple per element.
-            val m = new com.fasterxml.jackson.databind.ObjectMapper()
-            val arr = m.createArrayNode()
-            t1.common.collectFirst { case ("rdfs:comment", raw) => m.readTree(raw) }
-              .foreach {
-                case a: com.fasterxml.jackson.databind.node.ArrayNode =>
-                  (0 until a.size()).foreach(i => arr.add(a.get(i)))
-                case other => arr.add(other)
-              }
-            exact.comments.foreach(arr.add)
-            t1.copy(common =
-              t1.common.filterNot(_._1 == "rdfs:comment") :+
-                ("rdfs:comment" -> m.writeValueAsString(arr)))
-          }
-        (t2, exact, embedded)
+        (CsvwJson.withComments(t1, exact.comments), exact, embedded)
       }
 
     val group = withSchemas.copy(tables = reads.map(_._1))
@@ -217,7 +185,6 @@ object CsvwReader {
     }.toMap
     val result = CsvwPipeline.run(spark, group, bind, CsvwPipeline.Options(
       minimal = minimal, validate = validate,
-      metadataJson = metadataJson,
       embeddedColumns = if (validate) embeddedByUrl else Map.empty))
     Opened(group, resolved, bind, result)
   }

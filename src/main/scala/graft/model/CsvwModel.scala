@@ -140,7 +140,10 @@ final case class TableGroupMeta(
     transformations: List[TransformationMeta] = Nil,
     /** JSON-LD context default language (`@context: [..., {"@language": …}]`)
       * — scopes natural-language/common properties, not cell values. */
-    contextLang: Option[String] = None) {
+    contextLang: Option[String] = None,
+    /** the warnings and errors [[CsvwJson]] recorded while parsing the
+      * document(s) this group came from; empty for a synthesized group */
+    report: CsvwValidate.Report = CsvwValidate.Report.empty) {
 
   /** Resolve relative table `url`s and foreign-key `resource`s against the
     * metadata document's base, as the reference normalizes on load

@@ -1,15 +1,12 @@
 package graft.model
 
-import graft.core.{Uax35Date, Uax35Number, Xsd}
-
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import scala.jdk.CollectionConverters._
-
-/** Metadata validation (`/root/reference/lib/rdf/tabular/metadata.rb:570-830`
-  * `validate`) and declared↔embedded compatibility
+/** Metadata reports and declared↔embedded compatibility
   * (`metadata.rb:1004-1087` `verify_compatible!`), surfaced as *data* —
   * warnings and errors a caller can gate on (the reference's validate-mode
-  * raises; warning-mode logs and continues).
+  * raises; warning-mode logs and continues). The document checks of
+  * `validate!` (`metadata.rb:570-830`) run in [[CsvwJson]]'s parse, which
+  * leaves their [[Report]] on the parsed [[TableGroupMeta]]; the checks here
+  * compare parsed models.
   */
 object CsvwValidate {
 
@@ -18,277 +15,6 @@ object CsvwValidate {
     def ++(other: Report): Report = Report(warnings ++ other.warnings, errors ++ other.errors)
   }
   object Report { val empty: Report = Report(Nil, Nil) }
-
-  private val mapper = new ObjectMapper()
-
-  // expected property sets per object kind (metadata.rb PROPERTIES tables)
-  private val InheritedKeys = Set(
-    "aboutUrl", "datatype", "default", "lang", "null", "ordered",
-    "propertyUrl", "required", "separator", "textDirection", "valueUrl")
-  private val TableGroupKeys = Set(
-    "@id", "@context", "@type", "tables", "dialect", "notes",
-    "tableDirection", "tableSchema", "transformations") ++ InheritedKeys
-  private val TableKeys = Set(
-    "@id", "@type", "url", "dialect", "notes", "suppressOutput",
-    "tableDirection", "tableSchema", "transformations") ++ InheritedKeys
-  private val SchemaKeys = Set(
-    "@id", "@type", "columns", "foreignKeys", "primaryKey", "rowTitles") ++ InheritedKeys
-  private val ColumnKeys = Set(
-    "@id", "@type", "name", "suppressOutput", "titles", "virtual") ++ InheritedKeys
-  private val DatatypeKeys = Set(
-    "@id", "@type", "base", "format", "length", "minLength", "maxLength",
-    "minimum", "maximum", "minInclusive", "maxInclusive", "minExclusive", "maxExclusive")
-  private val DialectKeys = Set(
-    "@id", "@type", "commentPrefix", "delimiter", "doubleQuote", "encoding",
-    "header", "headerRowCount", "lineTerminators", "quoteChar",
-    "skipBlankRows", "skipColumns", "skipInitialSpace", "skipRows", "trim")
-  private val FkReferenceKeys = Set("resource", "schemaReference", "columnReference")
-  private val TransformationKeys = Set(
-    "@id", "@type", "source", "targetFormat", "scriptFormat", "titles", "url")
-
-  /** Validate a metadata document (JSON string). */
-  def validate(json: String): Report = validateNode(mapper.readTree(json))
-
-  def validateNode(root: JsonNode): Report = {
-    if (root.has("tables") || optType(root).contains("TableGroup")) {
-      val tables = Option(root.get("tables")).toList
-        .flatMap(_.elements().asScala.toList)
-      val base =
-        unexpectedKeys("TableGroup", root, TableGroupKeys) ++
-        typeWarnings("TableGroup", root) ++
-        (if (tables.isEmpty) Report(Nil, List("TableGroup has invalid property 'tables': must not be empty"))
-         else Report.empty)
-      val withTx = base ++ validateTransformations(root)
-      tables.foldLeft(withTx)((r, t) => r ++ validateTable(t, tables))
-    } else if (root.has("url") || optType(root).contains("Table")) {
-      validateTable(root, List(root))
-    } else if (root.has("columns") || optType(root).contains("Schema")) {
-      validateSchema(root, List.empty)
-    } else Report(Nil, List("unrecognized CSVW metadata document"))
-  }
-
-  private def validateTable(t: JsonNode, allTables: List[JsonNode]): Report = {
-    var r = unexpectedKeys("Table", t, TableKeys) ++ typeWarnings("Table", t)
-    if (!t.has("url"))
-      r = r ++ Report(Nil, List("Table missing required keys: url"))
-    Option(t.get("dialect")).foreach { d =>
-      if (d.isObject)
-        r = r ++ unexpectedKeys("Dialect", d, DialectKeys) ++ typeWarnings("Dialect", d)
-    }
-    Option(t.get("tableSchema")).foreach { s => r = r ++ validateSchema(s, allTables) }
-    r ++ validateTransformations(t)
-  }
-
-  /** Transformation (Template) objects (`metadata.rb:1663-1693`):
-    * url/targetFormat/scriptFormat are REQUIRED; scriptFormat/targetFormat
-    * must be valid absolute URLs; source, when present, must be json or rdf.
-    */
-  private def validateTransformations(parent: JsonNode): Report = {
-    var r = Report.empty
-    Option(parent.get("transformations")).foreach { txs =>
-      if (!txs.isArray)
-        r = r ++ Report(Nil, List("transformations must be an array"))
-      else txs.elements().asScala.foreach { t =>
-        r = r ++ unexpectedKeys("Transformation", t, TransformationKeys)
-        val missing = Seq("url", "targetFormat", "scriptFormat")
-          .filterNot(k => Option(t.get(k)).exists(_.isTextual))
-        if (missing.nonEmpty)
-          r = r ++ Report(Nil, List(s"Transformation missing required keys: ${missing.mkString(", ")}"))
-        Seq("targetFormat", "scriptFormat").foreach { k =>
-          Option(t.get(k)).filter(_.isTextual).map(_.asText()).foreach { v =>
-            val absOk =
-              try new java.net.URI(v).isAbsolute
-              catch { case _: Exception => false }
-            if (!absOk)
-              r = r ++ Report(Nil, List(s"Transformation has invalid property '$k': must be a valid absolute URL: $v"))
-          }
-        }
-        Option(t.get("source")).filter(_.isTextual).map(_.asText()).foreach { s =>
-          if (s != "json" && s != "rdf")
-            r = r ++ Report(Nil, List(s"Transformation has invalid property 'source': expected json or rdf, got $s"))
-        }
-      }
-    }
-    r
-  }
-
-  private def validateSchema(s: JsonNode, allTables: List[JsonNode]): Report = {
-    var r = unexpectedKeys("Schema", s, SchemaKeys) ++ typeWarnings("Schema", s)
-    val cols = Option(s.get("columns")).map(_.elements().asScala.toList).getOrElse(Nil)
-
-    // unique names (metadata.rb:604-605)
-    val names = cols.zipWithIndex.map { case (c, i) =>
-      CsvwJson.columnFrom(c) -> i
-    }.map { case (cm, i) => Resolve.columnName(cm, i + 1) }
-    if (names.distinct != names)
-      r = r ++ Report(Nil, List(s"Schema has invalid property 'columns': must have unique names: $names"))
-
-    // virtual columns must come after all non-virtual ones (tabular-metadata §5.6)
-    val firstVirtual = cols.indexWhere(c => Option(c.get("virtual")).exists(_.asBoolean(false)))
-    if (firstVirtual >= 0 &&
-        cols.drop(firstVirtual).exists(c => !Option(c.get("virtual")).exists(_.asBoolean(false))))
-      r = r ++ Report(Nil, List("Schema has invalid property 'columns': virtual columns must appear after all non-virtual columns"))
-
-    cols.foreach(c => r = r ++ validateColumn(c))
-
-    // primaryKey / rowTitles column references must exist (warn + reference drops them)
-    Seq("primaryKey", "rowTitles").foreach { key =>
-      Option(s.get(key)).foreach { v =>
-        stringsOf(v).foreach { k =>
-          if (!names.contains(k))
-            r = r ++ Report(List(s"Schema has invalid property '$key': column reference not found $k"), Nil)
-        }
-      }
-    }
-
-    // foreign keys (metadata.rb:621-668)
-    Option(s.get("foreignKeys")).foreach { fks =>
-      fks.elements().asScala.foreach { fk =>
-        val colRef = Option(fk.get("columnReference"))
-        val ref = Option(fk.get("reference"))
-        if (colRef.isEmpty || ref.isEmpty)
-          r = r ++ Report(Nil, List("Schema has invalid property 'foreignKeys': missing columnReference and reference"))
-        if (fk.properties().size() != 2)
-          r = r ++ Report(Nil, List(s"Schema has invalid property 'foreignKeys': has extra entries ${keysOf(fk)}"))
-        colRef.foreach(cr => stringsOf(cr).foreach { k =>
-          if (!names.contains(k))
-            r = r ++ Report(Nil, List(s"Schema has invalid property 'foreignKeys': columnReference not found $k"))
-        })
-        ref.foreach { rf =>
-          if (!rf.isObject)
-            r = r ++ Report(Nil, List(s"Schema has invalid property 'foreignKeys': reference must be an object $rf"))
-          else {
-            val extra = keysOf(rf).filterNot(FkReferenceKeys)
-            if (extra.nonEmpty)
-              r = r ++ Report(Nil, List(s"Schema has invalid property 'foreignKeys': reference has extra entries $extra"))
-            if (rf.has("resource") && rf.has("schemaReference"))
-              r = r ++ Report(Nil, List("Schema has invalid property 'foreignKeys': reference has a schemaReference and a resource"))
-            Option(rf.get("resource")).filter(_.isTextual).foreach { res =>
-              val url = res.asText()
-              val found = allTables.exists(t => Option(t.get("url")).exists(_.asText() == url))
-              if (!found)
-                r = r ++ Report(Nil, List(s"Schema has invalid property 'foreignKeys': table referenced by $url not found"))
-            }
-          }
-        }
-      }
-    }
-    r
-  }
-
-  private def validateColumn(c: JsonNode): Report = {
-    var r = unexpectedKeys("Column", c, ColumnKeys) ++ typeWarnings("Column", c)
-    // @id must not be a blank node (metadata.rb:800-803)
-    Option(c.get("@id")).filter(_.isTextual).map(_.asText()).foreach { id =>
-      if (id.startsWith("_:"))
-        r = r ++ Report(Nil, List(s"Column has invalid property '@id': $id, must not start with '_:'"))
-    }
-    Option(c.get("datatype")).foreach(d => r = r ++ validateDatatype(d))
-    r
-  }
-
-  private def validateDatatype(d: JsonNode): Report = {
-    if (d.isTextual) {
-      val base = d.asText()
-      return if (Xsd.SupportedBases.contains(base) || Xsd.UnsupportedBases.contains(base)) Report.empty
-      else Report(Nil, List(s"Datatype has invalid base: $base"))
-    }
-    var r = unexpectedKeys("Datatype", d, DatatypeKeys)
-    val base = Option(d.get("base")).filter(_.isTextual).map(_.asText()).getOrElse("string")
-    if (!(Xsd.SupportedBases.contains(base) || Xsd.UnsupportedBases.contains(base)))
-      r = r ++ Report(Nil, List(s"Datatype has invalid base: $base"))
-    // Datatype @id must not name a built-in (metadata.rb:804-807)
-    Option(d.get("@id")).filter(_.isTextual).map(_.asText()).foreach { id =>
-      if (id.startsWith("_:"))
-        r = r ++ Report(Nil, List(s"Datatype has invalid property '@id': $id, must not start with '_:'"))
-      else if (id == Xsd.expandedIri(base) || Xsd.SupportedBases.exists(b => Xsd.expandedIri(b) == id))
-        r = r ++ Report(Nil, List(s"Datatype has invalid property '@id': $id, must not be the URL of a built-in datatype"))
-    }
-
-    val canonical = Xsd.canonicalBase(base)
-    val isNumeric = Xsd.NumericBases.contains(canonical)
-    val isDate = Xsd.DateTimeBases.contains(canonical)
-
-    // format validity (metadata.rb:671-726): invalid formats warn and are ignored
-    Option(d.get("format")).foreach { f =>
-      if (f.isObject) {
-        if (!isNumeric)
-          r = r ++ Report(List("Datatype has invalid property 'format': Object form only allowed on numeric datatypes"), Nil)
-        else Option(f.get("pattern")).filter(_.isTextual).map(_.asText()).foreach { p =>
-          numberPatternError(p, optTextOr(f, "groupChar", ","), optTextOr(f, "decimalChar", "."))
-            .foreach(e => r = r ++ Report(List(s"Datatype has invalid property 'format' pattern: $e"), Nil))
-        }
-      } else if (f.isTextual) {
-        val p = f.asText()
-        if (canonical == "boolean") {
-          if (p.split("\\|", -1).length != 2)
-            r = r ++ Report(List("Datatype has invalid property 'format': annotation provides the true and false values expected, separated by '|'"), Nil)
-        } else if (isNumeric)
-          numberPatternError(p, ",", ".")
-            .foreach(e => r = r ++ Report(List(s"Datatype has invalid property 'format': $e"), Nil))
-        else if (isDate)
-          datePatternError(p)
-            .foreach(e => r = r ++ Report(List(s"Datatype has invalid property 'format': $e"), Nil))
-        else
-          try java.util.regex.Pattern.compile(p)
-          catch { case e: Exception =>
-            r = r ++ Report(List(s"Datatype has invalid property 'format': ${e.getMessage}"), Nil)
-          }
-      }
-    }
-
-    // length facets (metadata.rb:727-746)
-    val length = optIntOf(d, "length")
-    val minLength = optIntOf(d, "minLength")
-    val maxLength = optIntOf(d, "maxLength")
-    for (l <- length; m <- minLength; if l < m)
-      r = r ++ Report(Nil, List("Datatype has invalid property 'minLength': both length and minLength requires length be greater than or equal to minLength"))
-    for (l <- length; m <- maxLength; if l > m)
-      r = r ++ Report(Nil, List("Datatype has invalid property 'maxLength': both length and maxLength requires length be less than or equal to maxLength"))
-    for (mn <- minLength; mx <- maxLength; if mn > mx)
-      r = r ++ Report(Nil, List("Datatype has invalid property 'maxLength': both minLength and maxLength requires minLength be less than or equal to maxLength"))
-    val stringOrBinary = Set("string", "normalizedString", "token", "language",
-      "Name", "NMTOKEN", "hexBinary", "base64Binary", "binary")
-    if ((length.isDefined || minLength.isDefined || maxLength.isDefined) && !stringOrBinary.contains(base))
-      r = r ++ Report(Nil, List("Datatype has invalid length facets: only allowed on string or binary datatypes"))
-
-    // range facets (metadata.rb:747-782)
-    val rangeKeys = Seq("minimum", "maximum", "minInclusive", "maxInclusive", "minExclusive", "maxExclusive")
-    val hasRange = rangeKeys.exists(d.has)
-    val rangeable = isNumeric || isDate || Xsd.DurationBases.contains(canonical)
-    if (hasRange && !rangeable)
-      r = r ++ Report(Nil, List("Datatype has invalid range facets: only allowed on numeric, date/time or duration datatypes"))
-    def num(k: String): Option[BigDecimal] =
-      Option(d.get(k)).filter(v => v.isNumber || v.isTextual)
-        .flatMap(v => scala.util.Try(BigDecimal(v.asText())).toOption)
-    val minI = num("minimum").orElse(num("minInclusive"))
-    val maxI = num("maximum").orElse(num("maxInclusive"))
-    val minE = num("minExclusive")
-    val maxE = num("maxExclusive")
-    if ((d.has("minimum") || d.has("minInclusive")) && d.has("minExclusive"))
-      r = r ++ Report(Nil, List("Datatype cannot specify both minInclusive and minExclusive"))
-    if ((d.has("maximum") || d.has("maxInclusive")) && d.has("maxExclusive"))
-      r = r ++ Report(Nil, List("Datatype cannot specify both maxInclusive and maxExclusive"))
-    for (a <- minI; b <- maxI; if b < a)
-      r = r ++ Report(Nil, List("Datatype maxInclusive < minInclusive"))
-    for (a <- minI; b <- maxE; if b <= a)
-      r = r ++ Report(Nil, List("Datatype maxExclusive <= minInclusive"))
-    for (a <- minE; b <- maxE; if b < a)
-      r = r ++ Report(Nil, List("Datatype maxExclusive < minExclusive"))
-    for (a <- minE; b <- maxI; if b <= a)
-      r = r ++ Report(Nil, List("Datatype maxInclusive <= minExclusive"))
-    r
-  }
-
-  private def numberPatternError(p: String, groupChar: String, decimalChar: String): Option[String] =
-    try { Uax35Number.compile(Some(p), groupChar, decimalChar); None }
-    catch { case e: IllegalArgumentException => Some(e.getMessage) }
-
-  private def datePatternError(p: String): Option[String] =
-    try { Uax35Date.compile(p); None }
-    catch { case e: IllegalArgumentException => Some(e.getMessage) }
-
-  // ------------------------------------------------------------- compatibility
 
   /** `verify_compatible!` (`metadata.rb:1004-1087`): check a declared table
     * group against embedded metadata (url + per-column ColumnMeta list).
@@ -360,101 +86,5 @@ object CsvwValidate {
         (la.startsWith(lb) || lb.startsWith(la)) && ws.intersect(vs).nonEmpty
       }
     }
-  }
-
-  // ------------------------------------------------------------------ helpers
-
-  private def optType(n: JsonNode): Option[String] =
-    Option(n.get("@type")).filter(_.isTextual).map(_.asText())
-
-  private def keysOf(n: JsonNode): List[String] =
-    n.properties().asScala.toList.map(_.getKey)
-
-  private def stringsOf(n: JsonNode): List[String] =
-    if (n == null) Nil
-    else if (n.isTextual) List(n.asText())
-    else if (n.isArray) n.elements().asScala.filter(_.isTextual).map(_.asText()).toList
-    else Nil
-
-  private def optTextOr(n: JsonNode, f: String, dflt: String): String =
-    Option(n.get(f)).filter(_.isTextual).map(_.asText()).getOrElse(dflt)
-
-  private def optIntOf(n: JsonNode, f: String): Option[Int] =
-    Option(n.get(f)).filter(_.isNumber).map(_.asInt())
-
-  // wrong-typed KNOWN properties warn and are ignored (`metadata.rb:1211-1223`
-  // set_property: "#{type} has invalid property '#{key}' (...): expected ...");
-  // the parser side already ignores them, this surfaces the warning
-  private val Bool = (n: JsonNode) => n.isBoolean
-  private val NonNegInt = (n: JsonNode) => n.isIntegralNumber && n.asLong() >= 0
-  private val Str = (n: JsonNode) => n.isTextual
-  private val StrOrArray = (n: JsonNode) => n.isTextual || n.isArray
-  private val NaturalLang = (n: JsonNode) => n.isTextual || n.isArray || n.isObject
-  private val typeSpecs: Map[String, Map[String, (JsonNode => Boolean, String)]] = Map(
-    "TableGroup" -> Map(
-      "tableDirection" -> ((n: JsonNode) => n.isTextual && Set("ltr", "rtl", "auto")(n.asText()), "ltr, rtl or auto")),
-    "Table" -> Map(
-      "url" -> (Str, "a string"),
-      "suppressOutput" -> (Bool, "a boolean"),
-      "tableDirection" -> ((n: JsonNode) => n.isTextual && Set("ltr", "rtl", "auto")(n.asText()), "ltr, rtl or auto")),
-    "Schema" -> Map(
-      "primaryKey" -> (StrOrArray, "a column reference"),
-      "rowTitles" -> (StrOrArray, "a column reference")),
-    "Column" -> Map(
-      // proper name format (`metadata.rb:1617` + NAME_SYNTAX `:108`): a
-      // syntax-invalid explicit name warns and is ignored — resolution
-      // falls back to the encoded title (CsvwModel.columnName)
-      "name" -> (((n: JsonNode) => n.isTextual &&
-        Resolve.NameSyntax.matches(n.asText())), "proper name format"),
-      "titles" -> (NaturalLang, "a string, array or language map"),
-      "virtual" -> (Bool, "a boolean"),
-      "suppressOutput" -> (Bool, "a boolean"),
-      "required" -> (Bool, "a boolean"),
-      "ordered" -> (Bool, "a boolean"),
-      "separator" -> (Str, "a string"),
-      "default" -> (Str, "a string"),
-      "lang" -> (Str, "a language tag"),
-      "null" -> (StrOrArray, "a string or array"),
-      "aboutUrl" -> (Str, "a URI template"),
-      "propertyUrl" -> (Str, "a URI template"),
-      "valueUrl" -> (Str, "a URI template")),
-    "Dialect" -> Map(
-      "delimiter" -> (Str, "a string"),
-      "quoteChar" -> ((n: JsonNode) => n.isTextual || n.isNull, "a string or null"),
-      "commentPrefix" -> (Str, "a string"),
-      "encoding" -> (Str, "a string"),
-      "doubleQuote" -> (Bool, "a boolean"),
-      "header" -> (Bool, "a boolean"),
-      "skipBlankRows" -> (Bool, "a boolean"),
-      "skipInitialSpace" -> (Bool, "a boolean"),
-      "skipRows" -> (NonNegInt, "a non-negative integer"),
-      "skipColumns" -> (NonNegInt, "a non-negative integer"),
-      "headerRowCount" -> (NonNegInt, "a non-negative integer"),
-      "lineTerminators" -> (StrOrArray, "a string or array"),
-      "trim" -> ((n: JsonNode) => n.isBoolean ||
-        (n.isTextual && Set("true", "false", "start", "end")(n.asText())), "true, false, start or end")))
-
-  private def typeWarnings(kind: String, n: JsonNode): Report = {
-    val spec = typeSpecs.getOrElse(kind, Map.empty)
-    val bad = keysOf(n).flatMap { k =>
-      spec.get(k).collect {
-        case (ok, expected) if !ok(n.get(k)) =>
-          s"$kind has invalid property '$k' (${n.get(k)}): expected $expected"
-      }
-    }
-    Report(bad, Nil)
-  }
-
-  /** Unknown-property check (`metadata.rb:585-588`): keys outside the
-    * object's vocabulary that are not common properties (`prefix:name`) or
-    * JSON-LD keywords warn.
-    */
-  private def unexpectedKeys(kind: String, n: JsonNode, expected: Set[String]): Report = {
-    val extra = keysOf(n)
-      .filterNot(k => k == "@id" || k == "@context" || k == "notes")
-      .filterNot(k => kind != "Dialect" && k.contains(":"))
-      .filterNot(expected)
-    if (extra.isEmpty) Report.empty
-    else Report(List(s"$kind has unexpected keys: $extra"), Nil)
   }
 }

@@ -3,8 +3,9 @@ package graft.model
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Metadata validation + compatibility cases lifted from the reference
-  * (`/root/reference/spec/metadata_spec.rb:1651-1843` for
-  * `verify_compatible!`; `metadata.rb:570-830` rules for `validate`).
+  * (`spec/metadata_spec.rb:1651-1843` for `verify_compatible!`;
+  * `metadata.rb:570-830` rules for `validate!`, which run in
+  * [[CsvwJson.parseTableGroup]]).
   */
 class CsvwValidateSpec extends AnyFunSuite {
 
@@ -17,6 +18,9 @@ class CsvwValidateSpec extends AnyFunSuite {
     val bCols = b.tableSchema.map(_.columns).getOrElse(Nil)
     CsvwValidate.verifyCompatible(a, b.url, bCols, strict)
   }
+
+  /** A document's checks run while it is parsed; its report rides on the group. */
+  private def validate(json: String): CsvwValidate.Report = CsvwJson.parseTableGroup(json).report
 
   // ---- verify_compatible! cases (metadata_spec.rb:1652-1831)
 
@@ -96,7 +100,7 @@ class CsvwValidateSpec extends AnyFunSuite {
   // ---- validate: document-level checks (metadata.rb:570-830)
 
   test("unexpected keys warn; common properties don't") {
-    val r = CsvwValidate.validate(
+    val r = validate(
       """{"url": "http://e/t", "bogus": 1, "dc:title": "x",
           "tableSchema": {"columns": [{"name": "a", "wat": true}]}}""")
     assert(r.ok)
@@ -106,26 +110,26 @@ class CsvwValidateSpec extends AnyFunSuite {
   }
 
   test("empty table group errors; missing url errors") {
-    assert(!CsvwValidate.validate("""{"@type": "TableGroup", "tables": []}""").ok)
-    assert(!CsvwValidate.validate("""{"@type": "Table", "tableSchema": {"columns": []}}""").ok)
+    assert(!validate("""{"@type": "TableGroup", "tables": []}""").ok)
+    assert(!validate("""{"@type": "Table", "tableSchema": {"columns": []}}""").ok)
   }
 
   test("duplicate column names error") {
-    val r = CsvwValidate.validate(
+    val r = validate(
       """{"url": "http://e/t", "tableSchema": {"columns": [{"name": "a"}, {"name": "a"}]}}""")
     assert(r.errors.exists(_.contains("unique names")))
   }
 
   test("virtual column before a non-virtual one errors") {
-    val r = CsvwValidate.validate(
+    val r = validate(
       """{"url": "http://e/t", "tableSchema": {"columns": [{"virtual": true}, {"name": "a"}]}}""")
     assert(r.errors.exists(_.contains("virtual")))
   }
 
   test("invalid datatype base errors; invalid formats warn and are ignored") {
-    assert(!CsvwValidate.validate(
+    assert(!validate(
       """{"url": "http://e/t", "tableSchema": {"columns": [{"name": "a", "datatype": "nope"}]}}""").ok)
-    val r = CsvwValidate.validate(
+    val r = validate(
       """{"url": "http://e/t", "tableSchema": {"columns": [
         {"name": "a", "datatype": {"base": "boolean", "format": "Y"}},
         {"name": "b", "datatype": {"base": "integer", "format": "abc"}},
@@ -135,63 +139,63 @@ class CsvwValidateSpec extends AnyFunSuite {
   }
 
   test("length facet rules (metadata.rb:727-746)") {
-    assert(CsvwValidate.validate(
+    assert(validate(
       """{"url": "http://e/t", "tableSchema": {"columns": [
         {"name": "a", "datatype": {"base": "string", "length": 5, "minLength": 2}}]}}""").ok)
-    assert(!CsvwValidate.validate(
+    assert(!validate(
       """{"url": "http://e/t", "tableSchema": {"columns": [
         {"name": "a", "datatype": {"base": "string", "length": 1, "minLength": 2}}]}}""").ok)
-    assert(!CsvwValidate.validate(
+    assert(!validate(
       """{"url": "http://e/t", "tableSchema": {"columns": [
         {"name": "a", "datatype": {"base": "string", "minLength": 5, "maxLength": 2}}]}}""").ok)
     // length only on string/binary
-    assert(!CsvwValidate.validate(
+    assert(!validate(
       """{"url": "http://e/t", "tableSchema": {"columns": [
         {"name": "a", "datatype": {"base": "integer", "length": 5}}]}}""").ok)
   }
 
   test("range facet rules (metadata.rb:747-782)") {
     // range facets only on numeric/date/duration
-    assert(!CsvwValidate.validate(
+    assert(!validate(
       """{"url": "http://e/t", "tableSchema": {"columns": [
         {"name": "a", "datatype": {"base": "string", "minimum": 1}}]}}""").ok)
     // both inclusive and exclusive bounds
-    assert(!CsvwValidate.validate(
+    assert(!validate(
       """{"url": "http://e/t", "tableSchema": {"columns": [
         {"name": "a", "datatype": {"base": "integer", "minimum": 1, "minExclusive": 0}}]}}""").ok)
     // inverted bounds
-    assert(!CsvwValidate.validate(
+    assert(!validate(
       """{"url": "http://e/t", "tableSchema": {"columns": [
         {"name": "a", "datatype": {"base": "integer", "minimum": 5, "maximum": 1}}]}}""").ok)
-    assert(CsvwValidate.validate(
+    assert(validate(
       """{"url": "http://e/t", "tableSchema": {"columns": [
         {"name": "a", "datatype": {"base": "integer", "minimum": 1, "maximum": 5}}]}}""").ok)
   }
 
   test("foreign key shape rules (metadata.rb:621-668)") {
     // well-formed
-    assert(CsvwValidate.validate(
+    assert(validate(
       """{"tables": [
         {"url": "http://e/a", "tableSchema": {"columns": [{"name": "x"}],
          "foreignKeys": [{"columnReference": "x",
                           "reference": {"resource": "http://e/b", "columnReference": "y"}}]}},
         {"url": "http://e/b", "tableSchema": {"columns": [{"name": "y"}]}}]}""").ok)
     // unknown source column
-    assert(!CsvwValidate.validate(
+    assert(!validate(
       """{"tables": [
         {"url": "http://e/a", "tableSchema": {"columns": [{"name": "x"}],
          "foreignKeys": [{"columnReference": "zz",
                           "reference": {"resource": "http://e/b", "columnReference": "y"}}]}},
         {"url": "http://e/b", "tableSchema": {"columns": [{"name": "y"}]}}]}""").ok)
     // missing referenced table
-    assert(!CsvwValidate.validate(
+    assert(!validate(
       """{"tables": [
         {"url": "http://e/a", "tableSchema": {"columns": [{"name": "x"}],
          "foreignKeys": [{"columnReference": "x",
                           "reference": {"resource": "http://e/zzz", "columnReference": "y"}}]}},
         {"url": "http://e/b", "tableSchema": {"columns": [{"name": "y"}]}}]}""").ok)
     // extra fk entries
-    assert(!CsvwValidate.validate(
+    assert(!validate(
       """{"tables": [
         {"url": "http://e/a", "tableSchema": {"columns": [{"name": "x"}],
          "foreignKeys": [{"columnReference": "x", "bogus": 1,
@@ -199,16 +203,16 @@ class CsvwValidateSpec extends AnyFunSuite {
   }
 
   test("primaryKey reference not found warns (and processing continues)") {
-    val r = CsvwValidate.validate(
+    val r = validate(
       """{"url": "http://e/t", "tableSchema": {"columns": [{"name": "a"}], "primaryKey": "zz"}}""")
     assert(r.ok && r.warnings.exists(_.contains("primaryKey")))
   }
 
   test("@id must not be a blank node; datatype @id must not name a builtin") {
-    assert(!CsvwValidate.validate(
+    assert(!validate(
       """{"url": "http://e/t", "tableSchema": {"columns": [
         {"name": "a", "datatype": {"base": "integer", "@id": "_:b0"}}]}}""").ok)
-    assert(!CsvwValidate.validate(
+    assert(!validate(
       """{"url": "http://e/t", "tableSchema": {"columns": [
         {"name": "a", "datatype": {"base": "integer",
          "@id": "http://www.w3.org/2001/XMLSchema#integer"}}]}}""").ok)
@@ -225,7 +229,6 @@ class CsvwValidateSpec extends AnyFunSuite {
       df, Map("a" -> col("a")), col("a"), col("rn"), col("rn")))
     val res = graft.mapper.CsvwPipeline.run(spark, group, bound,
       graft.mapper.CsvwPipeline.Options(
-        metadataJson = Some(metaJson),
         embeddedColumns = Map("http://e/t" ->
           List(ColumnMeta(titles = List("und" -> "mismatch"))))))
     assert(res.metadata.warnings.exists(_.contains("bogus")))
@@ -245,7 +248,7 @@ class CsvwValidateSpec extends AnyFunSuite {
 
   test("wrong-typed known properties warn and are ignored (metadata.rb:1211-1223)") {
     // cases mirror metadata_spec.rb's per-property warning rows
-    val r = CsvwValidate.validate("""{"url": "http://e/t",
+    val r = validate("""{"url": "http://e/t",
       "suppressOutput": "foo",
       "dialect": {"skipRows": -1, "delimiter": 1, "trim": "sideways"},
       "tableSchema": {"columns": [
@@ -257,7 +260,7 @@ class CsvwValidateSpec extends AnyFunSuite {
         s"missing warning for $k in ${r.warnings}")
     }
     // correctly-typed values stay silent
-    val ok = CsvwValidate.validate("""{"url": "http://e/t", "suppressOutput": true,
+    val ok = validate("""{"url": "http://e/t", "suppressOutput": true,
       "dialect": {"skipRows": 1, "delimiter": ";", "trim": "start"},
       "tableSchema": {"columns": [{"name": "a", "titles": {"en": ["A"]}}]}}""")
     assert(ok.ok && ok.warnings.isEmpty, ok)
@@ -293,17 +296,17 @@ class CsvwValidateSpec extends AnyFunSuite {
   }
 
   test("transformation validation: valid passes; missing required keys error") {
-    val ok = CsvwValidate.validate("""{"url": "http://e/t",
+    val ok = validate("""{"url": "http://e/t",
       "transformations": [{"url": "http://example",
         "targetFormat": "http://example", "scriptFormat": "http://example/"}]}""")
     assert(ok.ok, ok)
-    val missing = CsvwValidate.validate("""{"url": "http://e/t",
+    val missing = validate("""{"url": "http://e/t",
       "transformations": [{"url": "http://example"}]}""")
     assert(missing.errors.exists(_.contains("missing required keys: targetFormat, scriptFormat")), missing)
   }
 
   test("transformation validation: bad source / relative formats / extra keys") {
-    val bad = CsvwValidate.validate("""{"url": "http://e/t",
+    val bad = validate("""{"url": "http://e/t",
       "transformations": [{"url": "http://example",
         "targetFormat": "not a url at all %%",
         "scriptFormat": "http://example/",
